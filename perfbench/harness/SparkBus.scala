@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private: the
+  * traced run waits for every queued listener event of an operation to be
+  * delivered before it closes the operation's counters.
+  */
+object SparkBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}

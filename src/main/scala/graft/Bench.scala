@@ -14,25 +14,21 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE coalescing knobs, exposed for measurement legs and DEFAULTED
-    // to Spark's own values. parallelismFirst=false (size-honoring
-    // coalescing) was measured in round 16 and REJECTED: post-shuffle
-    // BYTES do not measure compute, so the 64m advisory collapsed the
-    // CPU-bound string gates to single-task stages (q204 2.9 s -> 7.2 s,
-    // q206 2.9 s -> 7.2 s at sf0.1/32c — every shuffle stage ran 1 task)
-    // while the sub-second tail gates moved only within noise. The env
-    // overrides remain so future legs can re-test on different data
-    // shapes without a rebuild.
-    val parFirst = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m")
+    // AQE coalescing pinned to Spark's own defaults. parallelismFirst=
+    // false (size-honoring coalescing) was measured in round 16 and
+    // REJECTED: post-shuffle BYTES do not measure compute, so the 64m
+    // advisory collapsed the CPU-bound string gates to single-task
+    // stages (q204 2.9 s -> 7.2 s, q206 2.9 s -> 7.2 s at sf0.1/32c —
+    // every shuffle stage ran 1 task) while the sub-second tail gates
+    // moved only within noise.
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
+        "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -65,7 +61,10 @@ object Bench {
     // warm-up: exercise codegen + readers once per query, untimed
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] warm-up $name FAILED: $e")
+      }
       System.err.println(s"[bench] w ${System.currentTimeMillis()} $name")
       cleanup()
     }

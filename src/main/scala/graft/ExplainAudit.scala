@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    // same env handling and AQE stance as Bench so the dumped plans are
+    // same CPU env and AQE stance as Bench so the dumped plans are
     // the shapes the bench actually times (at sf0.001 AQE broadcasts
     // everything and the structural differences disappear)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -22,9 +22,8 @@ object ExplainAudit {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
+        "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

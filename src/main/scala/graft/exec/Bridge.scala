@@ -1,5 +1,6 @@
 package graft.exec
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.meta.{DataDictionary, SchemaIntrospect, SkeletonGen}
 import graft.nl.{ContextSelect, LlmClient, Prompt}
@@ -42,7 +43,7 @@ object Bridge {
 
     val raw =
       try llm.complete(sys, usr)
-      catch { case _: Throwable => return Left(Runner.ExitCodes.LlmError) }
+      catch { case NonFatal(_) => return Left(Runner.ExitCodes.LlmError) }
 
     val cleaned =
       SqlRepair.repair(raw, dict, SchemaIntrospect.listColumns(df))
@@ -50,7 +51,7 @@ object Bridge {
       val result = Runner.execute(spark, cleaned, maxRows)
       Right(Answer(Trace(sys, usr, raw, cleaned), result))
     } catch {
-      case _: Throwable => Left(Runner.ExitCodes.SqlError)
+      case NonFatal(_) => Left(Runner.ExitCodes.SqlError)
     }
   }
 

@@ -91,51 +91,27 @@ object Multimodal {
     (w2.toLong, h2.toLong, sr, sg, sb)
   }
 
-  // dir -> (artifact root, content marker, docs file signature): the
-  // persisted MEDIA column for q61. A production corpus stores PNG
-  // bytes in a parquet binary column at INGEST; synthesizing them per
-  // query made q61 time the fixture encoder (~85% of its bench cost,
-  // slope 0.87 at sf1 — round-13 verdict task 4). The encode runs once
-  // per corpus behind a written-last marker; the gate reads the stored
-  // bytes and times the DECODE path — the honest E9 shape. Per-call
-  // sig + marker re-validation as everywhere.
-  private val builtMedia = scala.collection.mutable
-    .Map.empty[String, (String, String, String)]
-  private[ops] var mediaBuilds = 0 // spec hook: counts actual builds
-
-  private[ops] def dropMediaMemo(): Unit =
-    builtMedia.synchronized { builtMedia.clear() }
+  // dir -> the persisted MEDIA column for q61. A production corpus
+  // stores PNG bytes in a parquet binary column at INGEST; synthesizing
+  // them per query made q61 time the fixture encoder (~85% of its bench
+  // cost, slope 0.87 at sf1 — round-13 verdict task 4). The encode runs
+  // once per corpus; the gate reads the stored bytes and times the
+  // DECODE path — the honest E9 shape.
+  private[ops] val mediaMemo = new ArtifactStore.Memo[String, Unit]
 
   private[ops] def mediaArtifact(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    builtMedia.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_media_${VecIndex.dirDigest(dir)}")
-      val hit = builtMedia.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        import s.implicits._
-        val docs = Tables.table(s, dir, "documents")
-        val expect = Round12Ops.docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              docs.select(col("doc_id")).as[Long]
-                .mapPartitions(batch => batch.map(id =>
-                  (id, encodePng(id))))
-                .toDF("doc_id", "payload")
-                .write.mode("overwrite").parquet(s"$p/media")
-              ArtifactStore.writeMarker(p, expect)
-              mediaBuilds += 1
-            }
-          }
-        builtMedia(dir) = (p, expect, sig)
-      }
-      builtMedia(dir)._1
-    }
+      s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    mediaMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_media_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(docs), ())) { (p, _) =>
+      import s.implicits._
+      docs.select(col("doc_id")).as[Long]
+        .mapPartitions(batch => batch.map(id => (id, encodePng(id))))
+        .toDF("doc_id", "payload")
+        .write.mode("overwrite").parquet(s"$p/media")
+    }._1
+  }
 
   val queries: Seq[Q] = Seq(
     // E9: binary payload + typed metadata, all relational: byte length,

@@ -78,33 +78,24 @@ object QualityOps {
         |FROM documents
         |WHERE doc_id < 50
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // deterministic scratch, built ONCE per corpus content behind a
-      // written-last marker under the cross-process build lock (round-14
-      // advice: the previous wipe-and-rebuild-per-run had no lock, so
-      // two JVMs sharing the scratch tree could interleave the delete
-      // with each other's reads). Re-runs now converge without ever
-      // deleting what a concurrent reader may hold open.
+      // deterministic scratch, built ONCE per corpus content (round-14
+      // advice: the previous wipe-and-rebuild-per-run could interleave
+      // its delete with another JVM's reads). Re-runs now converge
+      // without ever deleting what a concurrent reader may hold open.
       val scratch = ArtifactStore.root(
         s"graft_evolve_${VecIndex.dirDigest(dir)}")
-      val expect =
-        s"evolve:v1:${ArtifactStore.tableFileSig(dir, "documents")}"
-      if (!ArtifactStore.markerOk(scratch, expect))
-        ArtifactStore.withBuildLock(scratch) {
-          // re-check under the lock: the other process may have just
-          // finished the identical build
-          if (!ArtifactStore.markerOk(scratch, expect)) {
-            val docs = Tables.table(s, dir, "documents")
-              .filter(col("doc_id") < 50)
-            docs.filter(col("doc_id") % 2 === 0) // v1: no quality column
-              .select(col("doc_id"), col("lang"))
-              .write.mode("overwrite").parquet(s"$scratch/v=1")
-            docs.filter(col("doc_id") % 2 === 1) // v2: adds quality
-              .select(col("doc_id"), col("lang"),
-                (col("n_chars").cast("double") / 1000).as("quality"))
-              .write.mode("overwrite").parquet(s"$scratch/v=2")
-            ArtifactStore.writeMarker(scratch, expect)
-          }
-        }
+      ArtifactStore.buildOnce(scratch,
+          s"evolve:v1:${ArtifactStore.tableFileSig(dir, "documents")}") {
+        val docs = Tables.table(s, dir, "documents")
+          .filter(col("doc_id") < 50)
+        docs.filter(col("doc_id") % 2 === 0) // v1: no quality column
+          .select(col("doc_id"), col("lang"))
+          .write.mode("overwrite").parquet(s"$scratch/v=1")
+        docs.filter(col("doc_id") % 2 === 1) // v2: adds quality
+          .select(col("doc_id"), col("lang"),
+            (col("n_chars").cast("double") / 1000).as("quality"))
+          .write.mode("overwrite").parquet(s"$scratch/v=2")
+      }
       s.read.option("mergeSchema", "true")
         .parquet(s"$scratch/v=1", s"$scratch/v=2")
         .select(col("doc_id"), col("lang"), col("quality"))

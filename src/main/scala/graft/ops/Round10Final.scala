@@ -103,53 +103,30 @@ object Round10Final {
 
   private val DRIFT_THRESH = 100000L // q260: retrain at TVD >= 0.1
 
-  // dir -> (artifact root, marker, docs file signature): q262's
-  // persisted per-image hash table. The decode pass (ImageIO encode →
-  // decode → raster → aHash per image) is the gate's PROOF that the
-  // real codec path round-trips losslessly; it is deterministic in
-  // doc_id, so it runs once per corpus and steady-state executions
-  // (Bench's timed passes, sweep re-runs) read the 3-column table and
-  // time the DEDUP — the round-12 verdict's q262 trim. Marker written
-  // LAST; per-call file-signature re-validation as everywhere.
-  private val builtPhash =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var phashBuilds = 0 // spec hook: counts actual builds
+  // dir -> q262's persisted per-image hash table. The decode pass
+  // (ImageIO encode → decode → raster → aHash per image) is the gate's
+  // PROOF that the real codec path round-trips losslessly; it is
+  // deterministic in doc_id, so it runs once per corpus and steady-state
+  // executions (Bench's timed passes, sweep re-runs) read the 3-column
+  // table and time the DEDUP — the round-12 verdict's q262 trim.
+  private[ops] val phashMemo = new ArtifactStore.Memo[String, Unit]
 
-  private[ops] def dropPhashMemo(): Unit =
-    builtPhash.synchronized { builtPhash.clear() }
-
-  private[ops] def phashArtifact(s: SparkSession, dir: String): String =
-    builtPhash.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_phash_${VecIndex.dirDigest(dir)}")
-      val hit = builtPhash.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        import s.implicits._
-        val docs = Tables.table(s, dir, "documents")
-        val expect = Round12Ops.docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              docs.select(col("doc_id")).as[Long]
-                .mapPartitions { batch =>
-                  batch.map { id =>
-                    val (hi, lo) = aHash(encodeJitterPng(id))
-                    (id, hi, lo)
-                  }
-                }.toDF("doc_id", "ahash_hi", "ahash_lo")
-                .write.mode("overwrite").parquet(s"$p/hashes")
-              ArtifactStore.writeMarker(p, expect)
-              phashBuilds += 1
-            }
+  private[ops] def phashArtifact(s: SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    phashMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_phash_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(docs), ())) { (p, _) =>
+      import s.implicits._
+      docs.select(col("doc_id")).as[Long]
+        .mapPartitions { batch =>
+          batch.map { id =>
+            val (hi, lo) = aHash(encodeJitterPng(id))
+            (id, hi, lo)
           }
-        builtPhash(dir) = (p, expect, sig)
-      }
-      p
-    }
+        }.toDF("doc_id", "ahash_hi", "ahash_lo")
+        .write.mode("overwrite").parquet(s"$p/hashes")
+    }._1
+  }
 
   val queries: Seq[Q] = Seq(
     Q(

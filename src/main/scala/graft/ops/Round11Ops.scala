@@ -227,81 +227,59 @@ object Round11Ops {
     "list_transform(range(8), i -> " +
       s"list_min(list_transform($sg, h -> ((2*i + 1) * h + 7919 * i) % $M)))"
 
-  // dir -> (artifact root, marker, docs file signature): q265's
-  // persisted signature frames — sg/ (per-doc distinct 3-shingle
-  // arrays) and mh/ (8-slot MinHash signatures). The curve's 15 band
-  // projections and the ppjoin truth all read these files, so
+  // dir -> q265's persisted signature frames — sg/ (per-doc distinct
+  // 3-shingle arrays) and mh/ (8-slot MinHash signatures). The curve's
+  // 15 band projections and the ppjoin truth all read these files, so
   // steady-state runs (and mid-suite runs in a long-lived JVM) pay
   // parquet reads instead of re-running the per-char fold over the
   // corpus and holding localCheckpoint blocks in a pressured block
   // manager — the round-12 verdict's q265 in-suite-tail fix.
-  private val builtLsh =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var lshBuilds = 0 // spec hook: counts actual builds
+  private[ops] val lshMemo = new ArtifactStore.Memo[String, Unit]
 
-  private[ops] def dropLshMemo(): Unit =
-    builtLsh.synchronized { builtLsh.clear() }
-
-  private[ops] def lshFrames(s: SparkSession, dir: String): String =
-    builtLsh.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_lshcurve_${VecIndex.dirDigest(dir)}")
-      val hit = builtLsh.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val docs = Tables.table(s, dir, "documents")
-        // layout tag: v2 added bands/ + truth/ — an old artifact with
-        // a fresh docs marker must still rebuild to gain the new files
-        val expect = Round12Ops.docsMarker(docs) + "|lshv2"
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val sg = docs
-                .withColumn("th", TextHash.tokenHashesPos(col("text")))
-                .filter(size(col("th")) >= 3)
-                .select(col("doc_id"),
-                  array_distinct(TextHash.posGrams(col("th"), 3)).as("sg"))
-                .localCheckpoint(true)
-              sg.write.mode("overwrite").parquet(s"$p/sg")
-              val mh = sg
-                .select(col("doc_id"), expr(sparkMh("sg")).as("mh"))
-                .localCheckpoint(true)
-              mh.write.mode("overwrite").parquet(s"$p/mh")
-              // the 15 per-(config, band) key projections run ONCE,
-              // here — serving reads one bands file instead of
-              // re-scanning mh 15 times (the round-13 q265 sf1
-              // regression: 15 parquet scans replaced the evicted
-              // localCheckpoint blocks)
-              val bandFrames = for {
-                (cfg, nb, r) <- LSH_CONFIGS
-                j <- 0 until nb
-              } yield mh.select(lit(cfg).as("config"),
-                lit(j).as("band"),
-                array_join(slice(col("mh"), j * r + 1, r), "-")
-                  .as("key"),
-                col("doc_id"))
-              bandFrames.reduce(_.unionByName(_))
-                .write.mode("overwrite").parquet(s"$p/bands")
-              // the exact-truth REFEREE is deterministic in the
-              // corpus, so it is an artifact like any other (the
-              // round-7 persisted-referee discipline): computing the
-              // ppjoin per run made the gate time the proof, not the
-              // tuning curve
-              truthPairs(sg)
-                .write.mode("overwrite").parquet(s"$p/truth")
-              mh.unpersist()
-              sg.unpersist()
-              ArtifactStore.writeMarker(p, expect)
-              lshBuilds += 1
-            }
-          }
-        builtLsh(dir) = (p, expect, sig)
-      }
-      p
-    }
+  private[ops] def lshFrames(s: SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    // layout tag: v2 added bands/ + truth/ — an old artifact with a
+    // fresh docs marker must still rebuild to gain the new files
+    lshMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_lshcurve_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(docs) + "|lshv2", ())) { (p, _) =>
+      val sg = docs
+        .withColumn("th", TextHash.tokenHashesPos(col("text")))
+        .filter(size(col("th")) >= 3)
+        .select(col("doc_id"),
+          array_distinct(TextHash.posGrams(col("th"), 3)).as("sg"))
+        .localCheckpoint(true)
+      sg.write.mode("overwrite").parquet(s"$p/sg")
+      val mh = sg
+        .select(col("doc_id"), expr(sparkMh("sg")).as("mh"))
+        .localCheckpoint(true)
+      mh.write.mode("overwrite").parquet(s"$p/mh")
+      // the 15 per-(config, band) key projections run ONCE,
+      // here — serving reads one bands file instead of
+      // re-scanning mh 15 times (the round-13 q265 sf1
+      // regression: 15 parquet scans replaced the evicted
+      // localCheckpoint blocks)
+      val bandFrames = for {
+        (cfg, nb, r) <- LSH_CONFIGS
+        j <- 0 until nb
+      } yield mh.select(lit(cfg).as("config"),
+        lit(j).as("band"),
+        array_join(slice(col("mh"), j * r + 1, r), "-")
+          .as("key"),
+        col("doc_id"))
+      bandFrames.reduce(_.unionByName(_))
+        .write.mode("overwrite").parquet(s"$p/bands")
+      // the exact-truth REFEREE is deterministic in the
+      // corpus, so it is an artifact like any other (the
+      // round-7 persisted-referee discipline): computing the
+      // ppjoin per run made the gate time the proof, not the
+      // tuning curve
+      truthPairs(sg)
+        .write.mode("overwrite").parquet(s"$p/truth")
+      mh.unpersist()
+      sg.unpersist()
+    }._1
+  }
 
   /** EXACT J >= 0.8 pairs via the ppjoin prefix filter: J >= 0.8
     * forces a shared shingle inside both docs' rare-first prefixes of

@@ -33,59 +33,33 @@ object Round12Extra {
   private val DELTA_MOD = 7 // q284 delta slice: doc_id % 7 == 3
   private val DELTA_RES = 3
 
-  // dir -> (store root, content marker, docs file signature): q284's
-  // persisted base-slice gram store, built once per corpus behind a
-  // written-last marker and re-validated per call (q289 bandStore's
-  // discipline — round-14 verdict "What's wrong 4": the previous
+  // dir -> q284's persisted base-slice gram store, built once per
+  // corpus (round-14 verdict "What's wrong 4": the previous
   // overwrite-per-call meant the gate timed an O(corpus) base build,
   // not the O(delta + state) merge its header advertises).
-  private val builtGram =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var gramBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (the on-disk store and
-    * marker survive — a "new session").
-    */
-  private[ops] def dropGramMemo(): Unit =
-    builtGram.synchronized { builtGram.clear() }
+  private[ops] val gramMemo = new ArtifactStore.Memo[String, Unit]
 
   /** The persisted base-slice gram store for `dir`: every base gram's
     * (count, first-occurrence key) — cnt = 1 rows included, because a
-    * later delta can promote them to duplicated. Built ONCE per corpus
-    * under the cross-process build lock; q284 serves the incremental
-    * merge from these files only. At 100 TB this store is the
-    * long-lived state a dedup service maintains across ingests.
+    * later delta can promote them to duplicated. Built ONCE per corpus;
+    * q284 serves the incremental merge from these files only. At 100 TB
+    * this store is the long-lived state a dedup service maintains
+    * across ingests.
     */
   private[ops] def gramStore(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    builtGram.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_gramstore_${VecIndex.dirDigest(dir)}")
-      val hit = builtGram.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val d = Round12Ops.spanDocs(s, dir)
-        val expect = s"gramstore:base:${Round12Ops.docsMarker(d)}"
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val key = col("doc_id") * POSMUL + col("pos")
-              Round12Ops.gramOcc(d)
-                .filter(col("doc_id") % DELTA_MOD =!= DELTA_RES)
-                .groupBy(col("g"))
-                .agg(count(lit(1)).as("cnt"), min(key).as("fk"))
-                .write.mode("overwrite").parquet(s"$p/base")
-              ArtifactStore.writeMarker(p, expect)
-              gramBuilds += 1
-            }
-          }
-        builtGram(dir) = (p, expect, sig)
-      }
-      builtGram(dir)._1
-    }
+      s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    lazy val d = Round12Ops.spanDocs(s, dir)
+    gramMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_gramstore_${VecIndex.dirDigest(dir)}"),
+        s"gramstore:base:${Round12Ops.docsMarker(d)}", ())) { (p, _) =>
+      val key = col("doc_id") * POSMUL + col("pos")
+      Round12Ops.gramOcc(d)
+        .filter(col("doc_id") % DELTA_MOD =!= DELTA_RES)
+        .groupBy(col("g"))
+        .agg(count(lit(1)).as("cnt"), min(key).as("fk"))
+        .write.mode("overwrite").parquet(s"$p/base")
+    }._1
+  }
 
   /** Duck CTEs shared by q283: q277's occ/gm front (positional
     * 20-grams, duplicated grams with first-occurrence key).

@@ -185,8 +185,8 @@ object Round12Ops {
 
     // E4/serving: the PERSISTED KMV sketch lifecycle. Session 1 builds
     // the per-source k-min sketches ONCE and writes them as a parquet
-    // artifact with a corpus marker written LAST (q224's crashed-half-
-    // build discipline); the gate then serves every estimate — the
+    // artifact behind a corpus marker (the ArtifactStore build-once
+    // protocol); the gate then serves every estimate — the
     // per-source rows AND the '*' union-merge — from the ARTIFACT
     // alone. The oracle recomputes everything from the raw corpus, so
     // the driver's hash compare IS the proof that merge-of-artifacts ==
@@ -276,17 +276,8 @@ object Round12Ops {
 
   // ---------------- persisted KMV sketch artifact ----------------
 
-  // dir -> (artifact root, content marker, docs file signature);
-  // per-call sig + marker re-validation as everywhere since round 12
-  private val built = scala.collection.mutable
-    .Map.empty[String, (String, String, String)]
-  private[ops] var sketchBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (simulates a new session —
-    * the on-disk artifact and marker survive).
-    */
-  private[ops] def dropSketchMemo(): Unit =
-    built.synchronized { built.clear() }
+  // dir -> the persisted KMV sketch root
+  private[ops] val sketchMemo = new ArtifactStore.Memo[String, Unit]
 
   /** Cheap corpus identity for the documents table: row count + an
     * order-independent fold of md5(doc_id|text) — one scan, any row
@@ -307,35 +298,18 @@ object Round12Ops {
   /** Artifact root for the per-source KMV sketches of `dir`'s corpus.
     * A fresh marker means a previous session built the sketch from the
     * identical corpus + k — this session serves from the files without
-    * rebuilding. The marker is written LAST, so a crashed half-build is
-    * never trusted.
+    * rebuilding.
     */
-  private[ops] def sketchArtifact(s: SparkSession, dir: String): String =
-    built.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val hit = built.get(dir).exists { case (root, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(root, expect)
-      }
-      if (!hit) {
-        val p = ArtifactStore.root(
-          s"graft_kmvsk_${VecIndex.dirDigest(dir)}")
-        val docs = Tables.table(s, dir, "documents")
-        val expect = docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val wsrc =
-                Window.partitionBy(col("source")).orderBy(col("b"))
-              Round11Extra.bigrams(docs)
-                .withColumn("rn", row_number().over(wsrc))
-                .filter(col("rn") <= Round11Extra.KMV_K)
-                .write.mode("overwrite").parquet(s"$p/sketch")
-              ArtifactStore.writeMarker(p, expect)
-              sketchBuilds += 1
-            }
-          }
-        built(dir) = (p, expect, sig)
-      }
-      built(dir)._1
-    }
+  private[ops] def sketchArtifact(s: SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    sketchMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_kmvsk_${VecIndex.dirDigest(dir)}"),
+        docsMarker(docs), ())) { (p, _) =>
+      val wsrc = Window.partitionBy(col("source")).orderBy(col("b"))
+      Round11Extra.bigrams(docs)
+        .withColumn("rn", row_number().over(wsrc))
+        .filter(col("rn") <= Round11Extra.KMV_K)
+        .write.mode("overwrite").parquet(s"$p/sketch")
+    }._1
+  }
 }

@@ -57,20 +57,8 @@ object Round12Serve {
 
   // ---------------- q285: persisted n-gram store ----------------
 
-  // dir -> (artifact root, content marker, docs file signature). The
-  // file signature re-validates on EVERY call (metadata-only, no
-  // scan), so an in-session rewrite of documents under `dir` forces
-  // the full marker re-check instead of serving a stale artifact
-  // (round-12 advice).
-  private val builtNg =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var ngramBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (simulates a new session —
-    * the on-disk artifact and marker survive).
-    */
-  private[ops] def dropNgramMemo(): Unit =
-    builtNg.synchronized { builtNg.clear() }
+  // dir -> q285's persisted n-gram store root
+  private[ops] val ngramMemo = new ArtifactStore.Memo[String, Unit]
 
   /** (doc_id, g, nxt): every CTX_W-token context occurrence that HAS a
     * continuation, with the next token's hash. One transform + explode
@@ -88,45 +76,27 @@ object Round12Serve {
       .select(col("doc_id"), col("o.g").as("g"), col("o.nxt").as("nxt"))
 
   /** Artifact root for `dir`'s n-gram store: gd/ (gram -> count, doc
-    * frequency) and cont/ (gram, next-token -> count). Marker written
-    * LAST (q224's crashed-half-build discipline); a fresh marker means
-    * serve-without-rebuild. At 100 TB both tables are O(distinct
+    * frequency) and cont/ (gram, next-token -> count). A fresh marker
+    * means serve-without-rebuild. At 100 TB both tables are O(distinct
     * (gram, next)) rows — the suffix-table shape infini-gram serves
     * from — and every serve below is artifact reads only.
     */
-  private[ops] def ngramArtifact(s: SparkSession, dir: String): String =
-    builtNg.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_ngramlm_${VecIndex.dirDigest(dir)}")
-      val hit = builtNg.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val docs = Tables.table(s, dir, "documents")
-        val expect = Round12Ops.docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val occ = contextOcc(docs).localCheckpoint(true)
-              occ.groupBy(col("g"))
-                .agg(count(lit(1)).cast("bigint").as("cnt"),
-                  countDistinct(col("doc_id")).cast("bigint")
-                    .as("ndocs"))
-                .write.mode("overwrite").parquet(s"$p/gd")
-              occ.groupBy(col("g"), col("nxt"))
-                .agg(count(lit(1)).cast("bigint").as("c"))
-                .write.mode("overwrite").parquet(s"$p/cont")
-              occ.unpersist()
-              ArtifactStore.writeMarker(p, expect)
-              ngramBuilds += 1
-            }
-          }
-        builtNg(dir) = (p, expect, sig)
-      }
-      p
-    }
+  private[ops] def ngramArtifact(s: SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    ngramMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_ngramlm_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(docs), ())) { (p, _) =>
+      val occ = contextOcc(docs).localCheckpoint(true)
+      occ.groupBy(col("g"))
+        .agg(count(lit(1)).cast("bigint").as("cnt"),
+          countDistinct(col("doc_id")).cast("bigint").as("ndocs"))
+        .write.mode("overwrite").parquet(s"$p/gd")
+      occ.groupBy(col("g"), col("nxt"))
+        .agg(count(lit(1)).cast("bigint").as("c"))
+        .write.mode("overwrite").parquet(s"$p/cont")
+      occ.unpersist()
+    }._1
+  }
 
   val queries: Seq[Q] = Seq(
     // E8/serving: n-gram continuation statistics served from the

@@ -188,59 +188,30 @@ object Round12State {
 
   // ---------------- q289: the band-signature frames ----------------
 
-  // dir -> (store root, content marker, docs file signature): q289's
-  // persisted band store, built once per corpus (marker written LAST)
-  // and re-validated per call like ngramArtifact.
-  private val builtBand =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var bandBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (the on-disk store and
-    * marker survive — a "new session").
-    */
-  private[ops] def dropBandMemo(): Unit =
-    builtBand.synchronized { builtBand.clear() }
+  // dir -> q289's persisted band store root
+  private[ops] val bandMemo = new ArtifactStore.Memo[String, Unit]
 
   /** The persisted MinHash band STORE for `dir`: sg/ (per-doc distinct
     * shingle arrays, the verification side), base/ and delta/ (the
     * b2r4 band-signature rows of the base slice and the delta wave).
-    * Built ONCE per corpus behind a docsMarker written last; every
-    * q289 serve reads these files only. At 100 TB the store is the
-    * artifact a dedup service keeps warm; a delta ingest appends its
-    * band rows and the audit below reads the merged store.
+    * Built ONCE per corpus behind a docsMarker; every q289 serve reads
+    * these files only. At 100 TB the store is the artifact a dedup
+    * service keeps warm; a delta ingest appends its band rows and the
+    * audit below reads the merged store.
     */
   private[ops] def bandStore(s: SparkSession, dir: String): String =
-    builtBand.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_bandstore_${VecIndex.dirDigest(dir)}")
-      val hit = builtBand.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val expect =
-          Round12Ops.docsMarker(Tables.table(s, dir, "documents"))
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val sg = shingleFrame(s, dir).localCheckpoint(true)
-              sg.write.mode("overwrite").parquet(s"$p/sg")
-              val rows = bandRows(sg)
-              val isDelta = col("doc_id") % DELTA_MOD === DELTA_RES
-              rows.filter(!isDelta)
-                .write.mode("overwrite").parquet(s"$p/base")
-              rows.filter(isDelta)
-                .write.mode("overwrite").parquet(s"$p/delta")
-              sg.unpersist()
-              ArtifactStore.writeMarker(p, expect)
-              bandBuilds += 1
-            }
-          }
-        builtBand(dir) = (p, expect, sig)
-      }
-      p
-    }
+    bandMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_bandstore_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(Tables.table(s, dir, "documents")), ())) {
+      (p, _) =>
+        val sg = shingleFrame(s, dir).localCheckpoint(true)
+        sg.write.mode("overwrite").parquet(s"$p/sg")
+        val rows = bandRows(sg)
+        val isDelta = col("doc_id") % DELTA_MOD === DELTA_RES
+        rows.filter(!isDelta).write.mode("overwrite").parquet(s"$p/base")
+        rows.filter(isDelta).write.mode("overwrite").parquet(s"$p/delta")
+        sg.unpersist()
+    }._1
 
   /** (doc_id, sg): distinct 3-token shingle hashes (q265's signature
     * front — unigram minhashes degenerate on this template corpus).

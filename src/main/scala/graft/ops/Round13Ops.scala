@@ -64,14 +64,8 @@ object Round13Ops {
 
   // ---------------- q291: the multi-width n-gram store ----------------
 
-  // dir -> (artifact root, marker, docs file signature); per-call
-  // re-validation as everywhere since round 12.
-  private val builtBo =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var boBuilds = 0 // spec hook: counts actual builds
-
-  private[ops] def dropBoMemo(): Unit =
-    builtBo.synchronized { builtBo.clear() }
+  // dir -> q291's multi-width n-gram store root
+  private[ops] val boMemo = new ArtifactStore.Memo[String, Unit]
 
   /** Artifact root for `dir`'s multi-width n-gram store: gd/ (w, gram
     * -> count, doc frequency), cont/ (w, gram, next -> count) and qb/
@@ -81,33 +75,15 @@ object Round13Ops {
     * (w, gram[, next])) rows — the multi-order suffix-table shape
     * infini-gram serves from — and every serve is artifact reads only.
     */
-  private[ops] def backoffArtifact(s: SparkSession, dir: String): String =
-    builtBo.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_backoffng_${VecIndex.dirDigest(dir)}")
-      val hit = builtBo.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val docs = Tables.table(s, dir, "documents")
-        val expect = Round12Ops.docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect))
-              buildBo(p, docs, expect)
-          }
-        builtBo(dir) = (p, expect, sig)
-      }
-      p
-    }
+  private[ops] def backoffArtifact(s: SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    boMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_backoffng_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(docs), ()))((p, _) => buildBo(p, docs))._1
+  }
 
-  /** The q291 store build (gd/, cont/, qb/) — caller holds the build
-    * lock; the marker is written LAST.
-    */
-  private def buildBo(p: String, docs: DataFrame, expect: String)
-      : Unit = {
+  /** The q291 store build (gd/, cont/, qb/). */
+  private def buildBo(p: String, docs: DataFrame): Unit = {
     val th = docs
       .withColumn("th", TextHash.tokenHashesPos(col("text")))
       .select(col("doc_id"), col("th"))
@@ -151,8 +127,6 @@ object Round13Ops {
         .cast("bigint") - 1)
       .write.mode("overwrite").parquet(s"$p/qb")
     th.unpersist()
-    ArtifactStore.writeMarker(p, expect)
-    boBuilds += 1
   }
 
   // ---------------- q292: the emitted packed-row table ----------------
@@ -207,74 +181,48 @@ object Round13Ops {
     rows.unionByName(pads)
   }
 
-  // dir -> (artifact root, marker, docs file signature): the persisted
-  // emission. The packed-row table IS the trainer's input artifact —
-  // it is WRITTEN (rows/), alongside a per-sequence digest (perseq/:
-  // k_docs, row/pad counts, fold-sum), once per corpus behind a
-  // written-last marker; the gate serves its report from the
-  // O(n_seqs) digest. Steady-state runs therefore time the report,
-  // not the corpus-linear emission — the q262/q207 round-13
-  // discipline — while the spec and the oracle still pin every cell
-  // of the emission through the digested fold.
-  private val builtPack =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var packBuilds = 0 // spec hook: counts actual builds
-
-  private[ops] def dropPackMemo(): Unit =
-    builtPack.synchronized { builtPack.clear() }
+  // dir -> the persisted emission. The packed-row table IS the
+  // trainer's input artifact — it is WRITTEN (rows/), alongside a
+  // per-sequence digest (perseq/: k_docs, row/pad counts, fold-sum),
+  // once per corpus; the gate serves its report from the O(n_seqs)
+  // digest. Steady-state runs therefore time the report, not the
+  // corpus-linear emission — the q262/q207 round-13 discipline — while
+  // the spec and the oracle still pin every cell of the emission
+  // through the digested fold.
+  private[ops] val packMemo = new ArtifactStore.Memo[String, Unit]
 
   private[ops] def packApplyArtifact(s: SparkSession, dir: String): String =
-    builtPack.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_packapply_${VecIndex.dirDigest(dir)}")
-      val hit = builtPack.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val expect =
-          Round12Ops.docsMarker(Tables.table(s, dir, "documents"))
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) buildPack(s, dir, p, expect)
-          }
-        builtPack(dir) = (p, expect, sig)
-      }
-      p
-    }
+    packMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_packapply_${VecIndex.dirDigest(dir)}"),
+        Round12Ops.docsMarker(Tables.table(s, dir, "documents")), ()))(
+      (p, _) => buildPack(s, dir, p))._1
 
-  /** The q292 emission build (rows/, perseq/) — caller holds the build
-    * lock; the marker is written LAST.
-    */
-  private def buildPack(
-      s: SparkSession, dir: String, p: String, expect: String): Unit = {
-          packApplyRows(s, dir)
-            .write.mode("overwrite").parquet(s"$p/rows")
-          // documented bound (q285's argmax-bound discipline): each fp
-          // residue is < M = 1e9+7, and Spark sums in BIGINT before the
-          // modulo, so the partial sum wraps only past ~9.2e18 / 1e9+7
-          // ≈ 9.2e9 rows PER GROUP — here per seq_id, which is capped
-          // at SEQ_LEN rows, ~8 orders of headroom even at 100 TB. The
-          // serve-side fold below sums one residue per SEQUENCE per
-          // k_docs group: ~9.2e9 sequences ≈ 2.4e13 packed tokens, two
-          // orders past a 100 TB corpus. Past that, stage the modulo
-          // via a two-level keyed reduce (sum % M per bucket, then
-          // fold buckets); DuckDB widens to HUGEINT so the oracle
-          // never wraps first.
-          s.read.parquet(s"$p/rows")
-            .withColumn("fp", TextHash.charFold(md5(concat_ws("|",
-              col("seq_id"), col("pos"), col("tok"), col("doc_id"),
-              col("seg"))), 0L, 31L))
-            .groupBy(col("seq_id"))
-            .agg(countDistinct(when(col("is_pad") === 0L,
-                col("doc_id"))).cast("bigint").as("k_docs"),
-              sum(lit(1L) - col("is_pad")).cast("bigint").as("n_rows"),
-              sum(col("is_pad")).cast("bigint").as("n_pad"),
-              (sum(col("fp")) % M).cast("bigint").as("fp"))
-            .write.mode("overwrite").parquet(s"$p/perseq")
-          ArtifactStore.writeMarker(p, expect)
-          packBuilds += 1
+  /** The q292 emission build (rows/, perseq/). */
+  private def buildPack(s: SparkSession, dir: String, p: String): Unit = {
+    packApplyRows(s, dir)
+      .write.mode("overwrite").parquet(s"$p/rows")
+    // documented bound (q285's argmax-bound discipline): each fp
+    // residue is < M = 1e9+7, and Spark sums in BIGINT before the
+    // modulo, so the partial sum wraps only past ~9.2e18 / 1e9+7
+    // ≈ 9.2e9 rows PER GROUP — here per seq_id, which is capped
+    // at SEQ_LEN rows, ~8 orders of headroom even at 100 TB. The
+    // serve-side fold below sums one residue per SEQUENCE per
+    // k_docs group: ~9.2e9 sequences ≈ 2.4e13 packed tokens, two
+    // orders past a 100 TB corpus. Past that, stage the modulo
+    // via a two-level keyed reduce (sum % M per bucket, then
+    // fold buckets); DuckDB widens to HUGEINT so the oracle
+    // never wraps first.
+    s.read.parquet(s"$p/rows")
+      .withColumn("fp", TextHash.charFold(md5(concat_ws("|",
+        col("seq_id"), col("pos"), col("tok"), col("doc_id"),
+        col("seg"))), 0L, 31L))
+      .groupBy(col("seq_id"))
+      .agg(countDistinct(when(col("is_pad") === 0L,
+          col("doc_id"))).cast("bigint").as("k_docs"),
+        sum(lit(1L) - col("is_pad")).cast("bigint").as("n_rows"),
+        sum(col("is_pad")).cast("bigint").as("n_pad"),
+        (sum(col("fp")) % M).cast("bigint").as("fp"))
+      .write.mode("overwrite").parquet(s"$p/perseq")
   }
 
   val queries: Seq[Q] = Seq(

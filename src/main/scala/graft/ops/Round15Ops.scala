@@ -104,49 +104,25 @@ object Round15Ops {
     (n.toLong, fmt.getSampleRate.toLong, sumAbs, maxAbs, sumSq, dec4)
   }
 
-  // dir -> (artifact root, content marker, docs file signature): the
-  // persisted AUDIO column — a production corpus stores waveform bytes
-  // in a parquet binary column at INGEST; the encode runs once per
-  // corpus behind a written-last marker under the cross-process build
-  // lock, and the gate times the DECODE path only (q61 mediaArtifact's
-  // discipline). Per-call sig + marker re-validation as everywhere.
-  private val builtAudio = scala.collection.mutable
-    .Map.empty[String, (String, String, String)]
-  private[ops] var audioBuilds = 0 // spec hook: counts actual builds
-
-  private[ops] def dropAudioMemo(): Unit =
-    builtAudio.synchronized { builtAudio.clear() }
+  // dir -> the persisted AUDIO column — a production corpus stores
+  // waveform bytes in a parquet binary column at INGEST; the encode runs
+  // once per corpus, and the gate times the DECODE path only (q61
+  // mediaArtifact's discipline).
+  private[ops] val audioMemo = new ArtifactStore.Memo[String, Unit]
 
   private[ops] def audioArtifact(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    builtAudio.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_audio_${VecIndex.dirDigest(dir)}")
-      val hit = builtAudio.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        import s.implicits._
-        val docs = Tables.table(s, dir, "documents")
-        val expect = s"audio:v1:${Round12Ops.docsMarker(docs)}"
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              docs.select(col("doc_id")).as[Long]
-                .mapPartitions(batch => batch.map(id =>
-                  (id, encodeWav(id))))
-                .toDF("doc_id", "payload")
-                .write.mode("overwrite").parquet(s"$p/audio")
-              ArtifactStore.writeMarker(p, expect)
-              audioBuilds += 1
-            }
-          }
-        builtAudio(dir) = (p, expect, sig)
-      }
-      builtAudio(dir)._1
-    }
+      s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    lazy val docs = Tables.table(s, dir, "documents")
+    audioMemo(dir, VecIndex.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_audio_${VecIndex.dirDigest(dir)}"),
+        s"audio:v1:${Round12Ops.docsMarker(docs)}", ())) { (p, _) =>
+      import s.implicits._
+      docs.select(col("doc_id")).as[Long]
+        .mapPartitions(batch => batch.map(id => (id, encodeWav(id))))
+        .toDF("doc_id", "payload")
+        .write.mode("overwrite").parquet(s"$p/audio")
+    }._1
+  }
 
   val queries: Seq[Q] = Seq(
     // E9/audio: the real-codec waveform path. Opaque WAV binary column

@@ -52,28 +52,13 @@ object Round7Final {
     "transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) " +
       "* 1000000 + 0.5) AS DOUBLE))"
 
-  // (data dir) -> (artifact root, bucket modulus, content marker,
-  // embeddings file signature): the kNN graph is a PERSISTED index
-  // artifact (the VecIndex discipline — parquet files + corpus
+  // (data dir, tier) -> kNN-graph artifact root + its edges bucket
+  // modulus, for the three graph tiers: "knn" (the shared full-corpus
+  // graph), "inc" (q235's v1 base graph) and "l1" (q236's layer 1).
+  // The graph is a PERSISTED index artifact (parquet files + corpus
   // marker, NOT in-JVM checkpoint blocks, which Bench's inter-query
-  // cache hygiene would evict). First execution pays the build; every
-  // later execution — and a second session over the same corpus —
-  // serves from the files, and EVERY call re-validates sig + marker
-  // so an in-session embeddings rewrite rebuilds instead of serving
-  // stale (round-13 verdict, What's wrong 1).
-  private val builtGraph = scala.collection.mutable
-    .Map.empty[String, (String, Long, String, String)]
-
-  private[ops] var graphBuilds: Int = 0 // spec hook: actual builds
-
-  /** Test hook: forget the in-JVM graph registries (simulates a new
-    * session — on-disk artifacts and markers survive).
-    */
-  private[ops] def dropGraphMemos(): Unit = {
-    builtGraph.synchronized { builtGraph.clear() }
-    builtIncGraph.synchronized { builtIncGraph.clear() }
-    builtHier.synchronized { builtHier.clear() }
-  }
+  // cache hygiene would evict).
+  private[ops] val graphs = new ArtifactStore.Memo[(String, String), Long]
 
   /** Cheap order-independent corpus identity + graph geometry: any
     * row added/removed/revalued moves it, so a marker match means the
@@ -227,16 +212,12 @@ object Round7Final {
       col("sb").cast("bigint").as("sb", sbMeta(srcb)): _*)
   }
 
-  // (root, file, expect) -> built-or-validated; the auxiliary-artifact
-  // memo for persisted REFEREES (q235's full rebuild, q237's fresh
-  // survivor build). A referee is deterministic in (corpus, geometry),
-  // so it is an artifact like any other: computing it on every run
-  // made the lifecycle gates time the proof instead of the operation
-  // (round-7 verdict, What's wrong 4). The expect marker is part of
-  // the key so a corpus regenerated mid-session re-validates instead
-  // of serving the stale referee (round-8 advice).
-  private val builtAux =
-    scala.collection.mutable.Map.empty[(String, String, String), Unit]
+  // (root, file) -> persisted REFEREES (q235's full rebuild, q237's
+  // fresh survivor build). A referee is deterministic in (corpus,
+  // geometry), so it is an artifact like any other: computing it on
+  // every run made the lifecycle gates time the proof instead of the
+  // operation (round-7 verdict, What's wrong 4).
+  private[ops] val referees = new ArtifactStore.Memo[(String, String), Unit]
 
   /** Write a bucketed edges frame partitionBy(sb), CLUSTERING each
     * bucket into one task first: without the cluster step every writing
@@ -260,25 +241,15 @@ object Round7Final {
       .parquet(path)
   }
 
-  /** Marker-gated persisted edges artifact `<root>/<file>`: build and
-    * write (bucket-partitioned with modulus `srcb`) only when the
-    * stored marker mismatches `expect`; otherwise serve from the files.
+  /** Marker-gated persisted edges artifact `<root>/<file>`,
+    * bucket-partitioned with modulus `srcb`.
     */
-  private def persistedEdges(
+  private[ops] def persistedEdges(
       s: SparkSession, root: String, file: String, expect: String,
       srcb: Long)(build: => DataFrame): DataFrame = {
-    val mkf = s"_meta_$file.json"
-    builtAux.synchronized {
-      builtAux.getOrElseUpdate((root, file, expect), {
-        if (!ArtifactStore.markerOk(root, expect, mkf))
-          ArtifactStore.withBuildLock(root) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(root, expect, mkf)) {
-              writeEdges(withSb(build, srcb), s"$root/$file")
-              ArtifactStore.writeMarker(root, expect, mkf)
-            }
-          }
-      })
+    referees((root, file), expect, s"_meta_$file.json")(
+      (root, expect, ())) { (_, _) =>
+      writeEdges(withSb(build, srcb), s"$root/$file")
     }
     readEdges(s, s"$root/$file", srcb)
   }
@@ -291,48 +262,43 @@ object Round7Final {
     */
   private[graft] def graphArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
-    val e = Tables.table(s, dir, "embeddings")
-    val (path, srcb) = builtGraph.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "embeddings")
-      val hit = builtGraph.get(dir).collect {
-        case (p, sb, expect, s0)
-            if s0 == sig && ArtifactStore.markerOk(p, expect) =>
-          (p, sb)
-      }
-      hit.getOrElse {
-        val p = ArtifactStore.root(
-          s"graft_knngraph_${VecIndex.dirDigest(dir)}")
-        val (expect, n) = markerN(e)
-        val sb = srcbFor(n)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-              val soft = pinned(s, softOf(e, centsRowOf(cb)))
-              writeEdges(withSb(topDeg(pairsOf(soft, soft)), sb),
-                s"$p/edges")
-              // crank 0 IS the hard assignment — persisted cell-
-              // partitioned for the entry-point lookup, no serve-time
-              // corpus-wide assign pass, and the probe join prunes to
-              // the probed cells
-              soft.filter(col("crank") === 0)
-                .select(col("vec_id"), col("acell"))
-                .write.mode("overwrite").partitionBy("acell")
-                .parquet(s"$p/hard")
-              ArtifactStore.writeMarker(p, expect)
-              graphBuilds += 1
-            }
-          }
-        builtGraph(dir) = (p, sb, expect, sig)
-        (p, sb)
-      }
-    }
+    val (e, path, srcb) = graphIndex(s, dir)
+    graphFrames(s, e, path, srcb)
+  }
+
+  private def graphFrames(s: SparkSession, e: DataFrame, path: String,
+      srcb: Long): (DataFrame, DataFrame, DataFrame) =
     (e.select(col("vec_id"), expr(scaledD).as("ivd")),
       readEdges(s, s"$path/edges", srcb),
       s.read.parquet(s"$path/hard")
         .withColumn("acell", col("acell").cast("bigint")))
+
+  /** The embeddings frame plus the shared kNN graph's artifact root and
+    * edges bucket modulus, building the graph on a missing/stale marker.
+    */
+  private def graphIndex(s: SparkSession, dir: String)
+      : (DataFrame, String, Long) = {
+    graft.functions.ArrayDot.register(s)
+    graft.functions.VecDot.register(s)
+    val e = Tables.table(s, dir, "embeddings")
+    val (path, srcb) = graphs((dir, "knn"),
+        VecIndex.tableFileSig(dir, "embeddings")) {
+      val (expect, n) = markerN(e)
+      (ArtifactStore.root(s"graft_knngraph_${VecIndex.dirDigest(dir)}"),
+        expect, srcbFor(n))
+    } { (p, sb) =>
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val soft = pinned(s, softOf(e, centsRowOf(cb)))
+      writeEdges(withSb(topDeg(pairsOf(soft, soft)), sb), s"$p/edges")
+      // crank 0 IS the hard assignment — persisted cell-partitioned for
+      // the entry-point lookup, no serve-time corpus-wide assign pass,
+      // and the probe join prunes to the probed cells
+      soft.filter(col("crank") === 0)
+        .select(col("vec_id"), col("acell"))
+        .write.mode("overwrite").partitionBy("acell")
+        .parquet(s"$p/hard")
+    }
+    (e, path, srcb)
   }
 
   /** Runs the unrolled beam search for query-0 over the shared graph
@@ -782,19 +748,6 @@ object Round7Final {
        |  ORDER BY ${Pq.duckIntDot("iv", "q.qiv")} DESC, vec_id ASC
        |  LIMIT 10)""".stripMargin
 
-  // (data dir) -> (base-graph artifact root, bucket modulus, content
-  // marker, embeddings file signature) for the incremental family
-  // (keyed on the BASE corpus — a different artifact than q233's
-  // full-corpus graph); per-call sig + marker re-validation as above
-  private val builtIncGraph = scala.collection.mutable
-    .Map.empty[String, (String, Long, String, String)]
-
-  // (data dir) -> (layer-1 graph artifact root, bucket modulus,
-  // content marker, embeddings file signature) (q236's sparse upper
-  // layer over the same full-corpus codebook as q233's layer 0)
-  private val builtHier = scala.collection.mutable
-    .Map.empty[String, (String, Long, String, String)]
-
   /** The batched oracle spine appended to graphPrefixSql for q239:
     * `qbb` (the QB query vectors), `probesb` (per-query entry cells),
     * `v0b` (per-query entry points) and `topeb` (per-query exact
@@ -981,31 +934,15 @@ object Round7Final {
       val softB = soft.filter(col("vec_id") % 10 < 8)
       val softD = soft.filter(col("vec_id") % 10 >= 8)
       // ---- the persisted v1 artifact (base graph) ----
-      val (p, srcbI) = builtIncGraph.synchronized {
-        val sig = VecIndex.tableFileSig(dir, "embeddings")
-        val hit = builtIncGraph.get(dir).collect {
-          case (r, sb, expect, s0)
-              if s0 == sig && ArtifactStore.markerOk(r, expect) =>
-            (r, sb)
-        }
-        hit.getOrElse {
-          val root = ArtifactStore.root(
-            s"graft_knngraphinc_${VecIndex.dirDigest(dir)}")
-          // the v1 graph additionally depends on the 80/20 base split
-          val (expect, nB) = markerN(base, s""","split":"mod10lt8"""")
-          val sb = srcbFor(nB)
-          if (!ArtifactStore.markerOk(root, expect))
-            ArtifactStore.withBuildLock(root) {
-              if (!ArtifactStore.markerOk(root, expect)) {
-                writeEdges(withSb(topDeg(pairsOf(softB, softB)), sb),
-                  s"$root/edges_v1")
-                ArtifactStore.writeMarker(root, expect)
-                graphBuilds += 1
-              }
-            }
-          builtIncGraph(dir) = (root, sb, expect, sig)
-          (root, sb)
-        }
+      val (p, srcbI) = graphs((dir, "inc"),
+          VecIndex.tableFileSig(dir, "embeddings")) {
+        // the v1 graph additionally depends on the 80/20 base split
+        val (expect, nB) = markerN(base, s""","split":"mod10lt8"""")
+        (ArtifactStore.root(s"graft_knngraphinc_${VecIndex.dirDigest(dir)}"),
+          expect, srcbFor(nB))
+      } { (root, sb) =>
+        writeEdges(withSb(topDeg(pairsOf(softB, softB)), sb),
+          s"$root/edges_v1")
       }
       val edgesV1 = readEdges(s, s"$p/edges_v1", srcbI)
       // ---- ingest: touched cells -> recomputed sources ----
@@ -1113,35 +1050,19 @@ object Round7Final {
       val (ivc, edges, _) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-      val (p, srcbL1) = builtHier.synchronized {
-        val sig = VecIndex.tableFileSig(dir, "embeddings")
-        val hit = builtHier.get(dir).collect {
-          case (r, sb, expect, s0)
-              if s0 == sig && ArtifactStore.markerOk(r, expect) =>
-            (r, sb)
-        }
-        hit.getOrElse {
-          val root = ArtifactStore.root(
-            s"graft_knngraphl1_${VecIndex.dirDigest(dir)}")
-          // the layer-1 graph additionally depends on the promotion
-          // modulus — changing L1MOD must invalidate persisted edges_l1
-          val (expect, nE) = markerN(e, s""","l1mod":$L1MOD""")
-          // bucket count rides the layer-1 SOURCE count (~n/L1MOD)
-          val sb = srcbFor(math.max(nE / L1MOD, 1L))
-          if (!ArtifactStore.markerOk(root, expect))
-            ArtifactStore.withBuildLock(root) {
-              if (!ArtifactStore.markerOk(root, expect)) {
-                val soft1 = softOf(e, centsRowOf(cb))
-                  .filter(col("vec_id") % L1MOD === 1)
-                writeEdges(withSb(topDeg(pairsOf(soft1, soft1)), sb),
-                  s"$root/edges_l1")
-                ArtifactStore.writeMarker(root, expect)
-                graphBuilds += 1
-              }
-            }
-          builtHier(dir) = (root, sb, expect, sig)
-          (root, sb)
-        }
+      val (p, srcbL1) = graphs((dir, "l1"),
+          VecIndex.tableFileSig(dir, "embeddings")) {
+        // the layer-1 graph additionally depends on the promotion
+        // modulus — changing L1MOD must invalidate persisted edges_l1
+        val (expect, nE) = markerN(e, s""","l1mod":$L1MOD""")
+        // bucket count rides the layer-1 SOURCE count (~n/L1MOD)
+        (ArtifactStore.root(s"graft_knngraphl1_${VecIndex.dirDigest(dir)}"),
+          expect, srcbFor(math.max(nE / L1MOD, 1L)))
+      } { (root, sb) =>
+        val soft1 = softOf(e, centsRowOf(cb))
+          .filter(col("vec_id") % L1MOD === 1)
+        writeEdges(withSb(topDeg(pairsOf(soft1, soft1)), sb),
+          s"$root/edges_l1")
       }
       val edges1 = readEdges(s, s"$p/edges_l1", srcbL1)
       val entry0 = e.filter(col("vec_id") % L1MOD === 1)
@@ -1252,11 +1173,8 @@ object Round7Final {
       // row-identical to a fresh build over the survivors with the
       // same codebook; serving runs from the compacted files with the
       // exact referee over survivors only.
-      val (ivc, edges, hard) = graphArtifacts(s, dir)
-      val (root, srcbG) = builtGraph.synchronized {
-        val (r, sb, _, _) = builtGraph(dir); (r, sb)
-      }
-      val e = Tables.table(s, dir, "embeddings")
+      val (e, root, srcbG) = graphIndex(s, dir)
+      val (ivc, edges, hard) = graphFrames(s, e, root, srcbG)
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
       // the soft-assignment frame feeds several consumers per call
       // (touched cells, recompute sources, both pair-join sides, hard

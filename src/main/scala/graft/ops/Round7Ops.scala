@@ -141,33 +141,19 @@ object Round7Ops {
          |LEFT JOIN tope t ON s.vec_id = t.vec_id, nc c, nn n, dd d
          |ORDER BY s.adc DESC, s.vec_id ASC""".stripMargin
 
-  // (root, file, expect) -> built-or-validated: persisted code
-  // REFEREES. A referee re-encode is deterministic in (corpus,
-  // codebooks), so it is an artifact — recomputing it per run made the
-  // lifecycle gates time the proof, not the operation (round-7
-  // verdict, What's wrong 4). The EXPECT marker is part of the key: a
-  // corpus regenerated mid-session changes the marker, and a stale
-  // (root, file) memo hit must not serve the old referee (round-8
-  // advice).
-  private val builtRef =
-    scala.collection.mutable.Map.empty[(String, String, String), Unit]
+  // (root, file) -> persisted code REFEREES. A referee re-encode is
+  // deterministic in (corpus, codebooks), so it is an artifact —
+  // recomputing it per run made the lifecycle gates time the proof,
+  // not the operation (round-7 verdict, What's wrong 4).
+  private[ops] val referees = new ArtifactStore.Memo[(String, String), Unit]
 
   /** Marker-gated persisted referee codes `<root>/<file>`. */
-  private def persistedCodes(
+  private[ops] def persistedCodes(
       s: org.apache.spark.sql.SparkSession, root: String, file: String,
       expect: String)(build: => DataFrame): DataFrame = {
-    val mkf = s"_meta_$file.json"
-    builtRef.synchronized {
-      builtRef.getOrElseUpdate((root, file, expect), {
-        if (!ArtifactStore.markerOk(root, expect, mkf))
-          ArtifactStore.withBuildLock(root) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(root, expect, mkf)) {
-              build.write.mode("overwrite").parquet(s"$root/$file")
-              ArtifactStore.writeMarker(root, expect, mkf)
-            }
-          }
-      })
+    referees((root, file), expect, s"_meta_$file.json")(
+      (root, expect, ())) { (_, _) =>
+      build.write.mode("overwrite").parquet(s"$root/$file")
     }
     s.read.parquet(s"$root/$file")
   }

@@ -41,55 +41,31 @@ object Round9More {
   private def dataFiles(root: String): Long =
     ArtifactStore.dataFileCount(root)
 
-  // dir -> (frag root, content marker, embeddings file signature):
-  // q249's FRAGMENTED codes artifact, persisted once per corpus behind
-  // a written-last marker (round-14 verdict "What's wrong 3": rebuilding
-  // the fragmentation inside the gate made the timed composition
-  // unstable across contexts — the timed pass is now exactly
-  // fragment-READ + compact + prove, every run).
-  private val builtFrag =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var fragBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (the on-disk artifact and
-    * marker survive — a "new session").
-    */
-  private[ops] def dropFragMemo(): Unit =
-    builtFrag.synchronized { builtFrag.clear() }
+  // dir -> q249's FRAGMENTED codes artifact, persisted once per corpus
+  // (round-14 verdict "What's wrong 3": rebuilding the fragmentation
+  // inside the gate made the timed composition unstable across
+  // contexts — the timed pass is now exactly fragment-READ + compact +
+  // prove, every run).
+  private[ops] val fragMemo = new ArtifactStore.Memo[String, Unit]
 
   /** The persisted 8-way-fragmented codes artifact for `dir`: the
     * small-file layout repeated ingest deltas leave in a cell-
     * partitioned store, pinned on disk so q249's timed pass reads the
     * SAME fragment set every run. Keyed to the serving index root and
-    * the embeddings table signature; built under the cross-process
-    * build lock, marker written last.
+    * the embeddings table signature.
     */
   private[ops] def fragArtifact(
-      s: SparkSession, dir: String, idx: String): String =
-    builtFrag.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "embeddings")
-      val p = ArtifactStore.root(
-        s"graft_idxfrag_${VecIndex.dirDigest(dir)}")
-      val expect = s"idxfrag:v1:idx=$idx:sig=$sig"
-      val hit = builtFrag.get(dir).exists { case (_, e0, s0) =>
-        s0 == sig && e0 == expect && ArtifactStore.markerOk(p, e0)
-      }
-      if (!hit) {
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              VecIndex.readCodes(s, idx)
-                .repartition(8, col("vec_id")).write.mode("overwrite")
-                .partitionBy("cid").parquet(s"$p/codes")
-              ArtifactStore.writeMarker(p, expect)
-              fragBuilds += 1
-            }
-          }
-        builtFrag(dir) = (p, expect, sig)
-      }
-      builtFrag(dir)._1
-    }
+      s: SparkSession, dir: String, idx: String): String = {
+    val sig = VecIndex.tableFileSig(dir, "embeddings")
+    val expect = s"idxfrag:v1:idx=$idx:sig=$sig"
+    fragMemo(dir, expect)(
+      (ArtifactStore.root(s"graft_idxfrag_${VecIndex.dirDigest(dir)}"),
+        expect, ())) { (p, _) =>
+      VecIndex.readCodes(s, idx)
+        .repartition(8, col("vec_id")).write.mode("overwrite")
+        .partitionBy("cid").parquet(s"$p/codes")
+    }._1
+  }
 
   /** Copy an artifact root (coarse + pq + codes) into `dst` — the
     * generation-directory layout q250's GC manages. Row counts are the

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The Hadoop-FS artifact seam: marker round-trip, recursive table
   * signatures (partitioned layouts included), loud failure on missing
-  * tables, and the re-entrant cross-process build lock.
+  * tables, the re-entrant cross-process build lock, and fault injection
+  * against the build-once protocol (`buildOnce` / `Memo`).
   */
 class ArtifactStoreSpec extends AnyFunSuite {
 
@@ -138,6 +139,111 @@ class ArtifactStoreSpec extends AnyFunSuite {
         List("in1", "out1", "in0", "out0")).contains(seq),
         s"interleaved build sections: $seq")
       assert(ArtifactStore.exists(s"$root/_build.lock"))
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  // a Memo call whose plan and build are counted: plan yields
+  // (root, expect, ()), build writes `<root>/data` = `body`
+  private final class Probe(root: String) {
+    val memo = new ArtifactStore.Memo[String, Unit]
+    var plans = 0
+    def call(sig: String, expect: String, body: String = "full"): String = {
+      memo("k", sig) { plans += 1; (root, expect, ()) } { (p, _) =>
+        ArtifactStore.writeString(s"$p/data", body)
+      }
+      ArtifactStore.readString(s"$root/data")
+    }
+  }
+
+  test("fault injection: a build that writes data and then throws " +
+    "leaves no marker and no memo entry, and the next call rebuilds") {
+    val root = tmp()
+    try {
+      val probe = new Probe(root)
+      val boom = intercept[IllegalStateException] {
+        probe.memo("k", "s1")((root, "m1", ())) { (p, _) =>
+          ArtifactStore.writeString(s"$p/data", "half")
+          throw new IllegalStateException("crash after the data write")
+        }
+      }
+      assert(boom.getMessage.contains("crash"))
+      assert(ArtifactStore.exists(s"$root/data"), "the half-build wrote")
+      assert(!ArtifactStore.exists(ArtifactStore.markerPath(root)),
+        "a throwing build published its marker")
+      assert(probe.memo.builds == 0, "a throwing build was counted")
+      // another process publishes the identical build: with no memo
+      // entry the next call must plan again and then trust the marker
+      ArtifactStore.writeMarker(root, "m1")
+      assert(probe.call("s1", "m1") == "half" && probe.plans == 1,
+        "the failed call left a memo entry behind")
+      assert(probe.memo.builds == 0)
+      // the torn state the crash left (data, no marker) is rebuilt
+      ArtifactStore.deleteRecursive(ArtifactStore.markerPath(root))
+      assert(probe.call("s1", "m1") == "full")
+      assert(probe.plans == 2 && probe.memo.builds == 1)
+      assert(ArtifactStore.markerOk(root, "m1"))
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("fault injection: a stale marker forces a rebuild even on a " +
+    "memo hit with an unchanged table signature") {
+    val root = tmp()
+    try {
+      val probe = new Probe(root)
+      probe.call("s1", "m1")
+      probe.call("s1", "m1")
+      assert(probe.plans == 1 && probe.memo.builds == 1, "second call missed")
+      ArtifactStore.writeMarker(root, "{\"stale\":true}")
+      assert(probe.call("s1", "m1", "rebuilt") == "rebuilt")
+      assert(probe.plans == 2 && probe.memo.builds == 2,
+        "a stale marker was served")
+      assert(ArtifactStore.markerOk(root, "m1"))
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("fault injection: a changed table signature re-plans; a changed " +
+    "content marker rebuilds, an unchanged one is served") {
+    val root = tmp()
+    try {
+      val probe = new Probe(root)
+      probe.call("s1", "m1")
+      // files touched, content identical: re-plan, marker still valid
+      probe.call("s2", "m1")
+      assert(probe.plans == 2 && probe.memo.builds == 1)
+      // content changed: the new marker mismatches and the build runs
+      assert(probe.call("s3", "m2", "v2") == "v2")
+      assert(probe.plans == 3 && probe.memo.builds == 2)
+      assert(ArtifactStore.markerOk(root, "m2"))
+      // after a drop the on-disk marker serves a "new session"
+      probe.memo.drop()
+      probe.call("s3", "m2")
+      assert(probe.plans == 4 && probe.memo.builds == 2)
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("fault injection: 8 threads racing on one empty root run the " +
+    "build exactly once") {
+    val root = tmp()
+    try {
+      val ran = new java.util.concurrent.atomic.AtomicInteger()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      // one Memo per thread: only the build lock and the re-check stand
+      // between them, as between two sessions or two JVMs
+      val memos = Seq.fill(8)(new ArtifactStore.Memo[String, Unit])
+      val ts = memos.map { m =>
+        new Thread(() => {
+          start.await()
+          m("k", "s1")((root, "m1", ())) { (p, _) =>
+            ran.incrementAndGet()
+            Thread.sleep(50)
+            ArtifactStore.writeString(s"$p/data", "full")
+          }
+        })
+      }
+      ts.foreach(_.start()); start.countDown(); ts.foreach(_.join())
+      assert(ran.get == 1, s"build ran ${ran.get} times")
+      assert(memos.map(_.builds).sum == 1)
+      assert(ArtifactStore.markerOk(root, "m1"))
     } finally ArtifactStore.deleteRecursive(root)
   }
 }

@@ -70,11 +70,11 @@ class MultimodalSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.SparkEntry.queries("q61_multimodal_decode")(spark, dir).collect()
-    val before = Multimodal.mediaBuilds
-    Multimodal.dropMediaMemo()
+    val before = Multimodal.mediaMemo.builds
+    Multimodal.mediaMemo.drop()
     val again = graft.SparkEntry
       .queries("q61_multimodal_decode")(spark, dir).collect()
-    assert(Multimodal.mediaBuilds == before,
+    assert(Multimodal.mediaMemo.builds == before,
       "fresh-marker run re-encoded the media column")
     // the stored payloads really are the corpus media: every doc
     // decodes to its closed-form stats through the real codec
@@ -83,9 +83,9 @@ class MultimodalSpec extends AnyFunSuite {
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
       s"graft_media_${VecIndex.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Multimodal.dropMediaMemo()
+    Multimodal.mediaMemo.drop()
     graft.SparkEntry.queries("q61_multimodal_decode")(spark, dir).collect()
-    assert(Multimodal.mediaBuilds == before + 1,
+    assert(Multimodal.mediaMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 }

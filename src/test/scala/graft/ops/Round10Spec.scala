@@ -211,17 +211,17 @@ class Round10Spec extends AnyFunSuite {
     "hash table without re-decoding; a stale marker forces the rebuild") {
     assume(available)
     run("q262_image_phash_dedup").collect()
-    val before = Round10Final.phashBuilds
-    Round10Final.dropPhashMemo()
+    val before = Round10Final.phashMemo.builds
+    Round10Final.phashMemo.drop()
     run("q262_image_phash_dedup").collect()
-    assert(Round10Final.phashBuilds == before,
+    assert(Round10Final.phashMemo.builds == before,
       "fresh-marker serve re-ran the decode pass")
     val marker = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_phash_${VecIndex.dirDigest(dir)}", "_meta.json")
     java.nio.file.Files.writeString(marker, "{\"stale\":true}")
-    Round10Final.dropPhashMemo()
+    Round10Final.phashMemo.drop()
     run("q262_image_phash_dedup").collect()
-    assert(Round10Final.phashBuilds == before + 1,
+    assert(Round10Final.phashMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 

@@ -81,17 +81,17 @@ class Round11OpsSpec extends AnyFunSuite {
     "rebuild") {
     assume(available(dir), s"$dir absent — skipping")
     graft.SparkEntry.queries("q265_lsh_tuning_curve")(spark, dir).collect()
-    val before = Round11Ops.lshBuilds
-    Round11Ops.dropLshMemo()
+    val before = Round11Ops.lshMemo.builds
+    Round11Ops.lshMemo.drop()
     graft.SparkEntry.queries("q265_lsh_tuning_curve")(spark, dir).collect()
-    assert(Round11Ops.lshBuilds == before,
+    assert(Round11Ops.lshMemo.builds == before,
       "fresh-marker run rebuilt the signature frames")
     val marker = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_lshcurve_${VecIndex.dirDigest(dir)}", "_meta.json")
     java.nio.file.Files.writeString(marker, "{\"stale\":true}")
-    Round11Ops.dropLshMemo()
+    Round11Ops.lshMemo.drop()
     graft.SparkEntry.queries("q265_lsh_tuning_curve")(spark, dir).collect()
-    assert(Round11Ops.lshBuilds == before + 1,
+    assert(Round11Ops.lshMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 

@@ -93,11 +93,11 @@ class Round12OpsSpec extends AnyFunSuite {
     val run = () => graft.SparkEntry
       .queries("q278_persisted_kmv_serve")(spark, dir).collect()
     val first = run()
-    val b0 = Round12Ops.sketchBuilds
+    val b0 = Round12Ops.sketchMemo.builds
     // "new session": drop the in-JVM memo; on-disk artifact survives
-    Round12Ops.dropSketchMemo()
+    Round12Ops.sketchMemo.drop()
     val second = run()
-    assert(Round12Ops.sketchBuilds == b0,
+    assert(Round12Ops.sketchMemo.builds == b0,
       "a fresh marker must serve WITHOUT rebuilding")
     assert(second.map(_.toString).toSeq == first.map(_.toString).toSeq,
       "artifact-served rows are identical across sessions")
@@ -105,9 +105,9 @@ class Round12OpsSpec extends AnyFunSuite {
     val root = Round12Ops.sketchArtifact(spark, dir)
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(root, "_meta.json"))
-    Round12Ops.dropSketchMemo()
+    Round12Ops.sketchMemo.drop()
     run()
-    assert(Round12Ops.sketchBuilds == b0 + 1,
+    assert(Round12Ops.sketchMemo.builds == b0 + 1,
       "a missing/stale marker must pay the rebuild")
     // artifact layout: per-source sketches hold at most k rows each
     val sk = spark.read.parquet(s"$root/sketch")

@@ -72,19 +72,19 @@ class Round12ServeSpec extends AnyFunSuite {
     "the rebuild") {
     assume(available(dir), s"$dir absent — skipping")
     run("q285_ngram_lm_serve").collect()
-    val before = Round12Serve.ngramBuilds
-    Round12Serve.dropNgramMemo()
+    val before = Round12Serve.ngramMemo.builds
+    Round12Serve.ngramMemo.drop()
     val again = run("q285_ngram_lm_serve").collect()
-    assert(Round12Serve.ngramBuilds == before,
+    assert(Round12Serve.ngramMemo.builds == before,
       "fresh-marker serve rebuilt the store")
     assert(again.length > 0)
     // corrupt the marker -> next session must rebuild
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_ngramlm_${VecIndex.dirDigest(dir)}", "_meta.json")
     java.nio.file.Files.writeString(root, "{\"stale\":true}")
-    Round12Serve.dropNgramMemo()
+    Round12Serve.ngramMemo.drop()
     run("q285_ngram_lm_serve").collect()
-    assert(Round12Serve.ngramBuilds == before + 1,
+    assert(Round12Serve.ngramMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 

@@ -127,18 +127,18 @@ class Round13OpsSpec extends AnyFunSuite {
     "the rebuild") {
     assume(available(dir), s"$dir absent — skipping")
     run("q291_backoff_ngram_serve").collect()
-    val before = Round13Ops.boBuilds
-    Round13Ops.dropBoMemo()
+    val before = Round13Ops.boMemo.builds
+    Round13Ops.boMemo.drop()
     val again = run("q291_backoff_ngram_serve").collect()
-    assert(Round13Ops.boBuilds == before,
+    assert(Round13Ops.boMemo.builds == before,
       "fresh-marker serve rebuilt the store")
     assert(again.length == 2 * Round13Ops.QB)
     val marker = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_backoffng_${VecIndex.dirDigest(dir)}", "_meta.json")
     java.nio.file.Files.writeString(marker, "{\"stale\":true}")
-    Round13Ops.dropBoMemo()
+    Round13Ops.boMemo.drop()
     run("q291_backoff_ngram_serve").collect()
-    assert(Round13Ops.boBuilds == before + 1,
+    assert(Round13Ops.boMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 
@@ -195,10 +195,10 @@ class Round13OpsSpec extends AnyFunSuite {
     "rebuild; the stored rows equal packApplyRows") {
     assume(available(dir), s"$dir absent — skipping")
     run("q292_pack_apply_masks").collect()
-    val before = Round13Ops.packBuilds
-    Round13Ops.dropPackMemo()
+    val before = Round13Ops.packMemo.builds
+    Round13Ops.packMemo.drop()
     run("q292_pack_apply_masks").collect()
-    assert(Round13Ops.packBuilds == before,
+    assert(Round13Ops.packMemo.builds == before,
       "fresh-marker serve re-emitted the packed rows")
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_packapply_${VecIndex.dirDigest(dir)}")
@@ -210,9 +210,9 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(stored == live, "stored rows differ from the live emission")
     java.nio.file.Files.writeString(root.resolve("_meta.json"),
       "{\"stale\":true}")
-    Round13Ops.dropPackMemo()
+    Round13Ops.packMemo.drop()
     run("q292_pack_apply_masks").collect()
-    assert(Round13Ops.packBuilds == before + 1,
+    assert(Round13Ops.packMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 

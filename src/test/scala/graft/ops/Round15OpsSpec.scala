@@ -64,17 +64,17 @@ class Round15OpsSpec extends AnyFunSuite {
       assert((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
         == expected(id), s"doc $id decoded features drifted")
     }
-    val before = Round15Ops.audioBuilds
-    Round15Ops.dropAudioMemo()
+    val before = Round15Ops.audioMemo.builds
+    Round15Ops.audioMemo.drop()
     graft.SparkEntry.queries("q295_audio_decode")(spark, dir).collect()
-    assert(Round15Ops.audioBuilds == before,
+    assert(Round15Ops.audioMemo.builds == before,
       "fresh-marker run re-encoded the audio column")
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
       s"graft_audio_${VecIndex.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Round15Ops.dropAudioMemo()
+    Round15Ops.audioMemo.drop()
     graft.SparkEntry.queries("q295_audio_decode")(spark, dir).collect()
-    assert(Round15Ops.audioBuilds == before + 1,
+    assert(Round15Ops.audioMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 
@@ -83,19 +83,19 @@ class Round15OpsSpec extends AnyFunSuite {
     assume(available, s"$dir absent — skipping")
     graft.SparkEntry.queries("q284_exactsubstr_incremental")(spark, dir)
       .collect()
-    val before = Round12Extra.gramBuilds
-    Round12Extra.dropGramMemo()
+    val before = Round12Extra.gramMemo.builds
+    Round12Extra.gramMemo.drop()
     graft.SparkEntry.queries("q284_exactsubstr_incremental")(spark, dir)
       .collect()
-    assert(Round12Extra.gramBuilds == before,
+    assert(Round12Extra.gramMemo.builds == before,
       "fresh-marker run rebuilt the base gram store inside the gate")
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
       s"graft_gramstore_${VecIndex.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Round12Extra.dropGramMemo()
+    Round12Extra.gramMemo.drop()
     graft.SparkEntry.queries("q284_exactsubstr_incremental")(spark, dir)
       .collect()
-    assert(Round12Extra.gramBuilds == before + 1,
+    assert(Round12Extra.gramMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 
@@ -105,11 +105,11 @@ class Round15OpsSpec extends AnyFunSuite {
       s"$dir absent — skipping")
     graft.SparkEntry.queries("q249_codes_artifact_compaction")(spark, dir)
       .collect()
-    val before = Round9More.fragBuilds
-    Round9More.dropFragMemo()
+    val before = Round9More.fragMemo.builds
+    Round9More.fragMemo.drop()
     val rows = graft.SparkEntry
       .queries("q249_codes_artifact_compaction")(spark, dir).collect()
-    assert(Round9More.fragBuilds == before,
+    assert(Round9More.fragMemo.builds == before,
       "fresh-marker run re-fragmented the codes artifact")
     // the content-identity proof still holds against the pinned set
     rows.foreach { r =>
@@ -121,10 +121,10 @@ class Round15OpsSpec extends AnyFunSuite {
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
       s"graft_idxfrag_${VecIndex.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Round9More.dropFragMemo()
+    Round9More.fragMemo.drop()
     graft.SparkEntry.queries("q249_codes_artifact_compaction")(spark, dir)
       .collect()
-    assert(Round9More.fragBuilds == before + 1,
+    assert(Round9More.fragMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 }

@@ -118,20 +118,20 @@ class Round7OpsSpec extends AnyFunSuite {
     assume(available, s"$dir absent — skipping")
     val e = graft.Tables.table(spark, dir, "embeddings")
     val idx1 = VecIndex.artifacts(spark, dir, "full", e)
-    val b0 = VecIndex.builds
+    val b0 = VecIndex.memo.builds
     // "new session": the in-JVM registry is gone, the files remain
-    VecIndex.dropMemo()
+    VecIndex.memo.drop()
     val idx2 = VecIndex.artifacts(spark, dir, "full", e)
     assert(idx2 == idx1, "artifact path is not deterministic")
-    assert(VecIndex.builds == b0,
+    assert(VecIndex.memo.builds == b0,
       "second session rebuilt the index instead of serving from the " +
         "pre-existing artifacts (marker check failed)")
     // a stale/missing marker must NOT be trusted: the build re-runs
-    VecIndex.dropMemo()
+    VecIndex.memo.drop()
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(idx1, "_meta.json"))
     VecIndex.artifacts(spark, dir, "full", e)
-    assert(VecIndex.builds == b0 + 1,
+    assert(VecIndex.memo.builds == b0 + 1,
       "missing marker did not force a rebuild — a crashed half-build " +
         "would be trusted")
   }

@@ -68,12 +68,12 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       val root = VecIndex.artifacts(spark, scratch, "full", e1)
       VecIndex.residArtifacts(spark, scratch, e1)
       Round7Final.graphArtifacts(spark, scratch)
-      val (b1, g1) = (VecIndex.builds, Round7Final.graphBuilds)
+      val (b1, g1) = (VecIndex.memo.builds, Round7Final.graphs.builds)
       // unchanged corpus: every tier serves, none rebuilds
       VecIndex.artifacts(spark, scratch, "full", e1)
       VecIndex.residArtifacts(spark, scratch, e1)
       Round7Final.graphArtifacts(spark, scratch)
-      assert(VecIndex.builds == b1 && Round7Final.graphBuilds == g1,
+      assert(VecIndex.memo.builds == b1 && Round7Final.graphs.builds == g1,
         "unchanged corpus was rebuilt instead of served")
       // REWRITE the embeddings table in-session: drop the odd half
       graft.Tables.load(spark, src, "embeddings")
@@ -84,13 +84,13 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       val e2 = graft.Tables.table(spark, scratch, "embeddings")
       val root2 = VecIndex.artifacts(spark, scratch, "full", e2)
       assert(root2 == root, "artifact root must stay deterministic")
-      assert(VecIndex.builds == b1 + 1,
+      assert(VecIndex.memo.builds == b1 + 1,
         "in-session embeddings rewrite served a STALE IVF-PQ index")
       VecIndex.residArtifacts(spark, scratch, e2)
-      assert(VecIndex.builds == b1 + 2,
+      assert(VecIndex.memo.builds == b1 + 2,
         "in-session embeddings rewrite served a STALE residual index")
       Round7Final.graphArtifacts(spark, scratch)
-      assert(Round7Final.graphBuilds == g1 + 1,
+      assert(Round7Final.graphs.builds == g1 + 1,
         "in-session embeddings rewrite served a STALE kNN graph")
       // and the rebuilt index really is the new corpus: codes cover
       // exactly the surviving vec_ids
@@ -105,5 +105,32 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       ArtifactStore.deleteRecursive(scratch)
       graft.Tables.registerAll(spark, src)
     }
+  }
+
+  test("a referee whose root was deleted under a live JVM is rebuilt, " +
+    "not read from a missing path (q229's codes_ref_union)") {
+    val root =
+      java.nio.file.Files.createTempDirectory("graft_referee_").toString
+    try {
+      val rows = spark.range(20)
+        .select(col("id").as("src"), (col("id") * 7 % 20).as("dst"))
+      def codes() = Round7Ops.persistedCodes(spark, root,
+          "codes_ref_union", "m1")(rows)
+        .orderBy("src").collect().toSeq
+      def edges() = Round7Final.persistedEdges(spark, root,
+          "edges_full", "m1", 4L)(rows)
+        .select("src", "dst").orderBy("src").collect().toSeq
+      val (c1, e1) = (codes(), edges())
+      val (rc, re) = (Round7Ops.referees.builds, Round7Final.referees.builds)
+      assert(codes() == c1 && edges() == e1)
+      assert(Round7Ops.referees.builds == rc &&
+        Round7Final.referees.builds == re, "an intact referee was rebuilt")
+      ArtifactStore.deleteRecursive(root)
+      assert(codes() == c1, "rebuilt referee codes differ")
+      assert(edges() == e1, "rebuilt referee edges differ")
+      assert(Round7Ops.referees.builds == rc + 1 &&
+        Round7Final.referees.builds == re + 1,
+        "a deleted referee root was not rebuilt exactly once")
+    } finally ArtifactStore.deleteRecursive(root)
   }
 }

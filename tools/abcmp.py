@@ -2,7 +2,8 @@
 """Compare two legmin-folded bench files (base vs new) per query.
 
 Usage: abcmp.py <base.json> <new.json> [top_n]
-Prints total/geomean and the largest improvements and regressions.
+Prints total/geomean and the largest improvements and regressions over
+the queries timed (non-zero) in both files, and names the queries skipped.
 """
 import json
 import math
@@ -17,7 +18,19 @@ def load(p):
 def main():
     base, new = load(sys.argv[1]), load(sys.argv[2])
     top_n = int(sys.argv[3]) if len(sys.argv) > 3 else 15
-    common = sorted(set(base) & set(new))
+    only = sorted(set(base) ^ set(new))
+    if only:
+        print(f"skipped {len(only)} queries not timed in both files: "
+              + ", ".join(only))
+    zero = sorted(q for q in set(base) & set(new)
+                  if base[q] <= 0 or new[q] <= 0)
+    if zero:
+        print(f"skipped {len(zero)} queries with a 0.0 timing: "
+              + ", ".join(zero))
+    common = sorted(set(base) & set(new) - set(zero))
+    if not common:
+        print("no query is timed (non-zero) in both files; nothing to compare")
+        return 1
     tb = sum(base[q] for q in common)
     tn = sum(new[q] for q in common)
     ratios = [(base[q] / new[q], q) for q in common]
@@ -33,7 +46,8 @@ def main():
         if r >= 1:
             break
         print(f"  {base[q]:7.3f} -> {new[q]:7.3f}  {r:5.2f}x  {q}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

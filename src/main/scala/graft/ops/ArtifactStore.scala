@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** The ONE filesystem seam for persisted artifact lifecycles: every
@@ -32,6 +34,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    table signature (a metadata-only [[tableFileSig]] listing) and
   *    re-reads the marker, so an in-session table rewrite or a deleted
   *    artifact root rebuilds instead of serving stale or missing files.
+  *
+  * The read rule — when an inferred parquet schema may be trusted,
+  * implemented by [[readParquet]]: a schema inferred for a set of
+  * paths is reused, and the read plans with `.schema(...)` and no
+  * inference job, only while the same metadata-only listing
+  * signature that decides artifact reuse (recursive relative path,
+  * size and mtime, as in [[tableFileSig]]) still holds, under the same
+  * reader options and parquet inference confs. Any rewrite of a root
+  * infers again. One-shot [[tempRoot]] reads are never memoized: their
+  * paths are unique per call, so they stay plain `spark.read`, and the
+  * memo stays bounded by the number of deterministic roots.
   *
   * Reference scope: PalNilsson/ask-duckdb persists nothing (its DuckDB
   * file IS its storage, query_llm.py:441-455); the artifact tier exists
@@ -161,26 +174,31 @@ object ArtifactStore {
   /** List a path's file statuses as (relative path, size, mtime),
     * RECURSIVE and name-sorted — partitioned/nested parquet included
     * (round-13 advice: a top-level-only listing misses part files
-    * under partition subdirectories).
+    * under partition subdirectories). Fork-free, see [[filesUnder]].
     */
   def listFilesRec(path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
     val fs = fsOf(p)
     if (!fs.exists(p)) return Seq.empty
-    if (fs.getFileStatus(p).isFile) {
-      val st = fs.getFileStatus(p)
-      return Seq((p.getName, st.getLen, st.getModificationTime))
-    }
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val baseUri = fs.getFileStatus(p).getPath.toUri
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = baseUri.relativize(st.getPath.toUri).getPath
-      buf += ((rel, st.getLen, st.getModificationTime))
-    }
-    buf.sortBy(_._1).toSeq
+    val st = fs.getFileStatus(p)
+    if (st.isFile) return Seq((p.getName, st.getLen, st.getModificationTime))
+    val baseUri = st.getPath.toUri
+    filesUnder(fs, st.getPath).map { f =>
+      (baseUri.relativize(f.getPath.toUri).getPath, f.getLen,
+        f.getModificationTime)
+    }.toSeq.sortBy(_._1)
   }
+
+  /** Every FILE under directory `dir`, recursing with `listStatus`.
+    * Deliberately not `fs.listFiles`: on the local filesystem its
+    * `LocatedFileStatus` copies each file's permissions, which without
+    * the native Hadoop library forks one `ls -ld` per file; plain
+    * `listStatus`/`getFileStatus` statuses never load them.
+    */
+  private def filesUnder(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).iterator.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Iterator.single(st)
+    }
 
   /** Child entry NAMES (files and directories) of `path`, sorted;
     * empty when the path does not exist.
@@ -196,18 +214,11 @@ object ArtifactStore {
     * _SUCCESS markers and dot-prefixed shadows excluded). Metadata
     * only, never file contents.
     */
-  def dataFileCount(path: String): Long = {
-    val p = new Path(path)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith(".")) n += 1
-    }
-    n
-  }
+  def dataFileCount(path: String): Long =
+    listFilesRec(path).count { case (rel, _, _) =>
+      val name = rel.split('/').last
+      name.endsWith(".parquet") && !name.startsWith(".")
+    }.toLong
 
   /** Move/rename within one filesystem, replacing any existing target
     * (the stage-then-publish step of the deterministic wave writers).
@@ -362,12 +373,72 @@ object ArtifactStore {
     */
   def tableFileSig(dir: String, table: String): String = {
     val p = s"$dir/$table.parquet"
-    val fs = listFilesRec(p)
-    if (fs.isEmpty && !exists(p))
+    val sig = listingSig(p)
+    if (sig.isEmpty && !exists(p))
       throw new IllegalArgumentException(
         s"tableFileSig: no such table path $p")
-    fs.map { case (n, len, mt) => s"$n:$len:$mt" }.mkString("|")
+    sig
   }
+
+  /** [[listFilesRec]] as one `path:size:mtime|...` string. */
+  private def listingSig(path: String): String =
+    listFilesRec(path).map { case (n, len, mt) => s"$n:$len:$mt" }
+      .mkString("|")
+
+  // parquet confs that change what schema inference returns for the
+  // same files: part of every readParquet memo key
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema")
+
+  // (paths, options, inference confs) -> (listing signature, schema)
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** `spark.read.options(options).parquet(paths: _*)` without the
+    * schema-inference job on a repeat read (the read rule in the object
+    * doc). Globs are expanded here, name-sorted, to the paths they
+    * match — the signature must list what is read, and a multi-path
+    * read skips Spark's streaming-sink probe, which logs a
+    * `FileNotFoundException` stack trace for a literal glob. A glob
+    * matching nothing is passed through, so Spark fails it as before.
+    */
+  def readParquet(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val expanded = paths.flatMap(expandGlob)
+    val opts = options.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+    val confs = InferenceConfs.map(k =>
+      s"$k=${spark.conf.getOption(k).getOrElse("")}")
+    val key = (expanded ++ opts ++ confs).mkString("\n")
+    val sig = expanded.map(listingSig).mkString("\n")
+    val reader = spark.read.options(options)
+    schemas.get(key) match {
+      case (`sig`, schema) => reader.schema(schema).parquet(expanded: _*)
+      case _ =>
+        val df = reader.parquet(expanded: _*)
+        schemas.put(key, (sig, df.schema))
+        df
+    }
+  }
+
+  /** [[readParquet]] of one path. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, Seq(path))
+
+  private def expandGlob(path: String): Seq[String] =
+    if (!path.exists("*?[{".contains(_))) Seq(path)
+    else {
+      val p = new Path(path)
+      Option(fsOf(p).globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
+        .map(_.getPath.toString).sorted match {
+        case Seq() => Seq(path)
+        case hits => hits
+      }
+    }
 
   // roots this thread currently holds a build lock for (re-entrancy:
   // a nested build step against the same root just runs)

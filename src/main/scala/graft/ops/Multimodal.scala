@@ -182,7 +182,8 @@ object Multimodal {
       // reads the binary column and times the DECODE path through the
       // real codec — the fixture encoder runs once per corpus, behind
       // the marker, like q262's hash table
-      val media = s.read.parquet(s"${mediaArtifact(s, dir)}/media")
+      val media =
+        ArtifactStore.readParquet(s, s"${mediaArtifact(s, dir)}/media")
       // decode stage: binary column -> typed features through the codec
       media.as[(Long, Array[Byte])].mapPartitions { batch =>
         // per-partition decoder init would happen here (native codec

@@ -96,8 +96,8 @@ object QualityOps {
             (col("n_chars").cast("double") / 1000).as("quality"))
           .write.mode("overwrite").parquet(s"$scratch/v=2")
       }
-      s.read.option("mergeSchema", "true")
-        .parquet(s"$scratch/v=1", s"$scratch/v=2")
+      ArtifactStore.readParquet(s, Seq(s"$scratch/v=1", s"$scratch/v=2"),
+          Map("mergeSchema" -> "true"))
         .select(col("doc_id"), col("lang"), col("quality"))
         .orderBy(col("doc_id"))
     },

@@ -502,7 +502,8 @@ object Round10Final {
       // persisted hash table (phashArtifact); the gate reads it and
       // times the dedup — the shape a production pipeline has, where
       // perceptual hashes are computed at ingest and stored
-      val hashed = s.read.parquet(s"${phashArtifact(s, dir)}/hashes")
+      val hashed =
+        ArtifactStore.readParquet(s, s"${phashArtifact(s, dir)}/hashes")
       hashed
         .withColumn("variant", expr("(doc_id div 64) % 3"))
         .groupBy(col("ahash_hi"), col("ahash_lo"))
@@ -552,7 +553,7 @@ object Round10Final {
         .option("maxFilesPerTrigger", 1).parquet(src)
       val out = Round6Ops.scratchDir(
         s"graft_chunkstream_${VecIndex.dirDigest(dir)}")
-      val q = stream.writeStream.outputMode("append")
+      val q = StreamOps.start(s, stream.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty) {
             // documents are atomic per batch, so per-batch refcounts
@@ -563,10 +564,9 @@ object Round10Final {
                 countDistinct(col("doc_id")).cast("bigint").as("docs_b"))
               .write.mode("overwrite").parquet(s"$out/b$batchId")
           }
-        }
-        .start()
+        })
       Round6Ops.drainTo(q, out)
-      val store = s.read.parquet(s"$out/b*")
+      val store = ArtifactStore.readParquet(s, s"$out/b*")
         .groupBy(col("chash"), col("n_tokens"))
         .agg(sum(col("refs_b")).cast("bigint").as("refs"),
           sum(col("docs_b")).cast("bigint").as("n_docs"))

@@ -139,14 +139,13 @@ object Round11More {
         org.apache.spark.sql.types.StringType)))
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = stream.writeStream.outputMode("append")
+    val q = StreamOps.start(s, stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           ingestWave(s, store, batch, batchId)
           ()
         }
-      }
-      .start()
+      })
     Round6Ops.drainTo(q, store)
     store
   }

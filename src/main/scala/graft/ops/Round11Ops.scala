@@ -455,7 +455,7 @@ object Round11Ops {
       // the gate times is the tuning operation itself: the per-config
       // bucket self-join over the stored band rows.
       val frames = lshFrames(s, dir)
-      val bands = s.read.parquet(s"$frames/bands")
+      val bands = ArtifactStore.readParquet(s, s"$frames/bands")
       val cand = bands.as("a")
         .join(bands.as("b"),
           col("a.config") === col("b.config") &&
@@ -465,7 +465,7 @@ object Round11Ops {
         .select(col("a.config").as("config"),
           col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-      val truth = s.read.parquet(s"$frames/truth")
+      val truth = ArtifactStore.readParquet(s, s"$frames/truth")
       val nt = truth.agg(count(lit(1)).cast("bigint").as("n_truth"))
       val per = cand.join(truth.withColumn("hit", lit(1L)),
           Seq("doc_a", "doc_b"), "left")

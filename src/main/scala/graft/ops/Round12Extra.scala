@@ -236,7 +236,7 @@ object Round12Extra {
       val deltaAgg = occ.filter(col("doc_id") % DELTA_MOD === DELTA_RES)
         .groupBy(col("g"))
         .agg(count(lit(1)).as("dcnt"), min(key).as("dfk"))
-      val merged = s.read.parquet(storeDir)
+      val merged = ArtifactStore.readParquet(s, storeDir)
         .join(deltaAgg, Seq("g"), "full_outer")
         .select(col("g"),
           (coalesce(col("cnt"), lit(0L)) +

@@ -139,11 +139,10 @@ object Round12More {
         org.apache.spark.sql.types.StringType)))
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = stream.writeStream.outputMode("append")
+    val q = StreamOps.start(s, stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) foldCardBatch(s, root, batch, batchId)
-      }
-      .start()
+      })
     Round6Ops.drainTo(q, s"$root/hist")
     root
   }
@@ -188,13 +187,14 @@ object Round12More {
          |FROM base b JOIN pct p ON p.source = b.source
          |ORDER BY b.source""".stripMargin) { (s, dir) =>
       val root = buildCardState(s, dir)
-      val hist = s.read.parquet(s"$root/hist/b*")
+      val hist = ArtifactStore.readParquet(s, s"$root/hist/b*")
         .groupBy(col("source"), col("ntk"))
         .agg(sum(col("cnt")).cast("bigint").as("cnt"))
       val tots = hist.groupBy(col("source"))
         .agg(sum(col("cnt")).cast("bigint").as("n_docs"),
           sum(col("ntk") * col("cnt")).cast("bigint").as("n_tokens"))
-      val uniq = s.read.parquet(s"$root/fps/b*").groupBy(col("source"))
+      val uniq = ArtifactStore.readParquet(s, s"$root/fps/b*")
+        .groupBy(col("source"))
         .agg(count(lit(1)).cast("bigint").as("n_uniq"))
       val wcum = Window.partitionBy(col("source")).orderBy(col("ntk"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

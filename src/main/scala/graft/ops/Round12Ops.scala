@@ -240,7 +240,7 @@ object Round12Ops {
       val root = sketchArtifact(s, dir)
       val K = Round11Extra.KMV_K
       // ---- serving path: ARTIFACT READS ONLY from here down ----
-      val sk = s.read.parquet(s"$root/sketch")
+      val sk = ArtifactStore.readParquet(s, s"$root/sketch")
       val persrc = sk.groupBy(col("source"))
         .agg(max(col("rn")).cast("bigint").as("n_kept"),
           max(when(col("rn") === K, col("b"))).cast("bigint").as("kth"))

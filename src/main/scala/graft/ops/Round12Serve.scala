@@ -143,9 +143,9 @@ object Round12Serve {
          |ORDER BY t.cnt DESC, t.g""".stripMargin) { (s, dir) =>
       val root = ngramArtifact(s, dir)
       // ---- serving path: ARTIFACT READS ONLY from here down ----
-      val gd = s.read.parquet(s"$root/gd")
+      val gd = ArtifactStore.readParquet(s, s"$root/gd")
       val top = gd.orderBy(col("cnt").desc, col("g")).limit(QN)
-      val agg = s.read.parquet(s"$root/cont")
+      val agg = ArtifactStore.readParquet(s, s"$root/cont")
         .join(broadcast(top.select(col("g"))), Seq("g"), "leftsemi")
         .groupBy(col("g"))
         .agg(count(lit(1)).cast("bigint").as("n_next"),

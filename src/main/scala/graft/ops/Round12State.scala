@@ -177,11 +177,10 @@ object Round12State {
         org.apache.spark.sql.types.StringType)))
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = stream.writeStream.outputMode("append")
+    val q = StreamOps.start(s, stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) foldDeconBatch(s, root, bg, batch, batchId)
-      }
-      .start()
+      })
     Round6Ops.drainTo(q, s"$root/docs")
     root
   }
@@ -241,8 +240,8 @@ object Round12State {
       "q288_stream_decontamination",
       Round11Ops.decontamOracleSql) { (s, dir) =>
       val root = buildDeconState(s, dir)
-      val docsB = s.read.parquet(s"$root/docs/b*")
-      val flag = s.read.parquet(s"$root/flag/b*")
+      val docsB = ArtifactStore.readParquet(s, s"$root/docs/b*")
+      val flag = ArtifactStore.readParquet(s, s"$root/flag/b*")
       val persrc = docsB
         .join(flag.select(col("doc_id"), lit(1L).as("hit")),
           Seq("doc_id"), "left")
@@ -346,10 +345,10 @@ object Round12State {
          |ORDER BY scope""".stripMargin) { (s, dir) =>
       val store = bandStore(s, dir)
       // ---- serve: STORE READS ONLY from here down ----
-      val sg = s.read.parquet(s"$store/sg")
-      val base = s.read.parquet(s"$store/base")
+      val sg = ArtifactStore.readParquet(s, s"$store/sg")
+      val base = ArtifactStore.readParquet(s, s"$store/base")
         .withColumn("isd", lit(0))
-      val delta = s.read.parquet(s"$store/delta")
+      val delta = ArtifactStore.readParquet(s, s"$store/delta")
         .withColumn("isd", lit(1))
       val merged = base.unionByName(delta)
       val bk = merged.groupBy(col("band"), col("key"))

@@ -308,9 +308,9 @@ object Round13Ops {
          |ORDER BY q.qid""".stripMargin) { (s, dir) =>
       val root = backoffArtifact(s, dir)
       // ---- serving path: ARTIFACT READS ONLY from here down ----
-      val gd = s.read.parquet(s"$root/gd")
-      val cont = s.read.parquet(s"$root/cont")
-      val qb = s.read.parquet(s"$root/qb")
+      val gd = ArtifactStore.readParquet(s, s"$root/gd")
+      val cont = ArtifactStore.readParquet(s, s"$root/cont")
+      val qb = ArtifactStore.readParquet(s, s"$root/qb")
       val qq = qb.select(explode(array(
           struct(col("bid").as("qid"), lit(0).as("d"), col("a")),
           struct((col("bid") + QB).as("qid"),
@@ -424,7 +424,8 @@ object Round13Ops {
          |ORDER BY k_docs""".stripMargin) { (s, dir) =>
       // ---- serving path: the O(n_seqs) per-sequence digest of the
       // PERSISTED emission (rows/ is the trainer's artifact) ----
-      val perseq = s.read.parquet(s"${packApplyArtifact(s, dir)}/perseq")
+      val perseq = ArtifactStore.readParquet(s,
+        s"${packApplyArtifact(s, dir)}/perseq")
       val per = perseq.groupBy(col("k_docs"))
         .agg(count(lit(1)).cast("bigint").as("n_seqs"),
           sum(col("n_rows")).cast("bigint").as("n_rows"),

@@ -152,7 +152,8 @@ object Round15Ops {
          |FROM s
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val audio = s.read.parquet(s"${audioArtifact(s, dir)}/audio")
+      val audio =
+        ArtifactStore.readParquet(s, s"${audioArtifact(s, dir)}/audio")
       audio.as[(Long, Array[Byte])].mapPartitions { batch =>
         // per-partition decoder scope (a native audio codec handle
         // would be created here) — then stream the batch through it

@@ -584,11 +584,10 @@ object Round6Ops {
       // executions never accumulate artifacts (round-6 advice)
       val out = scratchDir(
         s"graft_streamann_${VecIndex.dirDigest(dir)}")
-      val q = qStream.writeStream.outputMode("append")
-        .foreachBatch(serveBatch(lists, coarse, out) _)
-        .start()
+      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
+        .foreachBatch(serveBatch(lists, coarse, out) _))
       drainTo(q, out)
-      s.read.parquet(s"$out/b*").orderBy(col("qid"), col("rank"))
+      ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     },
 
     // E7: PERSISTED index artifacts — the round-5 verdict's "train once,
@@ -764,7 +763,7 @@ object Round6Ops {
           java.nio.file.Files.createSymbolicLink(link, target)
         streamDir.toString
       }
-    val schema = s.read.parquet(path).schema
+    val schema = ArtifactStore.readParquet(s, path).schema
     s.readStream.schema(schema).parquet(sourceDir)
   }
 }

@@ -207,7 +207,7 @@ object Round7Final {
     */
   private def readEdges(
       s: SparkSession, path: String, srcb: Long): DataFrame = {
-    val raw = s.read.parquet(path)
+    val raw = ArtifactStore.readParquet(s, path)
     raw.select(raw.columns.filterNot(_ == "sb").map(col) :+
       col("sb").cast("bigint").as("sb", sbMeta(srcb)): _*)
   }
@@ -270,7 +270,7 @@ object Round7Final {
       srcb: Long): (DataFrame, DataFrame, DataFrame) =
     (e.select(col("vec_id"), expr(scaledD).as("ivd")),
       readEdges(s, s"$path/edges", srcb),
-      s.read.parquet(s"$path/hard")
+      ArtifactStore.readParquet(s, s"$path/hard")
         .withColumn("acell", col("acell").cast("bigint")))
 
   /** The embeddings frame plus the shared kNN graph's artifact root and
@@ -1361,11 +1361,10 @@ object Round7Final {
         .filter(col("vec_id") < QB)
       val out = Round6Ops.scratchDir(
         s"graft_streamgraph_${VecIndex.dirDigest(dir)}")
-      val q = qStream.writeStream.outputMode("append")
-        .foreachBatch(serveGraphBatch(ivc, edges, hard, cb, out) _)
-        .start()
+      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
+        .foreachBatch(serveGraphBatch(ivc, edges, hard, cb, out) _))
       Round6Ops.drainTo(q, out)
-      s.read.parquet(s"$out/b*").orderBy(col("qid"), col("rank"))
+      ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     }
   )
 }

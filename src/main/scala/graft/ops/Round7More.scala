@@ -205,8 +205,8 @@ object Round7More {
       val d = Tables.table(s, dir, "documents")
       val ck = KMeans.servingK(e)
       val idx = VecIndex.artifacts(s, dir, "full", e)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
       // the eligible-id relation: the lang predicate pushes to the
       // documents scan; the id projection prunes every other column
@@ -287,8 +287,8 @@ object Round7More {
       val e = Tables.table(s, dir, "embeddings")
       val base = e.filter(col("vec_id") % 10 < 8)
       val idx = VecIndex.artifacts(s, dir, "base", base)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       // ---- the NEW-VECTOR STREAM: the arriving batch lands as TWO
       // source files read one per trigger, so the ingest genuinely
       // spans multiple micro-batches (two delta generations whose
@@ -302,15 +302,14 @@ object Round7More {
         .option("maxFilesPerTrigger", 1).parquet(src)
       val out = Round6Ops.scratchDir(
         s"graft_streamingest_${VecIndex.dirDigest(dir)}")
-      val q = newStream.writeStream.outputMode("append")
-        .foreachBatch(ingestBatch(coarse, cbRow, out) _)
-        .start()
+      val q = StreamOps.start(s, newStream.writeStream.outputMode("append")
+        .foreachBatch(ingestBatch(coarse, cbRow, out) _))
       Round6Ops.drainTo(q, out)
       val baseCodes = VecIndex.readCodes(s, idx)
       val deltas = ArtifactStore.listEntries(out)
       val inc =
         if (deltas.isEmpty) baseCodes
-        else baseCodes.unionByName(s.read.parquet(s"$out/b*"))
+        else baseCodes.unionByName(ArtifactStore.readParquet(s, s"$out/b*"))
       val newb = e.filter(col("vec_id") % 10 >= 8)
       Round7Ops.ingestServe(e, newb, coarse, cbRow, inc, idx)
     },
@@ -346,8 +345,8 @@ object Round7More {
          |ORDER BY r.exact DESC, r.vec_id ASC""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
       val idx = VecIndex.artifacts(s, dir, "full", e)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
       val (cand, scored, q0) = serveCandidates(e, coarse, cbRow, codes)
       // stage 1: ADC top-C from stored codes alone
@@ -409,8 +408,8 @@ object Round7More {
       val e = Tables.table(s, dir, "embeddings")
       val d = Tables.table(s, dir, "documents")
       val idx = VecIndex.artifacts(s, dir, "full", e)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
       val (_, scored, _) = serveCandidates(e, coarse, cbRow, codes)
       val srcs = d.select(col("doc_id").as("vec_id"), col("source"))

@@ -155,7 +155,7 @@ object Round7Ops {
       (root, expect, ())) { (_, _) =>
       build.write.mode("overwrite").parquet(s"$root/$file")
     }
-    s.read.parquet(s"$root/$file")
+    ArtifactStore.readParquet(s, s"$root/$file")
   }
 
   /** Referee + serve over an INGESTED index `inc` (base codes ∪ delta
@@ -376,8 +376,8 @@ object Round7Ops {
       val newb = e.filter(col("vec_id") % 10 >= 8)
       // the index, trained and built on BASE only (persisted artifacts)
       val idx = VecIndex.artifacts(s, dir, "base", base)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       // ---- INGEST: assign + encode ONLY the new batch against the
       // broadcast artifacts, append as a delta generation ----
       Pq.pqEncode(KMeans.assign(newb, coarse), cbRow)
@@ -467,8 +467,8 @@ object Round7Ops {
       val e = Tables.table(s, dir, "embeddings")
       // the q224 artifacts, shared (memoized per dir)
       val idx = VecIndex.artifacts(s, dir, "full", e)
-      val coarse = s.read.parquet(s"$idx/coarse")
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
       // ---- DELETE: tombstone ledger written next to the index ----
       e.filter(col("vec_id") % 7 === 3).select(col("vec_id"))

@@ -208,7 +208,7 @@ object Round8Ops {
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val q0 = e.filter(col("vec_id") === 0)
         .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
       // ADC of a bounded visited frame: broadcast ids into the code
@@ -348,7 +348,7 @@ object Round8Ops {
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val q0 = e.filter(col("vec_id") === 0)
         .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
       val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
@@ -454,8 +454,8 @@ object Round8Ops {
       // SERVE through the pointer
       val (_, root) = readPointer(proot)
       val codes = VecIndex.readCodes(s, root)
-      val coarse = s.read.parquet(s"$root/coarse")
-      val cbRow = s.read.parquet(s"$root/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
       val wq = Window.partitionBy(col("vec_id"))
         .orderBy(col("cdot").desc, col("cid").asc)
       val probes = e.filter(col("vec_id") === 0)

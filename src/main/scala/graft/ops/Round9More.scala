@@ -91,8 +91,8 @@ object Round9More {
   private def servedTop10(
       s: SparkSession, e: DataFrame, root: String, codes: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val coarse = s.read.parquet(s"$root/coarse")
-    val cbRow = s.read.parquet(s"$root/pq")
+    val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
+    val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
     val wq = Window.partitionBy(col("vec_id"))
       .orderBy(col("cdot").desc, col("cid").asc)
     val probes = e.filter(col("vec_id") === 0)

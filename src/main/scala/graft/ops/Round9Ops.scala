@@ -186,7 +186,7 @@ object Round9Ops {
     val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Final.CITERS)
     val idx = VecIndex.artifacts(s, dir, "full", e)
     servePqFrame(ivc, edges, hard, cb, VecIndex.readCodes(s, idx),
-      s.read.parquet(s"$idx/pq"),
+      ArtifactStore.readParquet(s, s"$idx/pq"),
       e.filter(col("vec_id") < Round7Final.QB))
   }
 
@@ -312,8 +312,8 @@ object Round9Ops {
       require(!promoted && gen == 1L && root == v1,
         s"rollback violated: promoted=$promoted gen=$gen root=$root")
       val codes = VecIndex.readCodes(s, root)
-      val coarse = s.read.parquet(s"$root/coarse")
-      val cbRow = s.read.parquet(s"$root/pq")
+      val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
+      val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
       val wq = Window.partitionBy(col("vec_id"))
         .orderBy(col("cdot").desc, col("cid").asc)
       val probes = e.filter(col("vec_id") === 0)
@@ -387,17 +387,16 @@ object Round9Ops {
         Round7Final.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val qStream = Round6Ops.embStream(s, dir)
         .filter(col("vec_id") < Round7Final.QB)
       val out = Round6Ops.scratchDir(
         s"graft_streamgraphpq_${VecIndex.dirDigest(dir)}")
-      val q = qStream.writeStream.outputMode("append")
+      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
         .foreachBatch(servePqBatch(ivc, edges, hard, cb, codes, cbRow,
-          out) _)
-        .start()
+          out) _))
       Round6Ops.drainTo(q, out)
-      s.read.parquet(s"$out/b*").orderBy(col("qid"), col("rank"))
+      ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     },
 
     // E7: the BATCH-AVERAGED rank-mode operating curve — q243's
@@ -437,7 +436,7 @@ object Round9Ops {
         Round7Final.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
-      val cbRow = s.read.parquet(s"$idx/pq")
+      val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val batch = e.filter(col("vec_id") < Round7Final.QB)
       val qb = ivc.filter(col("vec_id") < Round7Final.QB)
         .select(col("vec_id").as("qid"), col("ivd").as("qiv"))

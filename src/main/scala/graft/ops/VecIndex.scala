@@ -161,8 +161,8 @@ object VecIndex {
       s: SparkSession, root: String, e: DataFrame, nprobe: Int,
       residual: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val coarse = s.read.parquet(s"$root/coarse")
-    val cbRow = s.read.parquet(s"$root/pq")
+    val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
+    val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
     val codes = readCodes(s, root)
     val wp = Window.partitionBy(col("vec_id"))
       .orderBy(col("cdot").desc, col("cid").asc)
@@ -213,7 +213,7 @@ object VecIndex {
     * (partition columns come last off disk).
     */
   private[ops] def readCodes(s: SparkSession, root: String): DataFrame = {
-    val raw = s.read.parquet(s"$root/codes")
+    val raw = ArtifactStore.readParquet(s, s"$root/codes")
       .withColumn("cid", col("cid").cast("bigint"))
     // restore the WRITTEN column order by construction, not a string
     // sort (lexicographic would order c0,c1,c10,...,c2 at M >= 10 —

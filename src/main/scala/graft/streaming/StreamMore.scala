@@ -202,14 +202,13 @@ object StreamMore {
           .agg(count(lit(1)).as("n"))
           .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
             col("event_type"), col("n"))
-        val q = agg.writeStream.outputMode("update")
+        val q = StreamOps.start(s, agg.writeStream.outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             batch.write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("day")
               .parquet(out)
-          }
-          .start()
+          })
         try q.processAllAvailable() finally q.stop()
         s.read.parquet(out)
           .select(col("day").cast("string"), col("event_type"), col("n"))

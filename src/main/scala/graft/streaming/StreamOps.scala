@@ -1,8 +1,14 @@
 package graft.ops
 
 import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.Tables
 
 /** Structured Streaming surface (SURVEY.md §2.3 E12): tumbling windows
@@ -19,6 +25,22 @@ import graft.Tables
   * the watermark — bounded memory regardless of stream length; session
   * windows merge in-state; dedup state holds one entry per key within the
   * watermark horizon.
+  *
+  * Checkpoints: every streaming query of the repository starts through
+  * [[start]], which pins [[LocalCheckpointFileManager]] (Spark's
+  * `FileSystemBasedCheckpointFileManager` with java.nio writes) in
+  * place of Spark's default `FileContext`-based manager. On the local
+  * filesystem without the native Hadoop library, the `FileContext`
+  * path forks a `readlink` on every rename and a `chmod` on every
+  * create or mkdir: 236 forks in one warm q91 execution at sf0.1.
+  * Spark's `FileSystem` manager alone removes the `readlink`s (60
+  * `chmod`s left); its java.nio writes remove those too, so q91, q55,
+  * q57 and the stream joins start and commit with no fork
+  * (`tools/shellforks.sh` counts them per gate). Spark's checkpoint
+  * checksum files stay on. The bound: a commit is a temp file renamed
+  * over its target, atomic only on a local disk, so [[start]] serves
+  * Spark's local temp checkpoint (under `java.io.tmpdir`) or a `file:`
+  * session checkpoint location, and refuses any other scheme.
   */
 object StreamOps {
 
@@ -61,7 +83,7 @@ object StreamOps {
           java.nio.file.Files.createSymbolicLink(link, target)
         streamDir.toString
       }
-    val raw = spark.read.parquet(path).schema
+    val raw = ArtifactStore.readParquet(spark, path).schema
     val st = spark.readStream.schema(raw).parquet(sourceDir)
     raw("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -97,12 +119,57 @@ object StreamOps {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
+  private val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The ONE `writeStream...start()` of the repository: `w.start()` with
+    * [[LocalCheckpointFileManager]] pinned for the query (the
+    * checkpoint-manager choice in the object doc). The
+    * query clones the session conf inside `start()`, but its file
+    * sources build their offset logs from the caller's session on the
+    * stream thread, so the pin is held until the query has initialized
+    * its sources; the previous value is restored afterwards, also when
+    * `start()` throws. Refuses a session
+    * `spark.sql.streaming.checkpointLocation` on a non-`file:` scheme:
+    * the pinned manager's commit is only atomic where rename(2) is.
+    */
+  private[ops] def start[T](
+      spark: SparkSession, w: DataStreamWriter[T]): StreamingQuery = {
+    spark.conf.getOption("spark.sql.streaming.checkpointLocation")
+      .foreach { loc =>
+        val scheme = new Path(loc).toUri.getScheme
+        require(scheme == null || scheme == "file",
+          "StreamOps.start needs a local checkpoint (its checkpoint " +
+            "manager commits by rename on the local filesystem), but " +
+            s"spark.sql.streaming.checkpointLocation is $loc — unset it " +
+            "to use Spark's local temp checkpoint")
+      }
+    // serialized: two overlapping starts would restore each other's pin
+    synchronized {
+      val prior = spark.conf.getOption(CheckpointManagerKey)
+      spark.conf.set(CheckpointManagerKey,
+        classOf[LocalCheckpointFileManager].getName)
+      try {
+        val q = w.start()
+        q match {
+          case running: StreamingQueryWrapper =>
+            running.streamingQuery.awaitInitialization(60000L)
+          case _ =>
+        }
+        q
+      } finally prior match {
+        case Some(v) => spark.conf.set(CheckpointManagerKey, v)
+        case None => spark.conf.unset(CheckpointManagerKey)
+      }
+    }
+  }
+
   /** Run a streaming DF to a memory sink until drained; return the sink. */
   private def runToMemory(
       spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${sinkId.incrementAndGet()}"
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).start()
+    val q = start(spark,
+      df.writeStream.outputMode(mode).format("memory").queryName(name))
     try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
@@ -184,4 +251,32 @@ object StreamOps {
         .orderBy(col("user_id"), col("event_type"))
       }
     })
+}
+
+/** Spark's `FileSystemBasedCheckpointFileManager` with its two writes
+  * on a local checkpoint — the temp file an atomic create renames into
+  * place, and mkdirs — done through java.nio. Hadoop's local filesystem
+  * follows every create and mkdir with a forked `chmod` when the native
+  * library is missing, and its checksum wrapper repeats that for the
+  * `.crc` sidecar of each file. java.nio creates with the same umask
+  * permissions and no sidecar (reads do not require one). Reads,
+  * listing, the commit rename and deletes stay Spark's, as does every
+  * operation on a non-local path.
+  */
+class LocalCheckpointFileManager(path: Path, conf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(path, conf) {
+
+  private def nio(p: Path) = Paths.get(fs.makeQualified(p).toUri)
+
+  override def mkdirs(p: Path): Unit =
+    if (isLocal) Files.createDirectories(nio(p)) else super.mkdirs(p)
+
+  override def createTempFile(p: Path): FSDataOutputStream =
+    if (!isLocal) super.createTempFile(p)
+    else {
+      val f = nio(p)
+      Files.createDirectories(f.getParent)
+      new FSDataOutputStream(
+        new java.io.BufferedOutputStream(Files.newOutputStream(f)), null)
+    }
 }

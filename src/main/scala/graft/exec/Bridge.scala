@@ -1,7 +1,7 @@
 package graft.exec
 
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import graft.meta.{DataDictionary, SchemaIntrospect, SkeletonGen}
 import graft.nl.{ContextSelect, LlmClient, Prompt}
 import graft.repair.SqlRepair
@@ -13,6 +13,13 @@ import graft.repair.SqlRepair
   *
   * All stages run on the driver; only the final `spark.sql` fans out to
   * executors. The LLM client is injected (offline mock for tests).
+  *
+  * The table is resolved once per ask, and [[Resident]] sees every ask:
+  * from the second question about a small file-backed table in a session
+  * (files within `spark.sql.autoBroadcastJoinThreshold`), that table is
+  * held in Spark's cache — shared by every session of the SparkContext —
+  * and released when the table's plan or files change; a session's first
+  * ask does no extra work. See [[Resident]] for the rule.
   */
 object Bridge {
 
@@ -32,10 +39,11 @@ object Bridge {
       llm: LlmClient,
       topK: Int = 12,
       maxRows: Int = 1000): Either[Int, Answer] = {
-    if (!SchemaIntrospect.tableExists(spark, table))
-      return Left(Runner.ExitCodes.MissingTable)
-
-    val df = spark.table(table)
+    val df = resolve(spark, table) match {
+      case Some(df) => df
+      case None => return Left(Runner.ExitCodes.MissingTable)
+    }
+    Resident.admit(spark, table, df)
     val ddl = SchemaIntrospect.buildTableSchema(df)
     val ctx = ContextSelect.selectRelevantContext(question, dict, topK)
     val sys = Prompt.system(table, ddl, ContextSelect.render(ctx))
@@ -58,10 +66,20 @@ object Bridge {
   /** Dictionary-skeleton generation entry (reference --generate-schema,
     * query_llm.py:465-470): introspect and write, skipping the LLM flow.
     */
-  def generateSkeleton(spark: SparkSession, table: String, outPath: String): Int = {
-    if (!SchemaIntrospect.tableExists(spark, table))
-      return Runner.ExitCodes.MissingTable
-    SkeletonGen.write(table, spark.table(table), outPath)
-    0
-  }
+  def generateSkeleton(spark: SparkSession, table: String, outPath: String): Int =
+    resolve(spark, table) match {
+      case Some(df) => SkeletonGen.write(table, df, outPath); 0
+      case None => Runner.ExitCodes.MissingTable
+    }
+
+  /** `spark.table`, with Spark's TABLE_OR_VIEW_NOT_FOUND as None: one
+    * catalog resolution, case-insensitive like `tableExists`. Any other
+    * failure propagates, as `tableExists`' did — a malformed name still
+    * fails to parse.
+    */
+  private def resolve(spark: SparkSession, table: String): Option[DataFrame] =
+    try Some(spark.table(table))
+    catch {
+      case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => None
+    }
 }

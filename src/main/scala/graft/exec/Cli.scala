@@ -10,6 +10,9 @@ import graft.nl.{LlmClient, MockLlmClient}
   *   ask      --data <dir-or-parquet> --table T --question Q
   *            [--llm gemini|mistral] [--model M]
   *            [--schema-meta dict.json] [--max-rows N]   (query_llm.py)
+  *   ask      ... --questions FILE   every line of FILE (`-`: stdin) is a
+  *            question, all asked in one session; exits with the first
+  *            failing question's code
   *   sql      --data ... --table T --query SQL [--max-rows N] (query_db.py)
   *   describe --data ... --table T                     (describe_table.py)
   *   gen-schema --data ... --table T --schema-out F    (--generate-schema)
@@ -107,10 +110,6 @@ object Cli {
             Bridge.generateSkeleton(spark, table,
               opts.getOrElse("schema-out", s"$table.schema.json"))
           case "ask" =>
-            if (!SchemaIntrospect.tableExists(spark, table)) {
-              System.err.println(s"table not found: $table")
-              Runner.ExitCodes.MissingTable
-            } else {
             val dict = opts.get("schema-meta").map(DataDictionary.load)
               .getOrElse(DataDictionary(table = table))
             val llm = LlmClient.fromEnv(
@@ -121,15 +120,29 @@ object Cli {
                 new MockLlmClient(fallback =
                   s"SELECT * FROM $table LIMIT 10")
             }
-            Bridge.ask(spark, table, opts.getOrElse("question", ""),
-              dict, llm, maxRows = maxRows) match {
-              case Right(ans) =>
-                println(s"Cleaned SQL: ${ans.trace.cleanedSql}")
-                println(Runner.format(ans.result))
-                0
-              case Left(ec) => ec
+            val questions = opts.get("questions") match {
+              case Some(f) =>
+                val src =
+                  if (f == "-") scala.io.Source.stdin
+                  else scala.io.Source.fromFile(f, "UTF-8")
+                try src.getLines().map(_.trim).filter(_.nonEmpty).toList
+                finally if (f != "-") src.close()
+              case None => List(opts.getOrElse("question", ""))
             }
+            val codes = questions.map { q =>
+              if (opts.contains("questions")) println(s"Question: $q")
+              Bridge.ask(spark, table, q, dict, llm, maxRows = maxRows) match {
+                case Right(ans) =>
+                  println(s"Cleaned SQL: ${ans.trace.cleanedSql}")
+                  println(Runner.format(ans.result))
+                  0
+                case Left(Runner.ExitCodes.MissingTable) =>
+                  System.err.println(s"table not found: $table")
+                  Runner.ExitCodes.MissingTable
+                case Left(ec) => ec
+              }
             }
+            codes.find(_ != 0).getOrElse(0)
           case other =>
             System.err.println(s"unknown command: $other")
             Runner.ExitCodes.OpenError

@@ -54,6 +54,9 @@ case class DataDictionary(
     rules: Seq[String] = Nil) {
   lazy val byName: Map[String, ColumnMeta] =
     columns.map(c => c.name.toLowerCase -> c).toMap
+  /** The repair regexes of this dictionary, compiled on first use. */
+  private[graft] lazy val repairPatterns: graft.repair.SqlRepair.Patterns =
+    new graft.repair.SqlRepair.Patterns(this)
 }
 
 /** JSON codec for the dictionary (P6, query_llm.py:79-82). Jackson tree

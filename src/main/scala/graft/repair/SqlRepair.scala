@@ -48,14 +48,21 @@ object SqlRepair {
     * rewrite over every remaining quoted literal (a None mapping turns the
     * literal into SQL NULL).
     */
-  def canonicalizeLiterals(sql: String, dict: DataDictionary): String = {
-    var out = sql
-    // one pass per column IN DICTIONARY ORDER, case rule then map_values —
-    // matching the reference's loop structure (query_llm.py:299-341): if
-    // two columns map the same literal differently, the FIRST column's
-    // rewrite fires (and later columns see the already-rewritten text)
-    dict.columns.foreach { c =>
-      c.canonicalization.caseRule.foreach { rule =>
+  def canonicalizeLiterals(sql: String, dict: DataDictionary): String =
+    dict.repairPatterns.canon.foldLeft(sql)((out, rewrite) => rewrite(out))
+
+  /** A dictionary's repair regexes, compiled once per dictionary (held by
+    * `DataDictionary.repairPatterns`) instead of once per ask:
+    * [[canonicalizeLiterals]]' rewrites, one per case rule and per
+    * map_values entry, in dictionary order (the reference's loop
+    * structure, query_llm.py:299-341: if two columns map the same literal
+    * differently, the FIRST column's rewrite fires and later columns see
+    * the already-rewritten text), and the synonym patterns in
+    * [[buildSynonymMap]] order.
+    */
+  private[graft] final class Patterns(dict: DataDictionary) {
+    val canon: Seq[String => String] = dict.columns.flatMap { c =>
+      val caseRule = c.canonicalization.caseRule.map { rule =>
         val apply: String => String =
           if (rule == "lower") _.toLowerCase else _.toUpperCase
         // col = 'LIT'  |  LOWER(col) = 'LIT'  (op: = != <> LIKE ILIKE)
@@ -63,24 +70,28 @@ object SqlRepair {
           """(?i)((?:lower|upper)\s*\(\s*""" + Pattern.quote(c.name) +
             """\s*\)|\b""" + Pattern.quote(c.name) +
             """\b)(\s*(?:=|!=|<>|\s+i?like\s+)\s*)'([^']*)'""")
-        val m = p.matcher(out)
-        val sb = new java.lang.StringBuilder
-        while (m.find()) {
-          m.appendReplacement(sb, Matcher.quoteReplacement(
-            m.group(1) + m.group(2) + "'" + apply(m.group(3)) + "'"))
+        (sql: String) => {
+          val m = p.matcher(sql)
+          val sb = new java.lang.StringBuilder
+          while (m.find()) {
+            m.appendReplacement(sb, Matcher.quoteReplacement(
+              m.group(1) + m.group(2) + "'" + apply(m.group(3)) + "'"))
+          }
+          m.appendTail(sb)
+          sb.toString
         }
-        m.appendTail(sb)
-        out = sb.toString
       }
       // this column's map_values, applied globally to any matching quoted
       // literal, case-insensitively, in JSON entry order (query_llm.py:334)
-      c.canonicalization.mapValues.foreach { case (src, dst) =>
+      val mapValues = c.canonicalization.mapValues.map { case (src, dst) =>
         val p = Pattern.compile("""(?i)'""" + Pattern.quote(src) + "'")
-        out = p.matcher(out).replaceAll(Matcher.quoteReplacement(
-          dst.map("'" + _ + "'").getOrElse("NULL")))
+        val to = Matcher.quoteReplacement(dst.map("'" + _ + "'").getOrElse("NULL"))
+        (sql: String) => p.matcher(sql).replaceAll(to)
       }
+      caseRule.toSeq ++ mapValues
     }
-    out
+    val synonyms: Seq[(String, String, Pattern)] =
+      synonymPatterns(buildSynonymMap(dict))
   }
 
   // ---- P15-P17: fix_common_mistakes (query_llm.py:225-265) ----
@@ -103,17 +114,26 @@ object SqlRepair {
   def rewriteSynonyms(
       sql: String,
       synonyms: Map[String, String],
+      realColumns: Seq[String]): String =
+    applySynonyms(sql, synonymPatterns(synonyms), realColumns)
+
+  private def applySynonyms(
+      sql: String,
+      synonyms: Seq[(String, String, Pattern)],
       realColumns: Seq[String]): String = {
     val real = realColumns.map(_.toLowerCase).toSet
-    var out = sql
-    synonyms.foreach { case (alias, canonical) =>
-      if (!real.contains(alias) && real.contains(canonical.toLowerCase)) {
-        out = Pattern.compile("""(?i)\b""" + Pattern.quote(alias) + """\b""")
-          .matcher(out).replaceAll(Matcher.quoteReplacement(canonical))
-      }
+    synonyms.foldLeft(sql) { case (out, (alias, canonical, p)) =>
+      if (!real.contains(alias) && real.contains(canonical.toLowerCase))
+        p.matcher(out).replaceAll(Matcher.quoteReplacement(canonical))
+      else out
     }
-    out
   }
+
+  private def synonymPatterns(synonyms: Map[String, String]): Seq[(String, String, Pattern)] =
+    synonyms.toSeq.map { case (alias, canonical) =>
+      (alias, canonical,
+        Pattern.compile("""(?i)\b""" + Pattern.quote(alias) + """\b"""))
+    }
 
   /** P16: the reference's hardcoded `'ONLINE'`→`'online'` literal fix
     * (query_llm.py:249), kept for behavior parity.
@@ -147,7 +167,7 @@ object SqlRepair {
       sql: String,
       dict: DataDictionary,
       realColumns: Seq[String]): String = {
-    val s1 = rewriteSynonyms(sql, buildSynonymMap(dict), realColumns)
+    val s1 = applySynonyms(sql, dict.repairPatterns.synonyms, realColumns)
     val s2 = fixHardcodedLiterals(s1)
     fuzzyRepairIdentifiers(s2, realColumns)
   }

@@ -72,6 +72,21 @@ class BridgeSpec extends AnyFunSuite {
       new MockLlmClient()) == Left(Runner.ExitCodes.MissingTable))
   }
 
+  test("ask: the table name resolves case-insensitively") {
+    registerQueuedata()
+    val llm = new MockLlmClient(fallback = "SELECT COUNT(*) FROM queuedata")
+    val Right(ans) = Bridge.ask(spark, "QueueData", "how many", dict, llm)
+    assert(ans.result.rows.map(_.getLong(0)) == Seq(4L))
+  }
+
+  test("ask: a malformed table name fails to parse, as tableExists does") {
+    val viaProbe = intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      SchemaIntrospect.tableExists(spark, "bad name!"))
+    val viaAsk = intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      Bridge.ask(spark, "bad name!", "q", dict, new MockLlmClient()))
+    assert(viaAsk.getCondition == viaProbe.getCondition)
+  }
+
   test("ask: broken SQL from the LLM yields exit code 4") {
     registerQueuedata()
     val llm = new MockLlmClient(fallback = "SELEC nonsense FRM nowhere")

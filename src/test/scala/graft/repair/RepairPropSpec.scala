@@ -70,4 +70,21 @@ object RepairPropSpec extends Properties("SqlRepair") {
       val r = SequenceMatcher.ratio(a, b)
       r >= 0.0 && r <= 1.0 && (!(a == b && a.nonEmpty) || r == 1.0)
     }
+
+  // get_close_matches(word, ps, 1, cutoff) with every candidate scored:
+  // the highest SequenceMatcher(None, x, word).ratio() at or above the
+  // cutoff, equal ratios going to the largest x (heapq.nlargest)
+  def unfilteredClosest(word: String, ps: Seq[String], cutoff: Double): Option[String] =
+    ps.map(x => (SequenceMatcher.ratio(x, word), x)).filter(_._1 >= cutoff)
+      .maxOption(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+      .map(_._2)
+
+  val shortWord: Gen[String] =
+    Gen.choose(0, 7).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', 'd')).map(_.mkString))
+
+  property("closestMatch with difflib's quick bounds equals scoring every candidate") =
+    forAll(shortWord, Gen.listOf(shortWord),
+        Gen.oneOf(Gen.choose(0.0, 1.0), Gen.oneOf(0.5, 0.6, 0.75, 0.8, 0.86))) { (w, ps, cutoff) =>
+      SequenceMatcher.closestMatch(w, ps, cutoff) == unfilteredClosest(w, ps, cutoff)
+    }
 }

@@ -42,6 +42,53 @@ class SequenceMatcherSpec extends AnyFunSuite {
     assert(SequenceMatcher.closestMatch("stae", Seq("status", "state"), 0.8)
       .contains("state"))
   }
+
+  // recorded from CPython 3.11.7 difflib: the ratio is not symmetric —
+  // (a, b, SequenceMatcher(None, a, b).ratio(), ...(None, b, a).ratio())
+  val asymmetric = Seq(
+    ("qcbqc", "bbbcq", 0.2, 0.4),
+    ("qqqbc", "qcqac", 0.6, 0.4),
+    ("aqccbaa", "qabaq", 0.3333333333333333, 0.5),
+    ("qqqqbc", "acaqcq", 0.3333333333333333, 0.16666666666666666),
+    ("bqbabaa", "acaaqb", 0.3076923076923077, 0.46153846153846156),
+    ("qac", "qqccabc", 0.6, 0.4))
+
+  test("ratio matches CPython difflib in both argument orders") {
+    asymmetric.foreach { case (a, b, ab, ba) =>
+      assert(SequenceMatcher.ratio(a, b) == ab, s"ratio($a, $b)")
+      assert(SequenceMatcher.ratio(b, a) == ba, s"ratio($b, $a)")
+    }
+  }
+
+  test("quick bounds match CPython difflib") {
+    // (a, b, real_quick_ratio, quick_ratio, ratio), recorded
+    Seq(("queu", "queue", 0.8888888888888888, 0.8888888888888888, 0.8888888888888888),
+      ("abcd", "dcba", 1.0, 1.0, 0.25),
+      ("status", "tatus s", 0.9230769230769231, 0.9230769230769231, 0.7692307692307693))
+      .foreach { case (a, b, rq, q, r) =>
+        assert(SequenceMatcher.realQuickRatio(a, b) == rq, s"real_quick_ratio($a, $b)")
+        assert(SequenceMatcher.quickRatio(a, b) == q, s"quick_ratio($a, $b)")
+        assert(SequenceMatcher.ratio(a, b) == r, s"ratio($a, $b)")
+      }
+  }
+
+  test("closestMatch equals CPython get_close_matches(word, ps, 1, cutoff)") {
+    // (word, possibilities, cutoff, recorded result)
+    Seq(
+      // equal ratios: heapq.nlargest keeps the largest candidate
+      ("queu", Seq("queue", "queus"), 0.86, Some("queus")),
+      ("queu", Seq("queus", "queue"), 0.86, Some("queus")),
+      ("countyr", Seq("country", "county"), 0.6, Some("county")),
+      // scored as SequenceMatcher(None, candidate, word), not (word, candidate)
+      ("dcbdb", Seq("dbcb", "bdca", "cba"), 0.6, None),
+      ("dccaba", Seq("bdadab", "dbacd", "bdaa"), 0.6, None),
+      ("acbddb", Seq("dabdcb", "bdbd", "dcdd"), 0.6, Some("dabdcb")),
+      ("babd", Seq("cbcaa", "cdc", "bddabc"), 0.6, None))
+      .foreach { case (w, ps, cutoff, expected) =>
+        assert(SequenceMatcher.closestMatch(w, ps, cutoff) == expected,
+          s"get_close_matches($w, $ps, 1, $cutoff)")
+      }
+  }
 }
 
 class SqlRepairSpec extends AnyFunSuite {

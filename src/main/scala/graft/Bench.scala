@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: times every SparkEntry query at the dir given
   * by SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   *
@@ -14,24 +12,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE coalescing pinned to Spark's own defaults. parallelismFirst=
-    // false (size-honoring coalescing) was measured in round 16 and
-    // REJECTED: post-shuffle BYTES do not measure compute, so the 64m
-    // advisory collapsed the CPU-bound string gates to single-task
-    // stages (q204 2.9 s -> 7.2 s, q206 2.9 s -> 7.2 s at sf0.1/32c —
-    // every shuffle stage ran 1 task) while the sub-second tail gates
-    // moved only within noise.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     // retention sweep: UUID-suffixed tempRoot scratch from previous runs
     // (round-14 verdict, "What's missing 3") — and this run's own on exit
     graft.ops.ArtifactStore.gcScratch()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan audit: prints the formatted plan for the scale-critical
@@ -12,20 +11,11 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    // same CPU env and AQE stance as Bench so the dumped plans are
-    // the shapes the bench actually times (at sf0.001 AQE broadcasts
+    // same CPU env and session as Bench so the dumped plans are the
+    // shapes the bench actually times (at sf0.001 AQE broadcasts
     // everything and the structural differences disappear)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val targets =

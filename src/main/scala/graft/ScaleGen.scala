@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for slope measurement.
@@ -81,14 +81,8 @@ object ScaleGen {
     val dst    = args.lift(1).getOrElse("/root/repo/testdata/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", "32",
+      Some("graft-scalegen"))
 
     // readNormalized: the driver writes events.ts as TIMESTAMP(NANOS),
     // which Spark cannot represent — the same ns→µs truncation every query

@@ -72,14 +72,15 @@ object Tables {
   /** Register all testdata tables as temp views (idempotent per session
     * while the dir is unchanged; re-points every view when a different dir
     * is requested).
+    *
+    * Also one of the two seams that install graft's SQL function catalog
+    * ([[graft.functions.Functions.install]]; the other is
+    * `StreamOps.start`): every gate passes through here before it builds
+    * expressions, so no gate registers a function itself.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     if (registered.get(spark) != dir) {
-      // codegen kernel functions ride the view registration: every
-      // query path passes through here before building expressions
-      graft.functions.ArrayDot.register(spark)
-      graft.functions.VecDot.register(spark)
-      graft.functions.TextHash.register(spark)
+      graft.functions.Functions.install(spark)
       names.foreach { n =>
         load(spark, dir, n).createOrReplaceTempView(n)
       }

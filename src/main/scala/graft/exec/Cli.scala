@@ -1,6 +1,5 @@
 package graft.exec
 
-import org.apache.spark.sql.SparkSession
 import graft.meta.{DataDictionary, SchemaIntrospect}
 import graft.nl.{LlmClient, MockLlmClient}
 
@@ -42,15 +41,9 @@ object Cli {
     val table = opts.getOrElse("table", "queuedata")
     val maxRows = opts.get("max-rows").map(_.toInt).getOrElse(1000)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), Some("graft-cli"))
 
     val code =
       try {

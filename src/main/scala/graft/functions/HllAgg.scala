@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -109,11 +108,4 @@ case class HllAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): HllAgg =
     copy(child = newChildren.head)
-}
-
-object HllAgg {
-  /** Register as SQL-callable `graft_hll(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll", exprs => HllAgg(exprs.head), "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -314,8 +314,8 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Column-level constructors (no SQL registration required) plus an
-  * optional SQL registration for specs/ad-hoc use.
+/** Column-level constructors (no SQL registration required); the SQL
+  * forms are in [[Functions]].
   */
 object TextHash {
   def charFold(c: Column, seed: Long, mult: Long): Column =
@@ -328,17 +328,4 @@ object TextHash {
     org.apache.spark.sql.GraftPlanBridge.columnOf(PosGrams(org.apache.spark.sql.GraftPlanBridge.expressionOf(c), w))
   def minHashSig(c: Column): Column =
     org.apache.spark.sql.GraftPlanBridge.columnOf(MinHashSig(org.apache.spark.sql.GraftPlanBridge.expressionOf(c)))
-
-  /** Register the fixed-arity SQL forms (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "token_hashes_pos", es => TokenHashesPos(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "token_hashes", es => TokenHashesDistinct(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_fold", es => CharFold(es.head,
-        es(1).eval().asInstanceOf[Number].longValue(),
-        es(2).eval().asInstanceOf[Number].longValue()), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,11 +90,4 @@ case class TokenJaccard(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TokenJaccard =
     copy(left = newLeft, right = newRight)
-}
-
-object TokenJaccard {
-  /** Register `token_jaccard` for SQL/expr use in this session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_jaccard", exprs => TokenJaccard(exprs.head, exprs(1)), "built-in")
 }

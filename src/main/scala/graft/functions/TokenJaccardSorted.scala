@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,22 +89,4 @@ case class TokenJaccardSorted(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TokenJaccardSorted =
     copy(left = newLeft, right = newRight)
-}
-
-object TokenJaccardSorted {
-  /** Register `token_jaccard_sorted` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_jaccard_sorted",
-      {
-        case Seq(a, b) => TokenJaccardSorted(a, b)
-        case exprs =>
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`token_jaccard_sorted`",
-              "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-      }, "built-in")
 }

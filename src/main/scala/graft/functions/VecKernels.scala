@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -293,21 +292,4 @@ case class AdcCodes(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): AdcCodes =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object VecDot {
-  /** Register the SQL forms (idempotent); pq_encode/adc_codes bind
-    * Pq's geometry (M=4, SUB=16).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "int_dot", es => IntDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "double_dot", es => DoubleDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pq_encode", es => PqEncodeExpr(es.head, es(1), 4, 16), "built-in")
-    reg.createOrReplaceTempFunction(
-      "adc_codes", es => AdcCodes(es.head, es(1), es(2), 16), "built-in")
-  }
 }

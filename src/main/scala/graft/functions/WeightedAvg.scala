@@ -35,9 +35,4 @@ object WeightedAvg {
       override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
       override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
     }
-
-  /** Register as SQL-callable `wavg(price, weight)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("wavg",
-      org.apache.spark.sql.functions.udaf(aggregator, Encoders.product[In]))
 }

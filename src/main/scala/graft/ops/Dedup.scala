@@ -228,7 +228,6 @@ object Dedup {
         |WHERE CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE)
         |    / len(list_distinct(list_concat(a.tk, b.tk))) >= 0.8
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      graft.functions.TokenJaccard.register(s)
       val docs = Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"),
           array_distinct(split(col("text"), " ")).as("tk"))
@@ -369,7 +368,6 @@ object Dedup {
         col("embedding").as("emb_a"))
       val b = asg.select(col("cid"), col("vec_id").as("vec_b"),
         col("embedding").as("emb_b"))
-      graft.functions.ArrayDot.register(s)
       // codegen dot (same ascending sequential fold as the oracle)
       val dot = expr("array_dot(emb_a, emb_b)")
       a.join(b, Seq("cid"))

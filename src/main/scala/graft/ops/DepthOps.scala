@@ -166,7 +166,6 @@ object DepthOps {
         |SELECT a AS doc_id, MIN(b) AS component
         |FROM reach GROUP BY a
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.TokenJaccard.register(s)
       val docs = Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"),
           array_distinct(split(col("text"), " ")).as("tk"))

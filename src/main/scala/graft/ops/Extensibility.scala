@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{ArrayDot, WeightedAvg}
 
 /** UDF/UDAF/custom-Expression surface (SURVEY.md §2.3 E13 + §4.3):
   * a typed Aggregator registered for SQL, and the native codegen
@@ -23,7 +22,6 @@ object Extensibility {
         |FROM lineitem
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      WeightedAvg.register(s)
       Tables.registerAll(s, dir)
       s.sql(
         """SELECT l_returnflag,
@@ -46,7 +44,6 @@ object Extensibility {
         |WHERE e.vec_id <> 0
         |ORDER BY cosine DESC, vec_id ASC
         |LIMIT 10""".stripMargin) { (s, dir) =>
-      ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       e.filter(col("vec_id") =!= 0)
@@ -71,7 +68,6 @@ object Extensibility {
         |FROM events
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, dir) =>
-      graft.functions.HllAgg.register(s)
       Tables.registerAll(s, dir)
       s.sql(
         """SELECT event_type,

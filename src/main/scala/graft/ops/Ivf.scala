@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.ArrayDot
 
 /** IVF-style ANN + vector aggregation (SURVEY.md §2.3 E7 scale path #2).
   *
@@ -51,7 +50,6 @@ object Ivf {
          |WHERE l.vec_id <> 0
          |ORDER BY cosine DESC, vec_id ASC
          |LIMIT 5""".stripMargin) { (s, dir) =>
-      ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), ITERS)
       // inverted lists: map-side argmax assignment under the broadcast

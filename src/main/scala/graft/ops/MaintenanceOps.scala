@@ -86,7 +86,6 @@ object MaintenanceOps {
          |FROM nrm
          |GROUP BY source
          |ORDER BY source""".stripMargin) { (s, dir) =>
-      graft.functions.NfcNormalize.register(s)
       Tables.table(s, dir, "documents")
         .select(col("source"),
           when(col("doc_id") % 3 === 0,

@@ -63,7 +63,6 @@ object PipelineOps {
     */
   private[ops] def dedupApply(
       s: SparkSession, dir: String, maxSingleTaskEdges: Long): DataFrame = {
-    graft.functions.TokenJaccard.register(s)
     val docs = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"),
         array_distinct(split(col("text"), " ")).as("tk"))
@@ -487,7 +486,6 @@ object PipelineOps {
         |FROM b LEFT JOIN ex ON b.doc_id = ex.doc_id
         |LEFT JOIN nd ON b.doc_id = nd.doc_id
         |ORDER BY b.doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.TokenJaccard.register(s)
       val d = Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"),
           md5(col("text")).as("h"),
@@ -830,7 +828,6 @@ object PipelineOps {
          |FROM rb FULL OUTER JOIN ra ON rb.doc_id = ra.vec_id
          |ORDER BY rrf DESC, doc_id
          |LIMIT 10""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
       val wb = Window.orderBy(round(col("bm25"), 6).desc, col("doc_id"))
       val rb = bm25Scored(s, dir)
         .withColumn("r", row_number().over(wb))

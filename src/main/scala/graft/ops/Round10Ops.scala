@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.ArrayDot
 
 /** Round-10 production shapes: the evaluation, serving-efficiency and
   * governance operators a training-data platform runs AROUND the
@@ -118,7 +117,6 @@ object Round10Ops {
          |  p.hits10, t.mrr6, t.mhits6
          |FROM perq2 p, tot t
          |ORDER BY p.qid""".stripMargin) { (s, dir) =>
-      ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), ITERS)
       val lists = KMeans.assign(e, cb)

@@ -127,7 +127,6 @@ object Round4Final {
         |SELECT vec_id, neg_id, ROUND(dot, 6) AS cosine
         |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin) {
       (s, dir) =>
-      graft.functions.ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val anchors = e.filter(col("vec_id") < 50)
         .select(col("vec_id"), col("label").as("a_label"),
@@ -308,7 +307,6 @@ object Round4Final {
   private[graft] def winnowKeys(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // codegen kernel (graft.functions.CharFold) — identical fold
-    graft.functions.TextHash.register(df.sparkSession)
     val charFold = (g: String) => s"char_fold($g, 7, 131)"
     df.withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 6)

@@ -306,7 +306,6 @@ object Round4More {
         |    CAST(COUNT(DISTINCT vb) AS BIGINT) AS n_dropped
         |  FROM prs GROUP BY cid) p USING (cid)
         |ORDER BY m.cid""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val uni = e.select(col("vec_id"), col("embedding"))
         .unionAll(e.filter(col("vec_id") % 25 === 0)

@@ -663,11 +663,6 @@ object Round6Ops {
       lists: DataFrame, coarse: DataFrame, out: String)(
       batch: DataFrame, batchId: Long): Unit = {
     if (!batch.isEmpty) {
-      // per-batch registration: the micro-batch runs on a CLONED session
-      // whose function registry is a snapshot from .start() — register
-      // explicitly (like ingestBatch/servePqBatch/serveGraphBatch) rather
-      // than rely on the snapshot having the kernels
-      graft.functions.VecDot.register(batch.sparkSession)
       val qb = batch.select(col("vec_id").as("qid"),
         col("embedding").as("qe"),
         expr(KMeans.scaleExpr("embedding")).as("qs"))

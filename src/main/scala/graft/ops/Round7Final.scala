@@ -278,8 +278,6 @@ object Round7Final {
     */
   private def graphIndex(s: SparkSession, dir: String)
       : (DataFrame, String, Long) = {
-    graft.functions.ArrayDot.register(s)
-    graft.functions.VecDot.register(s)
     val e = Tables.table(s, dir, "embeddings")
     val (path, srcb) = graphs((dir, "knn"),
         VecIndex.tableFileSig(dir, "embeddings")) {
@@ -445,8 +443,6 @@ object Round7Final {
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
       batch: DataFrame): DataFrame = {
     val bs = batch.sparkSession
-    graft.functions.ArrayDot.register(bs)
-    graft.functions.VecDot.register(bs)
     val qb = batch.select(col("vec_id").as("qid"),
       expr(scaledD).as("qiv"))
     val wp = Window.partitionBy(col("qid"))
@@ -920,8 +916,6 @@ object Round7Final {
       // unchanged by definition of "touched"); serving then runs the
       // beam search FROM THE PERSISTED v2 FILES with the exact-top-10
       // referee.
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val base = e.filter(col("vec_id") % 10 < 8)
       val cb = KMeans.codebook(s, base, KMeans.servingK(base), CITERS)

@@ -130,7 +130,6 @@ object Round7More {
       coarse: DataFrame, cbRow: DataFrame, out: String)(
       batch: DataFrame, batchId: Long): Unit =
     if (!batch.isEmpty) {
-      graft.functions.VecDot.register(batch.sparkSession)
       Pq.pqEncode(KMeans.assign(batch, coarse), cbRow)
         .write.mode("overwrite").parquet(s"$out/b$batchId")
     }

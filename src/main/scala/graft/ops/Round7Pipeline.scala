@@ -86,7 +86,6 @@ object Round7Pipeline {
          |SELECT b.val_doc, b.train_doc, b.jac6, v.n_val, l.n_leaked
          |FROM best b, nv v, nl l
          |ORDER BY b.val_doc""".stripMargin) { (s, dir) =>
-      graft.functions.TokenJaccardSorted.register(s)
       // tk is sorted ONCE per document so the per-pair kernel is the
       // allocation-free sorted merge (see TokenJaccardSorted) — the
       // jaccard VALUE is set-semantic and unchanged

@@ -201,8 +201,6 @@ object Round8Ops {
          |  LIMIT 10) r
          |LEFT JOIN tope t ON r.vec_id = t.vec_id
          |ORDER BY r.exact DESC, r.vec_id ASC""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
@@ -278,8 +276,6 @@ object Round8Ops {
          |  LIMIT 10) s
          |LEFT JOIN topef t ON s.vec_id = t.vec_id, nv n, ne e2
          |ORDER BY s.exact DESC, s.vec_id ASC""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val d = Tables.table(s, dir, "documents")
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
@@ -341,8 +337,6 @@ object Round8Ops {
          |     JOIN tope t ON t.vec_id = v.vec_id) AS n_hit)
          |SELECT * FROM me UNION ALL SELECT * FROM ma
          |ORDER BY mode""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)

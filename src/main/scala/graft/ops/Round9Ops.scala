@@ -133,8 +133,6 @@ object Round9Ops {
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
       codes: DataFrame, cbRow: DataFrame, batch: DataFrame): DataFrame = {
     val bs = batch.sparkSession
-    graft.functions.ArrayDot.register(bs)
-    graft.functions.VecDot.register(bs)
     val qb = batch.select(col("vec_id").as("qid"),
       expr(Round7Final.scaledD).as("qiv"))
     val qsb = batch.select(col("vec_id").as("qid"),
@@ -428,8 +426,6 @@ object Round9Ops {
          |  CAST(n_hit AS DOUBLE) / ${Round7Final.QB * 10} AS recall
          |FROM (SELECT * FROM me UNION ALL SELECT * FROM ma)
          |ORDER BY mode""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e),

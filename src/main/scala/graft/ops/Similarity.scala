@@ -77,7 +77,6 @@ object Similarity {
       s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame,
       w: Int): org.apache.spark.sql.DataFrame = {
-    graft.functions.ArrayDot.register(s)
     val planes = (0 until w).map { j =>
       typedLit((0 until 64).map { i =>
         ((1103515245L * (j * 64 + i) + 12345) % 2147483648L) /
@@ -220,7 +219,6 @@ object Similarity {
     Q(
       "q53_minhash_lsh_ml",
       exactShingleJaccardSql) { (s, dir) =>
-      graft.functions.TokenJaccardSorted.register(s)
       // Shingle arrays are sorted ONCE per doc (array_sort is per-doc,
       // not per-pair) so the exact rescoring can use the zero-allocation
       // merge kernel token_jaccard_sorted instead of per-pair hash sets —
@@ -337,7 +335,6 @@ object Similarity {
         |WHERE CAST(len(list_intersect(a.sg, b.sg)) AS DOUBLE)
         |    / len(list_distinct(list_concat(a.sg, b.sg))) >= 0.8
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      graft.functions.TokenJaccard.register(s)
       val shingles =
         "array_distinct(transform(sequence(0, size(toks) - 3), " +
           "i -> concat_ws(' ', element_at(toks, i + 1), " +

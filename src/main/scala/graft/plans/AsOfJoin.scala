@@ -135,9 +135,9 @@ object AsOfStrategy extends SparkStrategy {
 /** Public API: `AsOfJoin.asof(left, right, "user_id", "ts", "value")`. */
 object AsOfJoin {
 
-  /** Ensure the planner strategy is installed on this session (runtime-
-    * registerable via the public experimental API; GraftExtensions is the
-    * config-time alternative).
+  /** Ensure the planner strategy is installed on this session (through
+    * the public experimental API). [[asof]] calls it on every use, and no
+    * other code builds an `AsOfJoinNode`, so no session needs it earlier.
     */
   def install(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -66,13 +66,13 @@ object FuzzyResolveColumns extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension installing the graft Catalyst customizations:
+/** Session extension installing the opt-in fuzzy column resolution rule:
   * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`. The as-of
+  * planner strategy is not part of it: `AsOfJoin.asof`, the only producer
+  * of `AsOfJoinNode`, installs that on the session it plans on.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     e.injectResolutionRule(_ => FuzzyResolveColumns)
-    e.injectPlannerStrategy(_ => AsOfStrategy)
-  }
 }

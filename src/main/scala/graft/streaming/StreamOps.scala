@@ -132,6 +132,13 @@ object StreamOps {
     * `start()` throws. Refuses a session
     * `spark.sql.streaming.checkpointLocation` on a non-`file:` scheme:
     * the pinned manager's commit is only atomic where rename(2) is.
+    *
+    * Installs graft's SQL function catalog
+    * ([[graft.functions.Functions.install]]) on `spark` first: the query
+    * runs every micro-batch on a clone of the session taken when it
+    * starts, so a `foreachBatch` body can call any catalog function
+    * without registering it, whether or not `spark` went through
+    * `Tables.registerAll` (the other install seam).
     */
   private[ops] def start[T](
       spark: SparkSession, w: DataStreamWriter[T]): StreamingQuery = {
@@ -144,6 +151,7 @@ object StreamOps {
             s"spark.sql.streaming.checkpointLocation is $loc — unset it " +
             "to use Spark's local temp checkpoint")
       }
+    graft.functions.Functions.install(spark)
     // serialized: two overlapping starts would restore each other's pin
     synchronized {
       val prior = spark.conf.getOption(CheckpointManagerKey)

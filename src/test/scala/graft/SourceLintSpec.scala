@@ -10,6 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * is broadcast-shaped even with AQE off and the pattern can't be
   * copy-pasted onto a non-scalar frame without the hint coming along.
   * The hints are in place; this spec keeps them in place.
+  *
+  * It also keeps the two session seams single: SQL functions are
+  * registered only by `functions/Functions.scala`, and sessions are built
+  * only by `GraftSession` (plus the opt-in extension session of
+  * `Round3Ops.extensionSession`).
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -53,5 +58,50 @@ class SourceLintSpec extends AnyFunSuite {
       if content.contains(pat)
     } yield s"${f.getPath} contains $pat"
     assert(bad.isEmpty, bad.mkString(", "))
+  }
+
+  /** `path:line` of every match of `pat` in `src/main` code lines (doc and
+    * line comments skipped) outside the files `allowed` accepts.
+    */
+  private def codeMatches(pat: scala.util.matching.Regex)(
+      allowed: (java.io.File, String, Int) => Boolean): Seq[String] =
+    for {
+      f <- scalaFiles(mainDir)
+      content = read(f)
+      m <- pat.findAllMatchIn(content).toSeq
+      lineStart = content.lastIndexOf('\n', m.start - 1) + 1
+      lead = content.substring(lineStart, m.start).trim
+      if !(lead.startsWith("*") || lead.startsWith("/*") || lead.contains("//"))
+      if !allowed(f, content, m.start)
+    } yield s"${f.getPath}:${content.take(m.start).count(_ == '\n') + 1}"
+
+  test("SQL functions are registered only by functions/Functions.scala") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bad = codeMatches(
+      "createOrReplaceTempFunction|registerFunction|udf\\.register".r) {
+      (f, _, _) => f.getPath.endsWith("functions/Functions.scala")
+    }
+    assert(bad.isEmpty, "function registration outside Functions.install " +
+      s"at: ${bad.mkString(", ")} — add the function to graft.functions." +
+      "Functions; Tables.registerAll and StreamOps.start install it")
+  }
+
+  test("sessions are built only by GraftSession and " +
+    "Round3Ops.extensionSession") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bad = codeMatches("SparkSession\\s*\\.\\s*builder\\b".r) {
+      (f, content, at) =>
+        f.getName == "GraftSession.scala" || (f.getName == "Round3Ops.scala" && {
+          // inside the extensionSession def: after its signature, before
+          // the next member at the object's indentation
+          val start = content.indexOf("def extensionSession(")
+          val end = "\n  (val|def|private|lazy|override) ".r
+            .findFirstMatchIn(content.substring(start + 1))
+            .map(_.start + start + 1).getOrElse(content.length)
+          start >= 0 && at > start && at < end
+        })
+    }
+    assert(bad.isEmpty, s"SparkSession.builder() at: ${bad.mkString(", ")}" +
+      " — build sessions with graft.GraftSession.build")
   }
 }

@@ -13,7 +13,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ArrayDot equals the HOF fold bit-for-bit (codegen path)") {
     import spark.implicits._
-    ArrayDot.register(spark)
+    Functions.install(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(64)(
       (Array.fill(64)(rnd.nextFloat() - 0.5f),
@@ -28,7 +28,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ArrayDot interpreted eval matches codegen") {
     import spark.implicits._
-    ArrayDot.register(spark)
+    Functions.install(spark)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
@@ -40,14 +40,14 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ArrayDot mixed float/double arrays") {
     import spark.implicits._
-    ArrayDot.register(spark)
+    Functions.install(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(0.5, 0.25))).toDF("a", "b")
     assert(df.selectExpr("array_dot(a, b)").head().getDouble(0) == 1.0)
   }
 
   test("ArrayDot rejects non-numeric-array inputs at analysis") {
     import spark.implicits._
-    ArrayDot.register(spark)
+    Functions.install(spark)
     val df = Seq((Array("x"), Array(1.0f))).toDF("a", "b")
     intercept[org.apache.spark.sql.AnalysisException] {
       df.selectExpr("array_dot(a, b)").collect()
@@ -56,7 +56,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("WeightedAvg merges partials exactly across partitionings") {
     import spark.implicits._
-    WeightedAvg.register(spark)
+    Functions.install(spark)
     val rows = (1 to 1000).map(i => (i * 0.01 + 100.0, (i % 7 + 1).toDouble))
     val expected = {
       val num = rows.map { case (p, w) =>
@@ -73,11 +73,20 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("token_jaccard_sorted wrong arity raises a readable analysis error") {
-    TokenJaccardSorted.register(spark)
+    Functions.install(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT token_jaccard_sorted(array('a'))").collect()
     }
     assert(e.getMessage.contains("token_jaccard_sorted"))
     assert(e.getMessage.contains("2"))
+  }
+
+  test("install puts the whole catalog on a fresh session, idempotently") {
+    val fresh = spark.newSession()
+    assert(Functions.names.size == 13)
+    assert(Functions.names.forall(n => !fresh.catalog.functionExists(n)))
+    Functions.install(fresh)
+    Functions.install(fresh)
+    assert(Functions.names.forall(n => fresh.catalog.functionExists(n)))
   }
 }

@@ -13,7 +13,7 @@ class HllAggSpec extends AnyFunSuite {
 
   test("estimate within 5% of exact across partitionings, and stable") {
     import spark.implicits._
-    HllAgg.register(spark)
+    Functions.install(spark)
     val n = 50000
     val df = (1 to n).map(i => i.toLong * 7919).toDF("v")
     var prev: Option[Long] = None
@@ -29,7 +29,7 @@ class HllAggSpec extends AnyFunSuite {
 
   test("small cardinalities are exact via linear counting") {
     import spark.implicits._
-    HllAgg.register(spark)
+    Functions.install(spark)
     val df = Seq("a", "b", "c", "a", "b", "a").toDF("s")
     assert(df.selectExpr("graft_hll(s)").head().getLong(0) == 3L)
   }

@@ -98,6 +98,36 @@ class TextHashSpec extends AnyFunSuite {
     assert(d.filter("old IS DISTINCT FROM nw").count() === 0)
   }
 
+  test("pos_grams and minhash_sig == HOF on arrays with null elements " +
+    "and an all-null array") {
+    import spark.implicits._
+    val rows: Seq[Seq[Option[Long]]] = Seq(
+      Seq(Some(5L), None, Some(17L), Some(3L), Some(999999999L), None,
+        Some(42L), Some(-7L)),
+      Seq(None, Some(1L), Some(2L), Some(3L), Some(4L), Some(5L)),
+      Seq(Some(1L), Some(2L), Some(3L), Some(4L), Some(5L), None),
+      Seq(Some(8L), Some(9L), Some(10L), Some(11L), Some(12L)),
+      Seq(None, None, None, None, None),
+      Seq.empty)
+    // as a local relation (interpreted eval, optimizer-folded) and
+    // through an exchange (generated code)
+    for (th <- Seq(rows.toDF("th"), rows.toDF("th").repartition(2))) {
+      val mh = th.select(expr(hofMinHash).as("old"),
+        TextHash.minHashSig(col("th")).as("nw"))
+      assert(mh.filter("old IS DISTINCT FROM nw").count() === 0)
+      for (w <- Seq(2, 3, 5)) {
+        val g = th.filter(size(col("th")) >= w)
+          .select(
+            expr(s"transform(sequence(0, size(th) - $w), " +
+              s"i -> aggregate(slice(th, i + 1, $w), CAST(0 AS BIGINT), " +
+              s"(a, b) -> (a * 131 + b) % $M))").as("old"),
+            TextHash.posGrams(col("th"), w).as("nw"))
+        assert(g.count() > 0 && g.filter("old IS DISTINCT FROM nw")
+          .count() === 0, s"w=$w")
+      }
+    }
+  }
+
   test("char_fold == HOF char fold (md5 fingerprint shape)") {
     val d = df.select(md5(col("text")).as("h"))
       .select(expr(hofCharFold("h", 0L, 131L)).as("old"),

@@ -18,7 +18,7 @@ class VecKernelsSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    VecDot.register(s)
+    Functions.install(s)
     s
   }
 
@@ -53,15 +53,34 @@ class VecKernelsSpec extends AnyFunSuite {
     }.toDF("vec_id", "sv")
   }
 
-  private def cbsDf = {
+  /** `mismatched` adds codebook entries whose cs length is not SUB: their
+    * subspace dot is null (pq_encode's null-d branch), and in subspace
+    * M-1 EVERY cs mismatches (the all-null-d tiebreak: smallest cid).
+    * Those entries come in descending cid order, so the kernel's
+    * min-cid updates run too.
+    */
+  private def cbsDf(mismatched: Boolean = false) = {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     val entries = for (m <- 0 until M; k <- 0 until 8) yield
       (m, k.toLong,
         if (k == 7) Seq.fill(SUB)(0L) // duplicate-distance tie bait
         else Seq.fill(SUB)((rnd.nextInt(1200001) - 600000).toLong))
-    entries.toDF("sub", "cid", "cs")
-      .agg(expr("array_sort(collect_list(struct(sub, cid, cs)))").as("cbs"))
+    if (!mismatched)
+      entries.toDF("sub", "cid", "cs")
+        .agg(expr("array_sort(collect_list(struct(sub, cid, cs)))").as("cbs"))
+    else {
+      val r2 = new scala.util.Random(17)
+      def vec(n: Int) = Seq.fill(n)((r2.nextInt(1200001) - 600000).toLong)
+      val allNull = entries.map { case (m, k, cs) =>
+        if (m == M - 1) (m, k, cs.take(SUB - 1 - (k % 3).toInt)) else (m, k, cs)
+      }
+      val extra = (0 until M - 1).flatMap(m => Seq(
+        (m, 8L, vec(SUB - 3)), (m, 9L, vec(SUB + 2)), (m, 10L, Seq.empty[Long])))
+      (allNull ++ extra).toDF("sub", "cid", "cs")
+        .agg(expr("reverse(array_sort(collect_list(struct(sub, cid, cs))))")
+          .as("cbs"))
+    }
   }
 
   test("int_dot == HOF zip_with/aggregate fold (incl. length mismatch)") {
@@ -88,20 +107,22 @@ class VecKernelsSpec extends AnyFunSuite {
   }
 
   test("pq_encode == HOF per-subspace argmax chain (with ties)") {
-    val d = vecsDf.crossJoin(cbsDf)
-      .select((0 until M).map(m => expr(hofCode(m)).as(s"o$m")) ++
-        (0 until M).map(m =>
-          element_at(expr("pq_encode(sv, cbs)"), m + 1).as(s"n$m")): _*)
-    val bad = (0 until M).map(m => s"o$m IS DISTINCT FROM n$m")
-      .mkString(" OR ")
-    assert(d.filter(bad).count() === 0)
+    for (mismatched <- Seq(false, true)) {
+      val d = vecsDf.crossJoin(cbsDf(mismatched))
+        .select((0 until M).map(m => expr(hofCode(m)).as(s"o$m")) ++
+          (0 until M).map(m =>
+            element_at(expr("pq_encode(sv, cbs)"), m + 1).as(s"n$m")): _*)
+      val bad = (0 until M).map(m => s"o$m IS DISTINCT FROM n$m")
+        .mkString(" OR ")
+      assert(d.filter(bad).count() === 0, s"mismatched=$mismatched")
+    }
   }
 
   test("adc_codes == HOF ADC sum over stored codes") {
     val cols = Seq(col("vec_id"), col("sv").as("qs"), col("cbs")) ++
       (0 until M).map(m =>
         element_at(expr("pq_encode(sv, cbs)"), m + 1).as(s"c$m"))
-    val coded = vecsDf.crossJoin(cbsDf).select(cols: _*)
+    val coded = vecsDf.crossJoin(cbsDf()).select(cols: _*)
     val d = coded.select(expr(hofAdc).as("old"),
       expr(s"adc_codes(qs, cbs, array(${(0 until M).map(m => s"c$m")
         .mkString(", ")}))").as("nw"))

@@ -36,7 +36,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     graft.SparkEntry.queries(name)(spark, dir).collect()
 
   test("NfcNormalize: composes, idempotent, matches the JDK normalizer") {
-    graft.functions.NfcNormalize.register(spark)
+    graft.functions.Functions.install(spark)
     import spark.implicits._
     val samples = Seq(
       "e\u0301",            // e + combining acute -> precomposed

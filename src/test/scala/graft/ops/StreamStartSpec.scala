@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `StreamOps.start`, the one `writeStream...start()` seam: a stateful
   * query run through it equals its batch result, the checkpoint-manager
-  * conf it pins is restored whether `start()` returns or throws, and a
-  * non-local session checkpoint location is refused.
+  * conf it pins is restored whether `start()` returns or throws, a
+  * non-local session checkpoint location is refused, and a `foreachBatch`
+  * body can call graft's SQL functions on a session that never went
+  * through `Tables`.
   */
 class StreamStartSpec extends AnyFunSuite {
 
@@ -122,5 +124,30 @@ class StreamStartSpec extends AnyFunSuite {
         assert(spark.streams.active.isEmpty)
       } finally spark.conf.unset(key)
     }
+  }
+
+  test("a foreachBatch body on a fresh session evaluates catalog " +
+    "functions: the seam installs them before the query clones the session") {
+    // newSession carries no temp functions and never passes through
+    // Tables.registerAll, the other install seam
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ss_fn_").toString
+    try {
+      Seq((1L, Seq(1.0f, 2.0f), Seq(3L, 4L), Seq("a", "b", "c"), Seq("b", "c", "d")),
+        (2L, Seq(0.5f, -1.0f), Seq(2L, 2L), Seq("x"), Seq("x")))
+        .toDF("id", "e", "cs", "ta", "tb").write.parquet(s"$dir/src")
+      val schema = fresh.read.parquet(s"$dir/src").schema
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val body: (org.apache.spark.sql.DataFrame, Long) => Unit = (batch, _) =>
+        batch.selectExpr("id", "double_dot(e, cs)", "array_dot(e, e)",
+          "token_jaccard(ta, tb)").collect().foreach(r => got.add(r.toString))
+      val q = StreamOps.start(fresh,
+        fresh.readStream.schema(schema).parquet(s"$dir/src")
+          .writeStream.foreachBatch(body))
+      try q.processAllAvailable() finally q.stop()
+      assert(got.toArray.toSeq.map(_.toString).sorted ==
+        Seq("[1,11.0,5.0,0.5]", "[2,-1.0,1.25,1.0]"))
+    } finally ArtifactStore.deleteRecursive(dir)
   }
 }

@@ -15,12 +15,18 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WinnowingPropSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // winnowKeys runs on frames that never pass through Tables, so the
+  // spec installs the function catalog (char_fold) itself
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.Functions.install(s)
+    s
+  }
 
   /** doc_id -> set of selected fingerprint HASHES (position stripped). */
   private def fingerprints(docs: Seq[(Long, String)]): Map[Long, Set[Long]] = {

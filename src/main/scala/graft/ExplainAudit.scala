@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Physical-plan audit: prints the formatted plan for the scale-critical
   * queries and greps for the properties a 100 TB deployment depends on —
@@ -9,7 +10,7 @@ import org.apache.spark.sql.execution.SparkPlan
   *
   * Run: sbt "runMain graft.ExplainAudit [queryName ...]"
   */
-object ExplainAudit {
+object ExplainAudit extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     // same CPU env and session as Bench so the dumped plans are the
     // shapes the bench actually times (at sf0.001 AQE broadcasts
@@ -43,10 +44,22 @@ object ExplainAudit {
       println(s"-- audit: broadcastJoins=${n("BroadcastHashJoin")}" +
         s" shuffleJoins=${n("SortMergeJoin") + n("ShuffledHashJoin")}" +
         s" topK=${n("TakeOrderedAndProject")}" +
-        s" wholeStageCodegen=${
-          "codegen id : (\\d+)".r.findAllMatchIn(txt).map(_.group(1)).toSet.size}" +
+        s" wholeStageCodegen=${wholeStageCodegens(df)}" +
         s" pushedFilters=${if (txt.contains("PushedFilters: [") && !txt.contains("PushedFilters: []")) "yes" else "none"}")
     }
     spark.stop()
   }
+
+  /** Whole-stage-codegen subtrees of the executed plan, counted on the
+    * plan tree through the AQE query stages and subqueries rather than
+    * read from the explain text. The count follows the final plan, and
+    * that plan can differ between runs: AQE may turn a shuffle join
+    * into a broadcast join of whichever side's shuffle stage finished
+    * first (q94's top join), and broadcasting an aggregate side puts
+    * that aggregate in a codegen subtree of its own.
+    */
+  private def wholeStageCodegens(df: org.apache.spark.sql.DataFrame): Int =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }.size
 }

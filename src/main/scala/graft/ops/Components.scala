@@ -178,15 +178,6 @@ object Components {
         .select(least(col("p.x"), col("p.m")).as("u"),
           greatest(col("p.x"), col("p.m")).as("v"))
         .distinct()
-      // debug hook: GRAFT_EXPLAIN_ROUND=1 dumps round 1's physical plan
-      // (the per-round exchange count is the optimization's evidence;
-      // the final label frame's explain can't show it — each round is
-      // truncated behind its checkpoint)
-      if (round == 1 && sys.env.contains("GRAFT_EXPLAIN_ROUND"))
-        // scalastyle:off println
-        println(e2q.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        // scalastyle:on println
       val e2 = fresh(spark, e2q)
       val e2Sig = sigOf(e2)
       if (e2Sig == eSig) {

@@ -21,18 +21,6 @@ import graft.Tables
   */
 object MaintenanceOps {
 
-  /** md5-char fold mod 1e9+7 (the q198/q208 hashing kernel). */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
-  private def duckFold(u: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split(md5($u), ''), " +
-      "c -> CAST(unicode(c) AS BIGINT))), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   // ------------------------------------------------------------------
   // q214: index over a document frame (q177's shape, shared band)
   // ------------------------------------------------------------------
@@ -82,7 +70,7 @@ object MaintenanceOps {
          |    AS n_changed,
          |  CAST(SUM(length(t)) AS BIGINT) AS chars_before,
          |  CAST(SUM(length(n)) AS BIGINT) AS chars_after,
-         |  CAST(SUM(${duckFold("n")}) % 1000000007 AS BIGINT) AS fp
+         |  CAST(SUM(${Pq.duckFold("n")}) % 1000000007 AS BIGINT) AS fp
          |FROM nrm
          |GROUP BY source
          |ORDER BY source""".stripMargin) { (s, dir) =>

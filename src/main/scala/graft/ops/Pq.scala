@@ -61,6 +61,16 @@ object Pq {
       s"list_transform(range(len($a)), i -> $a[i+1] * $b[i+1])), " +
       "(x, y) -> x + y)"
 
+  /** DuckDB side of the md5-char fingerprint fold mod 1e9+7 (the
+    * q198/q208/q254 hashing kernel; Spark evaluates it with the
+    * `char_fold` kernel).
+    */
+  private[ops] def duckFold(u: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
+      s"list_transform(string_split(md5($u), ''), " +
+      "c -> CAST(unicode(c) AS BIGINT))), " +
+      "(a, b) -> (a * 31 + b) % 1000000007)"
+
   private[ops] def duckScaled(a: String): String =
     s"list_transform($a, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000000 " +
       "+ 0.5) AS BIGINT))"
@@ -97,10 +107,6 @@ object Pq {
       .select(col("vec_id"), col("adc"), col("exact"))
   }
 
-  private def scaledQuery(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") === 0)
-      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-
   /** PQ-encode (…, embedding) to M codes against the broadcast codebook
     * row — the stored-codes shape: the corpus encodes ONCE and every
     * query is served from the codes. All non-embedding columns (vec_id,
@@ -121,12 +127,6 @@ object Pq {
   private[ops] def adcFromCodes: String =
     s"adc_codes(qs, cbs, array(${(0 until M).map(m => s"c$m")
       .mkString(", ")}))"
-
-  /** Exact integer scores only (no PQ): (vec_id, exact). */
-  private def exactScore(in: DataFrame, q0: DataFrame): DataFrame =
-    in.crossJoin(broadcast(q0))
-      .withColumn("sv", expr(KMeans.scaleExpr("embedding")))
-      .select(col("vec_id"), expr(intDot("sv", "qs")).as("exact"))
 
   // ---------------- shared oracle builders ---------------------------
 
@@ -252,7 +252,7 @@ object Pq {
          |ORDER BY s.adc DESC, s.vec_id ASC""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
       val scored = adcScore(e.filter(col("vec_id") =!= 0), trainPq(s, e),
-        scaledQuery(e))
+        VecIndex.queryRow(e))
       val exactTop = scored
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
         .select(col("vec_id"), lit(1).as("hit"))

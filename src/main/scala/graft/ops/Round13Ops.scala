@@ -50,18 +50,6 @@ object Round13Ops {
   private[ops] val MAXW = 4 // q291: max stored context width
   private[ops] val QB = 8 // q291: base query-batch size
 
-  /** md5-char fold mod 1e9+7 (the q198/q208/q254 fingerprint kernel). */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
-  private def duckFold(u: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split(md5($u), ''), " +
-      "c -> CAST(unicode(c) AS BIGINT))), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   // ---------------- q291: the multi-width n-gram store ----------------
 
   // dir -> q291's multi-width n-gram store root
@@ -408,7 +396,7 @@ object Round13Ops {
          |  SELECT * FROM rows_ UNION ALL SELECT * FROM pads),
          |fpr AS MATERIALIZED (
          |  SELECT a.*, k.k_docs,
-         |    ${duckFold("concat_ws('|', a.seq_id, a.pos, a.tok, " +
+         |    ${Pq.duckFold("concat_ws('|', a.seq_id, a.pos, a.tok, " +
                 "a.doc_id, a.seg)")} AS fp
          |  FROM allr a JOIN kd k ON k.seq = a.seq_id)
          |SELECT k_docs, CAST(COUNT(DISTINCT seq_id) AS BIGINT) AS n_seqs,

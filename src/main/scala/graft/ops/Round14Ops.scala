@@ -36,18 +36,6 @@ object Round14Ops {
 
   private val M = 1000000007L
 
-  /** md5-char fold mod 1e9+7 (the q198/q208/q254 fingerprint kernel). */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
-  private def duckFold(u: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split(md5($u), ''), " +
-      "c -> CAST(unicode(c) AS BIGINT))), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   // ---------------- q293: markup main-content extraction ----------------
 
   /** The page fixture, ONE SQL expression valid in both dialects (`||`
@@ -126,7 +114,7 @@ object Round14Ops {
          |  CAST(SUM(length(main)) AS BIGINT) AS kept_chars,
          |  CAST((1000000 * (SUM(length(all_txt)) - SUM(length(main))))
          |    // SUM(length(all_txt)) AS BIGINT) AS boiler_ppm,
-         |  CAST(SUM(${duckFold("doc_id || '|' || main")}) % $M
+         |  CAST(SUM(${Pq.duckFold("doc_id || '|' || main")}) % $M
          |    AS BIGINT) AS fp
          |FROM ext GROUP BY source ORDER BY source""".stripMargin) {
       (s, dir) =>

@@ -21,21 +21,6 @@ import graft.Tables
   */
 object Round5Final {
 
-  /** Integer fold of md5($u)'s hex chars mod 1e9+7 — the deterministic,
-    * partial-agg-friendly "hash a value to a bucket" kernel both
-    * engines express identically (q198's row-fingerprint pattern).
-    */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
-  private def duckFold(u: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split(md5($u), ''), " +
-      "c -> CAST(unicode(c) AS BIGINT))), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   /** The documents corpus plus a deterministic "recrawl": every 7th
     * doc re-ingested verbatim under `<source>_recrawl` with a doc_id
     * offset past the current max. The generated corpus has no exact
@@ -180,8 +165,8 @@ object Round5Final {
          |reps AS (SELECT ck, MIN(doc_id) AS rep FROM wk GROUP BY ck),
          |j AS (
          |  SELECT w.ck,
-         |    (${duckFold("CAST(w.doc_id AS VARCHAR)")} % 10 < 8) AS doc_tr,
-         |    (${duckFold("CAST(r.rep AS VARCHAR)")} % 10 < 8) AS cl_tr
+         |    (${Pq.duckFold("CAST(w.doc_id AS VARCHAR)")} % 10 < 8) AS doc_tr,
+         |    (${Pq.duckFold("CAST(r.rep AS VARCHAR)")} % 10 < 8) AS cl_tr
          |  FROM wk w JOIN reps r ON w.ck = r.ck),
          |cd AS (SELECT ck,
          |    CAST(SUM(CASE WHEN doc_tr THEN 1 ELSE 0 END) AS BIGINT) AS tr,

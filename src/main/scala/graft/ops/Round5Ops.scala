@@ -97,13 +97,8 @@ object Round5Ops {
   /** Order-independent table fingerprint: SUM over rows of an integer
     * fold of md5("k|v") mod 1e9+7 — partial-aggregatable (no sort, no
     * string_agg), so two 100 TB table states compare with one scan each.
+    * The oracle side; Spark evaluates it with the `char_fold` kernel.
     */
-  private[ops] val sparkRowFold =
-    "aggregate(transform(filter(split(md5(concat(cast(k AS STRING), '|', " +
-      "cast(cast(v AS DECIMAL(18,2)) AS STRING))), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), 0L, " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   private[ops] def duckRowFold: String =
     "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       "list_transform(string_split(md5(CAST(k AS VARCHAR) || '|' || " +

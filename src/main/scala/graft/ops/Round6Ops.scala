@@ -221,8 +221,7 @@ object Round6Ops {
          |LEFT JOIN tope t ON r.vec_id = t.vec_id
          |ORDER BY r.full_dot DESC, r.vec_id ASC""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
+      val q0 = VecIndex.queryRow(e)
       val sv = e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"), expr(KMeans.scaleExpr("embedding")).as("sv"))
         .crossJoin(broadcast(q0))
@@ -482,15 +481,8 @@ object Round6Ops {
         .select(col("vec_id"), col("cid"))
       // probe RANKING of all CK cells for the query (not a cut at one
       // nprobe — every level of the curve reads from this ranking)
-      val wp = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val prank = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wp))
-        .select(col("cid"), col("rn"))
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
+      val prank = VecIndex.probeRanks(e, coarse).select(col("cid"), col("rn"))
+      val q0 = VecIndex.queryRow(e)
       // the explicit level spine: {min(2^g, CK)} — log-spaced, ends at CK
       import s.implicits._
       val levels = (0 to 30).map(g => math.min(1L << g, ck.toLong))

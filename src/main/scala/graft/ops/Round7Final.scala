@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -228,18 +228,9 @@ object Round7Final {
     * one file open per pruned bucket. The cluster shuffle is O(edges)
     * with fixed-width rows — strictly cheaper than the file churn.
     */
-  private def writeEdges(df: DataFrame, path: String): Unit = {
-    // debug hook: the edge-build plan (pairsOf + topDeg) executes inside
-    // this write, not in any returned frame — GRAFT_EXPLAIN_EDGES=1
-    // dumps it for plan-evidence capture
-    if (sys.env.contains("GRAFT_EXPLAIN_EDGES"))
-      // scalastyle:off println
-      println(s"== writeEdges $path\n" + df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      // scalastyle:on println
+  private def writeEdges(df: DataFrame, path: String): Unit =
     df.repartition(col("sb")).write.mode("overwrite").partitionBy("sb")
       .parquet(path)
-  }
 
   /** Marker-gated persisted edges artifact `<root>/<file>`,
     * bucket-partitioned with modulus `srcb`.
@@ -321,23 +312,37 @@ object Round7Final {
       : DataFrame =
     beamFrom(s, ivc, edges, entriesOver(e, cb, hard), beam, hops)
 
-  /** The IVF-probed entry points (min survivor per probed cell) —
-    * beam-width-independent, so curve gates (q234) compute them ONCE
-    * and sweep only the hop loop.
+  /** The IVF-probed entry points (min survivor per probed cell) over
+    * the persisted hard assignments — beam-width-independent, so curve
+    * gates (q234) compute them ONCE and sweep only the hop loop. Shared
+    * with the Round8Ops graph gates.
     */
-  private def entriesOver(
-      e: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame = {
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0).crossJoin(broadcast(cb))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= NPROBE).select(col("cid"))
+  private[ops] def entriesOver(
+      e: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame =
     hard
-      .join(broadcast(probes), col("acell") === col("cid"))
+      .join(broadcast(VecIndex.probes(e, cb, NPROBE)),
+        col("acell") === col("cid"))
       .filter(col("vec_id") =!= 0)
       .groupBy(col("acell")).agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id")).distinct()
+
+  /** Query 0's exact score column over an (vec_id, ivd) frame — its
+    * vector collected to the driver ONCE (one `head()`) and inlined as
+    * a literal — plus the exact top-10 of `ref(ivc minus query 0)` as
+    * (vec_id, hit): the referee every query-0 graph gate grades its
+    * served top-10 against (`ref` narrows the corpus, e.g. to
+    * survivors or eligible docs).
+    */
+  private[ops] def query0Exact(ivc: DataFrame,
+      ref: DataFrame => DataFrame = identity): (Column, DataFrame) = {
+    val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
+    val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      .cast("bigint")
+    val tope = ref(ivc.filter(col("vec_id") =!= 0))
+      .select(col("vec_id"), qdot.as("ex2"))
+      .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
+      .select(col("vec_id"), lit(1).as("hit"))
+    (qdot, tope)
   }
 
   /** Batched hop loop: every query in the bounded `qb` (qid, qiv)
@@ -435,6 +440,30 @@ object Round7Final {
     }
   }
 
+  /** Per-qid IVF-probed entry points over the persisted hard
+    * assignments for a batch of query rows (vec_id, embedding): each
+    * query's min survivor per probed cell — the batched entriesOver,
+    * shared by q239, q240 and the Round9Ops batched ADC serves.
+    */
+  private[ops] def entriesForBatch(
+      batch: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame = {
+    val wp = Window.partitionBy(col("qid"))
+      .orderBy(col("cdot").desc, col("cid").asc)
+    val probesb = batch
+      .select(col("vec_id").as("qid"), col("embedding"))
+      .crossJoin(broadcast(cb))
+      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
+      .withColumn("rn", row_number().over(wp))
+      .filter(col("rn") <= NPROBE)
+      .select(col("qid"), col("cid"))
+    hard
+      .join(broadcast(probesb), col("acell") === col("cid"))
+      .filter(col("vec_id") =!= col("qid"))
+      .groupBy(col("qid"), col("acell"))
+      .agg(min(col("vec_id")).as("vec_id"))
+      .select(col("qid"), col("vec_id")).distinct()
+  }
+
   /** The batch-side serving transformation one q240 micro-batch runs —
     * separated from the sink write so the plan audit can assert its
     * shapes (qid-partitioned windows, broadcast frontiers) directly.
@@ -445,22 +474,8 @@ object Round7Final {
     val bs = batch.sparkSession
     val qb = batch.select(col("vec_id").as("qid"),
       expr(scaledD).as("qiv"))
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probesb = batch
-      .select(col("vec_id").as("qid"), col("embedding"))
-      .crossJoin(broadcast(cb))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NPROBE)
-      .select(col("qid"), col("cid"))
-    val entries = hard
-      .join(broadcast(probesb), col("acell") === col("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("acell"))
-      .agg(min(col("vec_id")).as("vec_id"))
-      .select(col("qid"), col("vec_id")).distinct()
-    val visited = beamFromBatch(bs, ivc, edges, entries, qb, BEAM, HOPS)
+    val visited = beamFromBatch(bs, ivc, edges,
+      entriesForBatch(batch, cb, hard), qb, BEAM, HOPS)
     val wk = Window.partitionBy(col("qid"))
       .orderBy(col("exact").desc, col("vec_id").asc)
     ivc.join(broadcast(visited), Seq("vec_id"))
@@ -517,8 +532,7 @@ object Round7Final {
     // still come from the same pruned buckets, and ids absent from
     // ivc still count as visited but never enter the beam, exactly as
     // the old inner-join topB behaved).
-    val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-    val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+    val (qdot, _) = query0Exact(ivc)
     val eb = ensureSb(edges)
     val srcb = srcbOf(eb)
     import scala.jdk.CollectionConverters._
@@ -532,7 +546,7 @@ object Round7Final {
     def scoresOf(ids: Seq[Long]): Map[Long, Long] =
       if (ids.isEmpty) Map.empty
       else ivc.join(broadcast(idsDf(ids, "vec_id")), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+        .select(col("vec_id"), qdot.as("exact"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val entryIds = entries.collect().map(_.getLong(0)).toSeq
     val visited = scala.collection.mutable.LinkedHashSet(entryIds: _*)
@@ -809,24 +823,18 @@ object Round7Final {
          |ORDER BY t.exact DESC, t.vec_id ASC""".stripMargin) { (s, dir) =>
       val (ivc, _, _) = graphArtifacts(s, dir)
       val visited = beamVisited(s, dir, BEAM, HOPS)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      val (qdot, tope) = query0Exact(ivc)
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+        .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
       val nVisited = visited
         .agg(count(lit(1)).cast("bigint").as("n_visited"))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("ex2"))
-        .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
       val nHit = top.select(col("vec_id"))
         .join(broadcast(tope), Seq("vec_id"))
         .agg(count(lit(1)).cast("bigint").as("n_hit"))
       top.join(broadcast(tope), Seq("vec_id"), "left")
         .crossJoin(broadcast(nVisited)).crossJoin(broadcast(nHit))
-        .select(col("vec_id"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("exact"), VecIndex.inExact,
           col("n_visited"), col("n_hit"))
         .orderBy(col("exact").desc, col("vec_id").asc)
     },
@@ -853,16 +861,10 @@ object Round7Final {
       // discipline applied to graph search): every width serves from
       // the SAME shared graph artifacts, so the sweep measures the
       // knob, not rebuilds
-      val (ivc, _, _) = graphArtifacts(s, dir)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("ex2"))
-        .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"))
+      val (ivc, gEdges, gHard) = graphArtifacts(s, dir)
+      val (qdot, tope) = query0Exact(ivc)
       // probes + entry points are beam-width-independent: resolve them
       // once, sweep only the hop loop per width
-      val (_, gEdges, gHard) = graphArtifacts(s, dir)
       val eC = Tables.table(s, dir, "embeddings")
       val cbC = KMeans.codebook(s, eC, KMeans.servingK(eC), CITERS)
       // pinned: beamFrom re-collects its entries once per width — an
@@ -872,7 +874,7 @@ object Round7Final {
       BEAMS.map { b =>
         val visited = beamFrom(s, ivc, gEdges, entriesC, b, HOPS)
         val top = ivc.join(broadcast(visited), Seq("vec_id"))
-          .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+          .select(col("vec_id"), qdot.as("exact"))
           .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
         val nVisited = visited
           .agg(count(lit(1)).cast("bigint").as("n_visited"))
@@ -973,22 +975,16 @@ object Round7Final {
       val hard = soft.filter(col("crank") === 0)
         .select(col("vec_id"), col("acell"))
       val visited = beamOver(s, e, cb, ivc, edgesServe, hard, BEAM, HOPS)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      val (qdot, tope) = query0Exact(ivc)
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+        .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
       val nVisited = visited
         .agg(count(lit(1)).cast("bigint").as("n_visited"))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("ex2"))
-        .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
       top.join(broadcast(tope), Seq("vec_id"), "left")
         .crossJoin(broadcast(nVisited)).crossJoin(broadcast(nNew))
         .crossJoin(broadcast(nTouched)).crossJoin(broadcast(dd))
-        .select(col("vec_id"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("exact"), VecIndex.inExact,
           col("n_visited"), col("n_new"), col("n_touched"),
           col("rows_delta"), col("fp_delta"))
         .orderBy(col("exact").desc, col("vec_id").asc)
@@ -1062,30 +1058,24 @@ object Round7Final {
       val entry0 = e.filter(col("vec_id") % L1MOD === 1)
         .agg(min(col("vec_id")).cast("bigint").as("vec_id"))
       val vis1 = beamFrom(s, ivc, edges1, entry0, L1BEAM, HOPS)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      val (qdot, tope) = query0Exact(ivc)
       val seed = ivc.join(broadcast(vis1), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("sx"))
+        .select(col("vec_id"), qdot.as("sx"))
         .orderBy(col("sx").desc, col("vec_id").asc).limit(BEAM)
         .select(col("vec_id"))
       val vis0 = beamFrom(s, ivc, edges, seed, BEAM, HOPS)
       val top = ivc.join(broadcast(vis0), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+        .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
       val nv1 = vis1.agg(count(lit(1)).cast("bigint").as("n_vis_l1"))
       val nv0 = vis0.agg(count(lit(1)).cast("bigint").as("n_vis_l0"))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("ex2"))
-        .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
       val nHit = top.select(col("vec_id"))
         .join(broadcast(tope), Seq("vec_id"))
         .agg(count(lit(1)).cast("bigint").as("n_hit"))
       top.join(broadcast(tope), Seq("vec_id"), "left")
         .crossJoin(broadcast(nv1)).crossJoin(broadcast(nv0))
         .crossJoin(broadcast(nHit))
-        .select(col("vec_id"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("exact"), VecIndex.inExact,
           col("n_vis_l1"), col("n_vis_l0"), col("n_hit"))
         .orderBy(col("exact").desc, col("vec_id").asc)
     },
@@ -1211,23 +1201,18 @@ object Round7Final {
       // ---- SERVE from the compacted graph, survivor entries only ----
       val hardS = hard.join(tomb, Seq("vec_id"), "left_anti")
       val visited = beamOver(s, e, cb, ivc, edgesC, hardS, BEAM, HOPS)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      // the exact referee runs over survivors only
+      val (qdot, topes) =
+        query0Exact(ivc, _.join(tomb, Seq("vec_id"), "left_anti"))
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+        .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
       val nVisited = visited
         .agg(count(lit(1)).cast("bigint").as("n_visited"))
-      val topes = ivc.filter(col("vec_id") =!= 0)
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), qdot.cast("bigint").as("ex2"))
-        .orderBy(col("ex2").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
       top.join(broadcast(topes), Seq("vec_id"), "left")
         .crossJoin(broadcast(nVisited)).crossJoin(broadcast(nTomb))
         .crossJoin(broadcast(dd))
-        .select(col("vec_id"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("exact"), VecIndex.inExact,
           col("n_visited"), col("n_tomb"),
           col("rows_delta"), col("fp_delta"))
         .orderBy(col("exact").desc, col("vec_id").asc)
@@ -1275,23 +1260,10 @@ object Round7Final {
       // pin once
       val qb = pin(ivc.filter(col("vec_id") < QB)
         .select(col("vec_id").as("qid"), col("ivd").as("qiv")))
-      val wprobe = Window.partitionBy(col("qid"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probesb = e.filter(col("vec_id") < QB)
-        .select(col("vec_id").as("qid"), col("embedding"))
-        .crossJoin(broadcast(cb))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wprobe))
-        .filter(col("rn") <= NPROBE)
-        .select(col("qid"), col("cid"))
       // entry points are width-independent and re-collected per
       // width's hop loop — pin once
-      val entries = pin(hard
-        .join(broadcast(probesb), col("acell") === col("cid"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy(col("qid"), col("acell"))
-        .agg(min(col("vec_id")).as("vec_id"))
-        .select(col("qid"), col("vec_id")).distinct())
+      val entries = pin(entriesForBatch(e.filter(col("vec_id") < QB), cb,
+        hard))
       // the per-query exact referee — ONE full scan windowed by qid,
       // shared by all three widths
       val wex = Window.partitionBy(col("qid"))

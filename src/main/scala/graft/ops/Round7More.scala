@@ -93,33 +93,6 @@ object Round7More {
        |  ORDER BY ${Pq.duckIntDot(Pq.duckScaled("v.embedding"),
               "q.qs")} DESC, v.vec_id ASC LIMIT 10)""".stripMargin
 
-  /** Spark side of the same prefix: query-0 probes against the
-    * persisted artifacts, candidates from the stored codes, scored
-    * with the ADC approximation. Returns (cand, scored, q0).
-    */
-  private def serveCandidates(
-      e: DataFrame, coarse: DataFrame, cbRow: DataFrame,
-      codes: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val wp = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0)
-      .crossJoin(broadcast(coarse))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NPROBE)
-      .select(col("cid"))
-    val q0 = e.filter(col("vec_id") === 0)
-      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-    val cand = codes.join(broadcast(probes), "cid")
-      .filter(col("vec_id") =!= 0)
-    val scored = cand
-      .crossJoin(broadcast(cbRow))
-      .crossJoin(broadcast(q0))
-      .withColumn("adc", expr(Pq.adcFromCodes))
-      .select(col("vec_id"), col("adc"))
-    (cand, scored, q0)
-  }
-
   /** One micro-batch of q229's ingest: assign to the existing coarse
     * cells, encode with the existing PQ codebooks, land as the batch's
     * own delta generation. Idempotent under retry: batchId-keyed dir,
@@ -225,53 +198,28 @@ object Round7More {
             expr(s"($NPROBE * n_tot + n_eligible - 1) div " +
               "GREATEST(n_eligible, 1L)"))
             .as("nprobe_f"))
-      val wp = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probes = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wp))
+      val probes = VecIndex.probeRanks(e, coarse)
         .crossJoin(broadcast(stats))
         .filter(col("rn") <= col("nprobe_f"))
         .select(col("cid"))
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
+      val q0 = VecIndex.queryRow(e)
       // candidates from the stored codes of the probed cells, THEN the
       // metadata filter on the bounded set (post-filter strategy)
-      val candPre = codes.join(broadcast(probes), "cid")
-        .filter(col("vec_id") =!= 0)
+      val candPre = VecIndex.candidates(codes, probes)
       val cand = candPre.join(elig, Seq("vec_id"), "left_semi")
       val ncPre = candPre
         .agg(count(lit(1)).cast("bigint").as("n_cand_pre"))
       val ncPost = cand
         .agg(count(lit(1)).cast("bigint").as("n_cand_post"))
-      val scored = cand
-        .crossJoin(broadcast(cbRow))
-        .crossJoin(broadcast(q0))
-        .withColumn("adc", expr(Pq.adcFromCodes))
-        .select(col("vec_id"), col("adc"))
-      val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-        .limit(10)
       // the exact referee runs over the ELIGIBLE corpus only — the
       // pre-filter strategy, kept as the measurement harness
-      val exactAll = e.join(elig, Seq("vec_id"), "left_semi")
-        .filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q0))
-        .select(col("vec_id"), expr(Pq.intDot(
-          KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-      val globalTop = exactAll
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
-      val exactTop = exactAll
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
-      top
-        .join(broadcast(exactTop), Seq("vec_id"))
-        .join(broadcast(globalTop), Seq("vec_id"), "left")
+      VecIndex.refereed(VecIndex.adcScores(cand, cbRow, q0),
+          e.join(elig, Seq("vec_id"), "left_semi")
+            .filter(col("vec_id") =!= 0), q0)
         .crossJoin(broadcast(ncPre))
         .crossJoin(broadcast(ncPost))
         .crossJoin(broadcast(stats))
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).as("in_exact"),
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
           col("n_cand_pre"), col("n_cand_post"), col("n_eligible"),
           col("nprobe_f"))
         .orderBy(col("adc").desc, col("vec_id").asc)
@@ -347,7 +295,10 @@ object Round7More {
       val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
-      val (cand, scored, q0) = serveCandidates(e, coarse, cbRow, codes)
+      val q0 = VecIndex.queryRow(e)
+      val cand = VecIndex.candidates(codes,
+        VecIndex.probes(e, coarse, NPROBE))
+      val scored = VecIndex.adcScores(cand, cbRow, q0)
       // stage 1: ADC top-C from stored codes alone
       val topC = scored.orderBy(col("adc").desc, col("vec_id").asc)
         .limit(REFINE_C)
@@ -410,7 +361,8 @@ object Round7More {
       val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       val codes = VecIndex.readCodes(s, idx)
-      val (_, scored, _) = serveCandidates(e, coarse, cbRow, codes)
+      val scored = VecIndex.adcScores(VecIndex.candidates(codes,
+        VecIndex.probes(e, coarse, NPROBE)), cbRow, VecIndex.queryRow(e))
       val srcs = d.select(col("doc_id").as("vec_id"), col("source"))
       val ws = Window.partitionBy(col("source"))
         .orderBy(col("adc").desc, col("vec_id").asc)

@@ -52,11 +52,6 @@ object Round7Ops {
   // aggregatable, so two 100 TB artifact generations compare with one
   // scan each) ----
 
-  private def sparkFold(c: String): String =
-    s"aggregate(transform(filter(split(md5($c), ''), ch -> ch != ''), " +
-      "ch -> CAST(ascii(ch) AS BIGINT)), 0L, " +
-      s"(a, b) -> (a * 31 + b) % $P)"
-
   private def duckFold(c: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split(md5($c), ''), " +
@@ -181,44 +176,16 @@ object Round7Ops {
         (col("fi") - col("fb")).as("fp_delta"))
     val nNew = newb.agg(count(lit(1)).cast("bigint").as("n_new"))
     // ---- SERVE from the ingested index ----
-    val wp = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0)
-      .crossJoin(broadcast(coarse))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NPROBE)
-      .select(col("cid"))
-    val q0 = e.filter(col("vec_id") === 0)
-      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-    val cand = inc.join(broadcast(probes), "cid")
-      .filter(col("vec_id") =!= 0)
-    val scored = cand
-      .crossJoin(broadcast(cbRow))
-      .crossJoin(broadcast(q0))
-      .withColumn("adc", expr(Pq.adcFromCodes))
-      .select(col("vec_id"), col("adc"))
-    val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(10)
-    val exactAll = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q0))
-      .select(col("vec_id"), expr(Pq.intDot(
-        KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-    val globalTop = exactAll
-      .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-      .select(col("vec_id"), lit(1).as("hit"))
-    val exactTop = exactAll
-      .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
+    val q0 = VecIndex.queryRow(e)
+    val cand = VecIndex.candidates(inc, VecIndex.probes(e, coarse, NPROBE))
     val nc = cand.agg(count(lit(1)).cast("bigint").as("n_cand"))
-    top
-      .join(broadcast(exactTop), Seq("vec_id"))
-      .join(broadcast(globalTop), Seq("vec_id"), "left")
+    VecIndex.refereed(VecIndex.adcScores(cand, cbRow, q0),
+        e.filter(col("vec_id") =!= 0), q0)
       .crossJoin(broadcast(nc))
       .crossJoin(broadcast(nNew))
       .crossJoin(broadcast(dd))
-      .select(col("vec_id"), col("adc"), col("exact"),
-        coalesce(col("hit"), lit(0)).as("in_exact"), col("n_cand"),
-        col("n_new"), col("rows_delta"), col("fp_delta"))
+      .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
+        col("n_cand"), col("n_new"), col("rows_delta"), col("fp_delta"))
       .orderBy(col("adc").desc, col("vec_id").asc)
   }
 
@@ -492,47 +459,19 @@ object Round7Ops {
         .select((col("nv") - col("nf")).as("rows_delta"),
           (col("fv") - col("ff")).as("fp_delta"))
       val nTomb = tomb.agg(count(lit(1)).cast("bigint").as("n_tomb"))
-      // ---- SERVE from the compacted generation ----
-      val wp = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probes = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wp))
-        .filter(col("rn") <= NPROBE)
-        .select(col("cid"))
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val cand = codesV2.join(broadcast(probes), "cid")
-        .filter(col("vec_id") =!= 0)
-      val scored = cand
-        .crossJoin(broadcast(cbRow))
-        .crossJoin(broadcast(q0))
-        .withColumn("adc", expr(Pq.adcFromCodes))
-        .select(col("vec_id"), col("adc"))
-      val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-        .limit(10)
-      // exact referee over the SURVIVING corpus
-      val exactAll = e
-        .filter(col("vec_id") =!= 0 && col("vec_id") % 7 =!= 3)
-        .crossJoin(broadcast(q0))
-        .select(col("vec_id"), expr(Pq.intDot(
-          KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-      val globalTop = exactAll
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
-      val exactTop = exactAll
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
+      // ---- SERVE from the compacted generation, refereed over the
+      // SURVIVING corpus ----
+      val q0 = VecIndex.queryRow(e)
+      val cand = VecIndex.candidates(codesV2,
+        VecIndex.probes(e, coarse, NPROBE))
       val nc = cand.agg(count(lit(1)).cast("bigint").as("n_cand"))
-      top
-        .join(broadcast(exactTop), Seq("vec_id"))
-        .join(broadcast(globalTop), Seq("vec_id"), "left")
+      VecIndex.refereed(VecIndex.adcScores(cand, cbRow, q0),
+          e.filter(col("vec_id") =!= 0 && col("vec_id") % 7 =!= 3), q0)
         .crossJoin(broadcast(nc))
         .crossJoin(broadcast(nTomb))
         .crossJoin(broadcast(dd))
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).as("in_exact"), col("n_cand"),
-          col("n_tomb"), col("rows_delta"), col("fp_delta"))
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
+          col("n_cand"), col("n_tomb"), col("rows_delta"), col("fp_delta"))
         .orderBy(col("adc").desc, col("vec_id").asc)
     }
   )

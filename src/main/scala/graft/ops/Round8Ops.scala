@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -55,22 +54,14 @@ object Round8Ops {
     s.createDataFrame(cp.rdd, cp.schema)
   }
 
-  /** IVF-probed entry points over the persisted hard assignments —
-    * q233's v0 (min vec_id per probed cell).
+  /** ADC beam ranking over the stored codes (q241/q243): the top-BEAM
+    * ids of a bounded visited frame by ADC against query 0.
     */
-  private def entriesOf(
-      e: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame = {
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0).crossJoin(broadcast(cb))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= Round7Final.NPROBE).select(col("cid"))
-    hard.join(broadcast(probes), col("acell") === col("cid"))
-      .filter(col("vec_id") =!= 0)
-      .groupBy(col("acell")).agg(min(col("vec_id")).as("vec_id"))
-      .select(col("vec_id")).distinct()
-  }
+  private def adcBeam(codes: DataFrame, cbRow: DataFrame, q0: DataFrame)(
+      v: DataFrame): DataFrame =
+    VecIndex.adcScores(codes.join(broadcast(v), Seq("vec_id")), cbRow, q0)
+      .orderBy(col("adc").desc, col("vec_id").asc)
+      .limit(Round7Final.BEAM).select(col("vec_id"))
 
   /** The hop loop with a pluggable frontier ranking: each hop's
     * bounded frontier (`topB(visited)`, ≤ beam rows BY CONSTRUCTION)
@@ -207,37 +198,21 @@ object Round8Ops {
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-      // ADC of a bounded visited frame: broadcast ids into the code
-      // table, resolve codewords from the broadcast PQ codebooks —
-      // never touches the raw vectors
-      def adcOf(v: DataFrame): DataFrame =
-        codes.join(broadcast(v), Seq("vec_id"))
-          .crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
-          .withColumn("adc", expr(Pq.adcFromCodes))
-          .select(col("vec_id"), col("adc"))
-      def topBAdc(v: DataFrame): DataFrame =
-        adcOf(v).orderBy(col("adc").desc, col("vec_id").asc)
-          .limit(Round7Final.BEAM).select(col("vec_id"))
-      val visited =
-        beamLoop(s, edges, entriesOf(e, cb, hard), topBAdc)
+      val q0 = VecIndex.queryRow(e)
+      val visited = beamLoop(s, edges,
+        Round7Final.entriesOver(e, cb, hard), adcBeam(codes, cbRow, q0))
       // exact refine of the ADC top-PQC only — the raw-vector read is
-      // PQC rows, not the visited set, not the corpus
-      val cand = adcOf(visited)
+      // PQC rows, not the visited set, not the corpus; ADC never touches
+      // the raw vectors
+      val cand = VecIndex.adcScores(
+          codes.join(broadcast(visited), Seq("vec_id")), cbRow, q0)
         .orderBy(col("adc").desc, col("vec_id").asc).limit(PQC)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
+      val (qdot, tope) = Round7Final.query0Exact(ivc)
       val ref = ivc.join(broadcast(cand), Seq("vec_id"))
-        .select(col("vec_id"), col("adc"), qdot.cast("bigint").as("exact"))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
+        .select(col("vec_id"), col("adc"), qdot.as("exact"))
       ref.orderBy(col("exact").desc, col("vec_id").asc).limit(10)
         .join(broadcast(tope), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"))
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact)
         .orderBy(col("exact").desc, col("vec_id").asc)
     },
 
@@ -280,34 +255,29 @@ object Round8Ops {
       val d = Tables.table(s, dir, "documents")
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
-      def topB(v: DataFrame): DataFrame =
-        ivc.join(broadcast(v), Seq("vec_id"))
-          .select(col("vec_id"), qdot.cast("bigint").as("exact"))
-          .orderBy(col("exact").desc, col("vec_id").asc)
-          .limit(FW).select(col("vec_id"))
-      val visited = beamLoop(s, edges, entriesOf(e, cb, hard), topB)
       // the eligibility predicate pushes to the documents scan; the
-      // filter lands on the BOUNDED visited set via an id semi-join
+      // filter lands on the BOUNDED visited set via an id semi-join, and
+      // the referee is the exact top-10 over the ELIGIBLE corpus only
       val elig = d.filter(col("lang") === LANG)
         .select(col("doc_id").as("vec_id"))
+      val (qdot, topef) = Round7Final.query0Exact(ivc,
+        _.join(elig, Seq("vec_id"), "left_semi"))
+      def topB(v: DataFrame): DataFrame =
+        ivc.join(broadcast(v), Seq("vec_id"))
+          .select(col("vec_id"), qdot.as("exact"))
+          .orderBy(col("exact").desc, col("vec_id").asc)
+          .limit(FW).select(col("vec_id"))
+      val visited = beamLoop(s, edges,
+        Round7Final.entriesOver(e, cb, hard), topB)
       val vise = visited.join(elig, Seq("vec_id"), "left_semi")
       val nv = visited.agg(count(lit(1)).cast("bigint").as("n_visited"))
       val ne = vise.agg(count(lit(1)).cast("bigint").as("n_elig_vis"))
       val sc = ivc.join(broadcast(vise), Seq("vec_id"))
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
-      // referee: exact top-10 over the ELIGIBLE corpus only
-      val topef = ivc.join(elig, Seq("vec_id"), "left_semi")
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
+        .select(col("vec_id"), qdot.as("exact"))
       sc.orderBy(col("exact").desc, col("vec_id").asc).limit(10)
         .join(broadcast(topef), Seq("vec_id"), "left")
         .crossJoin(broadcast(nv)).crossJoin(broadcast(ne))
-        .select(col("vec_id"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("exact"), VecIndex.inExact,
           col("n_visited"), col("n_elig_vis"))
         .orderBy(col("exact").desc, col("vec_id").asc)
     },
@@ -343,26 +313,13 @@ object Round8Ops {
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val qivd = ivc.filter(col("vec_id") === 0).head.getSeq[Double](1)
-      val qdot = call_function("array_dot", col("ivd"), typedlit(qivd))
-      val entries = entriesOf(e, cb, hard)
+      val (qdot, tope) = Round7Final.query0Exact(ivc)
+      val entries = Round7Final.entriesOver(e, cb, hard)
       def topBExact(v: DataFrame): DataFrame =
         ivc.join(broadcast(v), Seq("vec_id"))
-          .select(col("vec_id"), qdot.cast("bigint").as("exact"))
+          .select(col("vec_id"), qdot.as("exact"))
           .orderBy(col("exact").desc, col("vec_id").asc)
           .limit(Round7Final.BEAM).select(col("vec_id"))
-      def topBAdc(v: DataFrame): DataFrame =
-        codes.join(broadcast(v), Seq("vec_id"))
-          .crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
-          .withColumn("adc", expr(Pq.adcFromCodes))
-          .orderBy(col("adc").desc, col("vec_id").asc)
-          .limit(Round7Final.BEAM).select(col("vec_id"))
-      val tope = ivc.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), qdot.cast("bigint").as("exact"))
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"))
       def rowOf(mode: String, visited: DataFrame): DataFrame =
         visited.agg(count(lit(1)).cast("bigint").as("n_visited"))
           .crossJoin(broadcast(
@@ -370,7 +327,8 @@ object Round8Ops {
               .agg(count(lit(1)).cast("bigint").as("n_hit"))))
           .select(lit(mode).as("mode"), col("n_visited"), col("n_hit"))
       val vx = beamLoop(s, edges, entries, topBExact)
-      val vy = beamLoop(s, edges, entries, topBAdc)
+      val vy = beamLoop(s, edges, entries,
+        adcBeam(codes, cbRow, VecIndex.queryRow(e)))
       rowOf("exact", vx).unionByName(rowOf("adc", vy))
         .orderBy(col("mode"))
     },
@@ -450,41 +408,14 @@ object Round8Ops {
       val codes = VecIndex.readCodes(s, root)
       val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
       val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
-      val wq = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probes = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= GNPROBE).select(col("cid"))
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val cand = codes.join(broadcast(probes), "cid")
-        .filter(col("vec_id") =!= 0)
-      val scored = cand
-        .crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
-        .withColumn("adc", expr(Pq.adcFromCodes))
-        .select(col("vec_id"), col("adc"))
-      val exalls = e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q0))
-        .select(col("vec_id"), expr(Pq.intDot(
-          KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-      val tope = exalls
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
+      val q0 = VecIndex.queryRow(e)
       val nv1 = base.agg(count(lit(1)).cast("bigint").as("n_v1"))
       val nv2 = e.agg(count(lit(1)).cast("bigint").as("n_v2"))
-      val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-        .limit(10)
-      // exact scores fetched for the 10 served rows only
-      val refEx = exalls
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
-      top
-        .join(broadcast(refEx), Seq("vec_id"))
-        .join(broadcast(tope), Seq("vec_id"), "left")
+      VecIndex.refereed(VecIndex.adcScores(VecIndex.candidates(codes,
+          VecIndex.probes(e, coarse, GNPROBE)), cbRow, q0),
+          e.filter(col("vec_id") =!= 0), q0)
         .crossJoin(broadcast(nv1)).crossJoin(broadcast(nv2))
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
           lit(2L).as("gen"), col("n_v1"), col("n_v2"))
         .orderBy(col("adc").desc, col("vec_id").asc)
     }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -80,43 +79,6 @@ object Round9More {
     VecIndex.readCodes(s, src).repartition(col("cid"))
       .write.mode("overwrite")
       .partitionBy("cid").parquet(s"$dst/codes")
-  }
-
-  /** The pointed ADC serve both gates share: probe the coarse cells for
-    * query vec_id=0, ADC-score the probed cells' stored codes against
-    * broadcast PQ codebooks, exact-referee the top-10 (q244's shape).
-    * `root` supplies coarse/pq; `codes` is passed separately so q249
-    * can serve from the compacted copy.
-    */
-  private def servedTop10(
-      s: SparkSession, e: DataFrame, root: String, codes: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
-    val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0)
-      .crossJoin(broadcast(coarse))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= MNPROBE).select(col("cid"))
-    val q0 = e.filter(col("vec_id") === 0)
-      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-    val scored = codes.join(broadcast(probes), "cid")
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
-      .withColumn("adc", expr(Pq.adcFromCodes))
-      .select(col("vec_id"), col("adc"))
-    val exalls = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q0))
-      .select(col("vec_id"), expr(Pq.intDot(
-        KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-    val tope = exalls
-      .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-      .select(col("vec_id"), lit(1).as("hit"))
-    val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-      .limit(10)
-    (top, exalls, tope)
   }
 
   /** The shared oracle chain: full-corpus assignment + PQ codes + the
@@ -202,13 +164,13 @@ object Round9More {
       // content identity: order-independent fingerprint + row count
       val fpF = Round7Ops.fpOf(fragmented).head()
       val fpC = Round7Ops.fpOf(compacted).head()
-      val (top, exalls, tope) = servedTop10(s, e, idx, compacted)
-      val refEx = exalls
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
-      top.join(broadcast(refEx), Seq("vec_id"))
-        .join(broadcast(tope), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+      // serve from the compacted copy (q244's pointed ADC shape)
+      val q0 = VecIndex.queryRow(e)
+      VecIndex.refereed(VecIndex.adcScores(VecIndex.candidates(compacted,
+          VecIndex.probes(e, ArtifactStore.readParquet(s, s"$idx/coarse"),
+            MNPROBE)), ArtifactStore.readParquet(s, s"$idx/pq"), q0),
+          e.filter(col("vec_id") =!= 0), q0)
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
           lit(nCells).as("n_cells"),
           lit(if (nBefore > nCells) 1 else 0).cast("int")
             .as("was_fragmented"),
@@ -269,15 +231,14 @@ object Round9More {
         s"GC violated: kept ${gensAfter.mkString(",")} expected $keep")
       // SERVE through the pointer from the survivors
       val codes = VecIndex.readCodes(s, root)
-      val (top, exalls, tope) = servedTop10(s, e, root, codes)
-      val refEx = exalls
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
       val pointedIntact = if (dataFiles(s"$root/codes") > 0) 1 else 0
       val rollbackIntact = prevRoot.exists(p => dataFiles(s"$p/codes") > 0)
-      top.join(broadcast(refEx), Seq("vec_id"))
-        .join(broadcast(tope), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+      val q0 = VecIndex.queryRow(e)
+      VecIndex.refereed(VecIndex.adcScores(VecIndex.candidates(codes,
+          VecIndex.probes(e, ArtifactStore.readParquet(s, s"$root/coarse"),
+            MNPROBE)), ArtifactStore.readParquet(s, s"$root/pq"), q0),
+          e.filter(col("vec_id") =!= 0), q0)
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
           lit(gensBefore.size.toLong).as("n_gens_before"),
           lit(gensAfter.size.toLong).as("n_kept"),
           lit(removed.size.toLong).as("n_removed"),

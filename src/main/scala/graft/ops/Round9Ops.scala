@@ -55,19 +55,6 @@ object Round9Ops {
     s.createDataFrame(cp.rdd, cp.schema)
   }
 
-  /** Per-(qid, vec_id) ADC of a bounded visited frame: broadcast the
-    * ids into the stored-code table, resolve codewords from the
-    * broadcast PQ codebooks — never touches the raw vectors.
-    */
-  private def adcB(
-      codes: DataFrame, cbRow: DataFrame, qsb: DataFrame)(
-      v: DataFrame): DataFrame =
-    codes.join(broadcast(v), Seq("vec_id"))
-      .join(broadcast(qsb), Seq("qid"))
-      .crossJoin(broadcast(cbRow))
-      .withColumn("adc", expr(Pq.adcFromCodes))
-      .select(col("qid"), col("vec_id"), col("adc"))
-
   /** The batched hop loop with ADC-ranked frontiers — Round7Final
     * .beamFromBatch's exact shape (driver-resident ≤ Q·beam frontier,
     * local-relation broadcast, static bucket prune of the partitioned
@@ -81,7 +68,7 @@ object Round9Ops {
     val wq = Window.partitionBy(col("qid"))
       .orderBy(col("adc").desc, col("vec_id").asc)
     def topB(v: DataFrame): DataFrame =
-      adcB(codes, cbRow, qsb)(v)
+      VecIndex.adcScoresBatch(codes, cbRow, qsb)(v)
         .withColumn("rn", row_number().over(wq))
         .filter(col("rn") <= beam).select(col("qid"), col("vec_id"))
     val eb = Round7Final.ensureSb(edges)
@@ -103,27 +90,6 @@ object Round9Ops {
     visited
   }
 
-  /** Per-qid IVF-probed entry points over the persisted hard
-    * assignments — serveGraphFrame's entry shape.
-    */
-  private def entriesForBatch(
-      batch: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame = {
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probesb = batch
-      .select(col("vec_id").as("qid"), col("embedding"))
-      .crossJoin(broadcast(cb))
-      .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= Round7Final.NPROBE)
-      .select(col("qid"), col("cid"))
-    hard.join(broadcast(probesb), col("acell") === col("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("acell"))
-      .agg(min(col("vec_id")).as("vec_id"))
-      .select(col("qid"), col("vec_id")).distinct()
-  }
-
   /** The batch-side transformation one q246 micro-batch runs: batched
     * ADC-ranked beam search, exact refine of each query's ADC
     * top-RPQC, per-qid exact top-10 — separated from the sink write so
@@ -137,14 +103,14 @@ object Round9Ops {
       expr(Round7Final.scaledD).as("qiv"))
     val qsb = batch.select(col("vec_id").as("qid"),
       expr(KMeans.scaleExpr("embedding")).as("qs"))
-    val entries = entriesForBatch(batch, cb, hard)
+    val entries = Round7Final.entriesForBatch(batch, cb, hard)
     val visited = beamFromBatchAdc(bs, codes, cbRow, qsb, edges,
       entries, Round7Final.BEAM, Round7Final.HOPS)
     // exact refine of each query's ADC top-RPQC only — the raw-vector
     // read is Q·RPQC rows, not the visited set, not the corpus
     val wadc = Window.partitionBy(col("qid"))
       .orderBy(col("adc").desc, col("vec_id").asc)
-    val cand = adcB(codes, cbRow, qsb)(visited)
+    val cand = VecIndex.adcScoresBatch(codes, cbRow, qsb)(visited)
       .withColumn("rn", row_number().over(wadc))
       .filter(col("rn") <= RPQC).select(col("qid"), col("vec_id"))
     val wk = Window.partitionBy(col("qid"))
@@ -312,40 +278,15 @@ object Round9Ops {
       val codes = VecIndex.readCodes(s, root)
       val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
       val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
-      val wq = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probes = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= RNPROBE).select(col("cid"))
-      val q0 = e.filter(col("vec_id") === 0)
-        .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val cand = codes.join(broadcast(probes), "cid")
-        .filter(col("vec_id") =!= 0)
-      val scored = cand
-        .crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
-        .withColumn("adc", expr(Pq.adcFromCodes))
-        .select(col("vec_id"), col("adc"))
+      val q0 = VecIndex.queryRow(e)
+      val nCorpus = e.agg(count(lit(1)).cast("bigint").as("n_corpus"))
       // the exact referee runs over the POINTED generation's corpus —
       // gen 1 indexes the base split
-      val exalls = base.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q0))
-        .select(col("vec_id"), expr(Pq.intDot(
-          KMeans.scaleExpr("embedding"), "qs")).as("exact"))
-      val tope = exalls
-        .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
-        .select(col("vec_id"), lit(1).as("hit"))
-      val nCorpus = e.agg(count(lit(1)).cast("bigint").as("n_corpus"))
-      val top = scored.orderBy(col("adc").desc, col("vec_id").asc)
-        .limit(10)
-      val refEx = exalls
-        .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
-      top.join(broadcast(refEx), Seq("vec_id"))
-        .join(broadcast(tope), Seq("vec_id"), "left")
+      VecIndex.refereed(VecIndex.adcScores(VecIndex.candidates(codes,
+          VecIndex.probes(e, coarse, RNPROBE)), cbRow, q0),
+          base.filter(col("vec_id") =!= 0), q0)
         .crossJoin(broadcast(nCorpus))
-        .select(col("vec_id"), col("adc"), col("exact"),
-          coalesce(col("hit"), lit(0)).cast("int").as("in_exact"),
+        .select(col("vec_id"), col("adc"), col("exact"), VecIndex.inExact,
           lit(gen).as("gen"),
           lit(if (promoted) 1 else 0).cast("int").as("promoted"),
           col("n_corpus"), lit(nCand).as("n_cand_codes"))
@@ -438,7 +379,7 @@ object Round9Ops {
         .select(col("vec_id").as("qid"), col("ivd").as("qiv"))
       val qsb = batch.select(col("vec_id").as("qid"),
         expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val entries = entriesForBatch(batch, cb, hard)
+      val entries = Round7Final.entriesForBatch(batch, cb, hard)
       // the per-query exact referee — ONE full scan windowed by qid,
       // shared by both modes
       val wex = Window.partitionBy(col("qid"))

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted vector-index ARTIFACT lifecycle (SURVEY.md §2.3 E7): the
@@ -27,6 +28,32 @@ import org.apache.spark.sql.functions._
   *
   * Consumers: q224 (build → serve), q225 (ingest into `codes` without
   * retraining), q227 (tombstone + compaction of `codes`).
+  *
+  * It also holds the QUERY-0 SERVE KIT: the one probe → score → referee
+  * pipeline of every gate that serves query 0 (vec_id = 0) from stored
+  * PQ codes, so a probe or scoring change cannot desync them. Each
+  * piece stops where its callers diverge; callers add their own count
+  * columns and final select.
+  *
+  *  - [[queryRow]] — query 0's scaled row `qs`: q202, q207/q220/q224,
+  *    q219, q222, q225/q229, q227, q228, q230, q231, q241, q243, q244,
+  *    q245, q249, q250.
+  *  - [[probeRanks]] / [[probes]] — query 0's ranked / top-`nprobe`
+  *    coarse cells: the IVF-PQ serves, q222 (ranks), q228 (its
+  *    selectivity-adapted cut over the ranks) and the graph entry
+  *    points (`Round7Final.entriesOver`: q233–q235, q237, q241–q243).
+  *  - [[candidates]] — the probed cells' stored codes: the IVF-PQ
+  *    serves, q228, q230, q231.
+  *  - [[adcScores]] — ADC of a code frame against `qs` (plus the
+  *    q·centroid term for the residual index): q207/q220/q224,
+  *    q225/q229, q227, q228, q230, q231, q241, q243, q244, q245, q249,
+  *    q250. [[adcScoresBatch]] is its per-qid form: q246, q247.
+  *  - [[refereed]] — the ADC top-10 joined to its exact scores and
+  *    flagged against the referee corpus's exact top-10 (read through
+  *    [[inExact]]): q207/q220/q224, q225/q229, q227, q228, q244, q245,
+  *    q249, q250.
+  *
+  * [[serveIvfPq]] is these pieces composed.
   */
 object VecIndex {
 
@@ -145,51 +172,107 @@ object VecIndex {
         .parquet(s"$p/codes")
     }._1
 
-  /** The ARTIFACT-SERVED single-query IVF-PQ search (q207/q220/q224's
-    * shared serve kernel — one implementation, three gates, so a probe
-    * or scoring change cannot desync them): probe the query's `nprobe`
-    * coarse cells against the persisted coarse codebook, read ONLY the
-    * probed cells' code files (the codes artifact is partitioned by
-    * cid, so the broadcast probe join partition-prunes the scan), ADC-
-    * score the candidates from their stored codes — plus the exact
-    * q·centroid term when `residual` (IVFADC) — and referee the top-10
-    * against the global exact top-10. The raw-vector scans are the
-    * query row and the exact REFEREE only (a 10-row heap + broadcast-
-    * of-10 lookup — evaluation harness, not the serving path).
+  /** The ARTIFACT-SERVED single-query IVF-PQ search (q207/q220/q224):
+    * probe the query's `nprobe` coarse cells against the persisted
+    * coarse codebook, read ONLY the probed cells' code files (the codes
+    * artifact is partitioned by cid, so the broadcast probe join
+    * partition-prunes the scan), ADC-score the candidates from their
+    * stored codes — plus the exact q·centroid term when `residual`
+    * (IVFADC) — and referee the top-10 against the global exact top-10.
+    * The raw-vector scans are the query row and the exact REFEREE only
+    * (a 10-row heap + broadcast-of-10 lookup — evaluation harness, not
+    * the serving path).
     */
   private[ops] def serveIvfPq(
       s: SparkSession, root: String, e: DataFrame, nprobe: Int,
       residual: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val coarse = ArtifactStore.readParquet(s, s"$root/coarse")
     val cbRow = ArtifactStore.readParquet(s, s"$root/pq")
-    val codes = readCodes(s, root)
-    val wp = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cdot").desc, col("cid").asc)
-    val probes = e.filter(col("vec_id") === 0)
+    val q0 = queryRow(e)
+    val cand = candidates(readCodes(s, root), probes(e, coarse, nprobe))
+    val nc = cand.agg(count(lit(1)).cast("bigint").as("n_cand"))
+    refereed(adcScores(cand, cbRow, q0,
+        if (residual) Some(coarse) else None),
+        e.filter(col("vec_id") =!= 0), q0)
+      .crossJoin(broadcast(nc))
+      .select(col("vec_id"), col("adc"), col("exact"), inExact,
+        col("n_cand"))
+      .orderBy(col("adc").desc, col("vec_id").asc)
+  }
+
+  // ---------------- the query-0 serve kit (see the object doc) -------
+
+  /** Query 0's fixed-point row: one row, `qs`. */
+  private[ops] def queryRow(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") === 0)
+      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
+
+  /** Every coarse cell ranked for query 0: the codebook row columns
+    * plus `cdot` (centroid dot) and `rn` (1 = nearest).
+    */
+  private[ops] def probeRanks(e: DataFrame, coarse: DataFrame): DataFrame =
+    e.filter(col("vec_id") === 0)
       .crossJoin(broadcast(coarse))
       .withColumn("cdot", expr(KMeans.dotFold("embedding", "cs")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("cid"))
-    val q0 = e.filter(col("vec_id") === 0)
-      .select(expr(KMeans.scaleExpr("embedding")).as("qs"))
-    val cand = codes.join(broadcast(probes), "cid")
-      .filter(col("vec_id") =!= 0)
-    val base = cand
-      .crossJoin(broadcast(cbRow))
-      .crossJoin(broadcast(q0))
-    val scored =
-      (if (residual)
+      .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(col("cdot").desc, col("cid").asc)))
+
+  /** Query 0's `nprobe` nearest coarse cells: (cid). */
+  private[ops] def probes(
+      e: DataFrame, coarse: DataFrame, nprobe: Int): DataFrame =
+    probeRanks(e, coarse).filter(col("rn") <= nprobe).select(col("cid"))
+
+  /** The stored codes of the probed `cells` (cid), query 0 itself
+    * excluded.
+    */
+  private[ops] def candidates(codes: DataFrame, cells: DataFrame)
+      : DataFrame =
+    codes.join(broadcast(cells), "cid").filter(col("vec_id") =!= 0)
+
+  /** ADC score of a (vec_id, cid, c0..c{M-1}) code frame against the
+    * query row `q0` and the broadcast PQ codebooks: (vec_id, adc). With
+    * `residualOf` (the coarse codebook) the exact q·centroid term is
+    * added — the residual IVFADC score.
+    */
+  private[ops] def adcScores(
+      codes: DataFrame, cbRow: DataFrame, q0: DataFrame,
+      residualOf: Option[DataFrame] = None): DataFrame = {
+    val base = codes.crossJoin(broadcast(cbRow)).crossJoin(broadcast(q0))
+    (residualOf match {
+      case Some(coarse) =>
         base.join(broadcast(coarse.select(col("cid"),
             col("cs").as("ccs"))), Seq("cid"))
           .withColumn("adc",
             expr(Pq.intDot("qs", "ccs")) + expr(Pq.adcFromCodes))
-      else base.withColumn("adc", expr(Pq.adcFromCodes)))
-        .select(col("vec_id"), col("adc"))
+      case None => base.withColumn("adc", expr(Pq.adcFromCodes))
+    }).select(col("vec_id"), col("adc"))
+  }
+
+  /** Per-(qid, vec_id) ADC of a bounded (qid, vec_id) frame `v`:
+    * broadcast the ids into the stored-code table, join each query's
+    * `qs` row from `qsb` (qid, qs), resolve codewords from the
+    * broadcast PQ codebooks — never touches the raw vectors.
+    */
+  private[ops] def adcScoresBatch(
+      codes: DataFrame, cbRow: DataFrame, qsb: DataFrame)(
+      v: DataFrame): DataFrame =
+    codes.join(broadcast(v), Seq("vec_id"))
+      .join(broadcast(qsb), Seq("qid"))
+      .crossJoin(broadcast(cbRow))
+      .withColumn("adc", expr(Pq.adcFromCodes))
+      .select(col("qid"), col("vec_id"), col("adc"))
+
+  /** The ADC top-10 of `scored` (vec_id, adc) joined to its exact
+    * scores and flagged against the exact top-10 of the referee corpus
+    * `ref` (embedding rows, query 0 already excluded):
+    * (vec_id, adc, exact, hit), `hit` null off the exact top-10. The
+    * exact scores come from one scan of `ref` — a 10-row heap plus a
+    * broadcast-of-10 lookup.
+    */
+  private[ops] def refereed(
+      scored: DataFrame, ref: DataFrame, q0: DataFrame): DataFrame = {
     val top = scored.orderBy(col("adc").desc, col("vec_id").asc).limit(10)
-    val exactAll = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q0))
+    val exactAll = ref.crossJoin(broadcast(q0))
       .select(col("vec_id"), expr(Pq.intDot(
         KMeans.scaleExpr("embedding"), "qs")).as("exact"))
     val globalTop = exactAll
@@ -197,15 +280,14 @@ object VecIndex {
       .select(col("vec_id"), lit(1).as("hit"))
     val exactTop = exactAll
       .join(broadcast(top.select(col("vec_id"))), Seq("vec_id"))
-    val nc = cand.agg(count(lit(1)).cast("bigint").as("n_cand"))
     top
       .join(broadcast(exactTop), Seq("vec_id"))
       .join(broadcast(globalTop), Seq("vec_id"), "left")
-      .crossJoin(broadcast(nc))
-      .select(col("vec_id"), col("adc"), col("exact"),
-        coalesce(col("hit"), lit(0)).as("in_exact"), col("n_cand"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
   }
+
+  /** The referee flag column over [[refereed]]'s `hit`. */
+  private[ops] def inExact: Column =
+    coalesce(col("hit"), lit(0)).as("in_exact")
 
   /** Read the partitioned codes artifact with its schema restored to
     * the written shape: cid back to BIGINT (partition-value inference

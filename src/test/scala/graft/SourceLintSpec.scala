@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * It also keeps the two session seams single: SQL functions are
   * registered only by `functions/Functions.scala`, and sessions are built
   * only by `GraftSession` (plus the opt-in extension session of
-  * `Round3Ops.extensionSession`).
+  * `Round3Ops.extensionSession`). And it keeps the vector tier's
+  * query-0 serve kit single: ADC scoring over stored PQ codes is built
+  * only in `ops/VecIndex.scala` (and the PQ gates of `ops/Pq.scala`).
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -103,5 +105,17 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"SparkSession.builder() at: ${bad.mkString(", ")}" +
       " — build sessions with graft.GraftSession.build")
+  }
+
+  test("ADC over stored codes is built only by VecIndex and Pq") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bad = codeMatches(
+      "Pq\\s*\\.\\s*adcFromCodes\\b|\\bexpr\\(\\s*adcFromCodes\\b".r) {
+      (f, _, _) =>
+        f.getName == "VecIndex.scala" || f.getName == "Pq.scala"
+    }
+    assert(bad.isEmpty, s"inline ADC scoring at: ${bad.mkString(", ")}" +
+      " — score through VecIndex.adcScores / adcScoresBatch (the query-0" +
+      " serve kit)")
   }
 }

@@ -28,7 +28,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    identical build; only then does the build run.
   *  - MARKER LAST: the marker is written after the build returns, so a
   *    crashed or throwing half-build is never trusted and the next call
-  *    rebuilds.
+  *    rebuilds. A build that must start from an empty root clears it
+  *    with [[clearRoot]], which spares the lock file the build holds.
   *  - PER-CALL RE-CHECK: the in-JVM [[Memo]] is a cache of the decision,
   *    never a substitute for it — every call compares the caller's
   *    table signature (a metadata-only [[tableFileSig]] listing) and
@@ -169,6 +170,21 @@ object ArtifactStore {
     val p = new Path(path)
     val fs = fsOf(p)
     if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** Empty `root` for a (re)build, creating it when missing: every entry
+    * goes except the `_build.lock` file. A build running under
+    * [[withBuildLock]] holds that file open; deleting it would let a
+    * second process lock a fresh file on the same root and wipe it
+    * mid-build.
+    */
+  private[ops] def clearRoot(root: String): Unit = {
+    val p = new Path(root)
+    val fs = fsOf(p)
+    if (fs.exists(p))
+      fs.listStatus(p).filter(_.getPath.getName != LockFile)
+        .foreach(st => fs.delete(st.getPath, true))
+    else fs.mkdirs(p)
   }
 
   /** List a path's file statuses as (relative path, size, mtime),
@@ -440,6 +456,8 @@ object ArtifactStore {
       }
     }
 
+  private val LockFile = "_build.lock"
+
   // roots this thread currently holds a build lock for (re-entrancy:
   // a nested build step against the same root just runs)
   private val held = new ThreadLocal[Set[String]] {
@@ -458,10 +476,10 @@ object ArtifactStore {
     * non-local roots fall back to the in-JVM monitor only — cluster
     * stores coordinate re-builds upstream (one writer job), and the
     * marker-written-last protocol still rejects any torn build.
-    * Re-entrant per thread. Artifact builds go through [[buildOnce]],
-    * which re-checks the marker inside the lock.
+    * Re-entrant per thread. Private to the store: every build takes
+    * it through [[buildOnce]], which re-checks the marker inside it.
     */
-  def withBuildLock[T](root: String)(body: => T): T = {
+  private[ops] def withBuildLock[T](root: String)(body: => T): T = {
     if (held.get().contains(root)) return body
     val mon = monitors.computeIfAbsent(root, _ => new Object)
     mon.synchronized {
@@ -473,7 +491,7 @@ object ArtifactStore {
           val dir = java.nio.file.Paths.get(uri.getPath)
           java.nio.file.Files.createDirectories(dir)
           val ch = java.nio.channels.FileChannel.open(
-            dir.resolve("_build.lock"),
+            dir.resolve(LockFile),
             java.nio.file.StandardOpenOption.CREATE,
             java.nio.file.StandardOpenOption.WRITE)
           try {

@@ -160,8 +160,8 @@ object FinalOps {
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      StreamOps.withStateParts(s, 8) {
-      val counted = StreamOps.eventsStreamFor(s, dir)
+      StreamOps.withConf(s, StreamOps.stateParts) {
+      val counted = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id").as[Long])
         .groupByKey(identity)
@@ -172,7 +172,7 @@ object FinalOps {
             (user, c)
           })
         .toDF("user_id", "n_purchases")
-      StreamOps.runToMemoryFor(s, counted, "update")
+      StreamOps.runToMemory(s, counted, "update")
         .orderBy(col("user_id"))
       }
     })

@@ -91,16 +91,16 @@ object FrontierOps {
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
         |GROUP BY e.event_type, c.c_mktsegment
         |ORDER BY e.event_type, c.c_mktsegment""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
+      StreamOps.withConf(s, StreamOps.stateParts) {
       val cust = Tables.table(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val enriched = StreamOps.eventsStreamFor(s, dir)
+      val enriched = StreamOps.eventsStream(s, dir)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy(col("event_type"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).cast("double")
             .as("total_value"))
-      StreamOps.runToMemoryFor(s, enriched, "complete")
+      StreamOps.runToMemory(s, enriched, "complete")
         .orderBy(col("event_type"), col("c_mktsegment"))
       }
     },

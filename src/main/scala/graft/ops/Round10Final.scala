@@ -546,26 +546,20 @@ object Round10Final {
       (s, dir) =>
       val raw = Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-      val src = Round6Ops.scratchDir(
-        s"graft_chunkstream_src_${VecIndex.dirDigest(dir)}")
-      raw.repartition(2).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val out = Round6Ops.scratchDir(
+      val stream = StreamOps.stagedSource(s,
+        s"graft_chunkstream_src_${VecIndex.dirDigest(dir)}",
+        Seq(0, 1).map(p => raw.filter(col("doc_id") % 2 === p)))
+      val out = StreamOps.scratchDir(
         s"graft_chunkstream_${VecIndex.dirDigest(dir)}")
-      val q = StreamOps.start(s, stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty) {
-            // documents are atomic per batch, so per-batch refcounts
-            // and per-batch distinct-doc counts are both additive
-            Round10More.cdcChunks(batch)
-              .groupBy(col("chash"), col("n_tokens"))
-              .agg(count(lit(1)).cast("bigint").as("refs_b"),
-                countDistinct(col("doc_id")).cast("bigint").as("docs_b"))
-              .write.mode("overwrite").parquet(s"$out/b$batchId")
-          }
-        })
-      Round6Ops.drainTo(q, out)
+      StreamOps.foldBatches(s, stream, out) { (batch, batchId) =>
+        // documents are atomic per batch, so per-batch refcounts and
+        // per-batch distinct-doc counts are both additive
+        Round10More.cdcChunks(batch)
+          .groupBy(col("chash"), col("n_tokens"))
+          .agg(count(lit(1)).cast("bigint").as("refs_b"),
+            countDistinct(col("doc_id")).cast("bigint").as("docs_b"))
+          .write.mode("overwrite").parquet(s"$out/b$batchId")
+      }
       val store = ArtifactStore.readParquet(s, s"$out/b*")
         .groupBy(col("chash"), col("n_tokens"))
         .agg(sum(col("refs_b")).cast("bigint").as("refs"),

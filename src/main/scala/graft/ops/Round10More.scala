@@ -53,9 +53,6 @@ object Round10More {
       s"list_transform(string_split($t, ''), " +
       s"c -> CAST(unicode(c) AS BIGINT))), (a, b) -> (a * 131 + b) % $M)"
 
-  private[ops] def rmTree(p: String): Unit =
-    ArtifactStore.deleteRecursive(p)
-
   /** The CDC chunk oracle CTE chain over `documents`, ending in
     * `chunks(doc_id, chunk, chash, n_tokens)` — the DuckDB mirror of
     * [[cdcChunks]], shared by q258 and q263's streamed chunk store.
@@ -164,7 +161,7 @@ object Round10More {
          |ORDER BY bucket""".stripMargin) { (s, dir) =>
       val root = ArtifactStore.root(
         s"graft_backfill_${VecIndex.dirDigest(dir)}")
-      rmTree(root)
+      ArtifactStore.deleteRecursive(root)
       ArtifactStore.mkdirs(root)
       val data = s"$root/data"
       def transform() = Tables.table(s, dir, "documents")

@@ -264,7 +264,7 @@ object Round11Extra {
          |GROUP BY source
          |ORDER BY source""".stripMargin) { (s, dir) =>
       val store = Round11More.buildDedupStore(s, dir)
-      val compacted = Round6Ops.scratchDir(
+      val compacted = StreamOps.scratchDir(
         s"graft_dedupstore_c_${VecIndex.dirDigest(dir)}")
       // one shuffle keyed on the bucket → exactly one file per bucket
       s.read.parquet(store)

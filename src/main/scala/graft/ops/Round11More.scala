@@ -81,74 +81,57 @@ object Round11More {
   private[ops] def dedupStoreName(dir: String): String =
     s"graft_dedupstore_${VecIndex.dirDigest(dir)}"
 
-  /** Build the 4 deterministic arrival waves as one parquet file each
-    * (w0..w3), with strictly increasing modification times so the file
-    * stream processes them in wave order regardless of listing details.
+  /** The arrival model of the wave states (q268, q279, q288): wave w
+    * delivers the doc_id % 4 == w slice plus the doc_id % 7 == w
+    * re-crawl redelivery (UNION ALL: a doc whose two slices land in the
+    * same wave is genuinely delivered twice in that wave — the
+    * batch-local dedup absorbs it). Staged by
+    * [[StreamOps.stagedSource]], wave w is micro-batch w.
     */
-  private def writeWaves(
-      s: SparkSession, dir: String, src: String): Unit = {
-    val docs = Tables.table(s, dir, "documents")
-      .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
-    (0 until WAVES).foreach { w =>
-      val stage = s"$src/_stage$w"
-      // primary slice + the re-crawl redelivery slice (UNION ALL: a doc
-      // whose two slices land in the same wave is genuinely delivered
-      // twice in that file — the batch-local dedup absorbs it)
+  private[ops] def arrivalWaves(docs: DataFrame): Seq[DataFrame] =
+    (0 until WAVES).map { w =>
       docs.filter(col("doc_id") % WAVES === w)
         .unionByName(docs.filter(col("doc_id") % 7 === w))
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = ArtifactStore.listEntries(stage)
-        .find(_.endsWith(".parquet")).get
-      val dst = f"$src/w$w%02d.parquet"
-      ArtifactStore.move(s"$stage/$part", dst)
-      ArtifactStore.setMtime(dst, 1000000000000L + w * 60000L)
-      Round10More.rmTree(stage)
     }
+
+  /** A wave state: the fold of a documents stream for `dir`, persisted
+    * under root `name` and built through `memo` — an
+    * [[ArtifactStore.Memo]] entry keyed by `dir` whose signature is the
+    * documents file listing and whose marker is `tag` plus that
+    * signature, so an in-session rewrite of documents rebuilds and two
+    * sessions never build one root at once. A build empties the root
+    * (never the build lock it holds) and runs `fold(root)`; replay
+    * idempotence, proven in the specs, makes reuse safe. Returns the
+    * root.
+    */
+  private[ops] def waveState(memo: ArtifactStore.Memo[String, Unit],
+      dir: String, name: String, tag: String)(
+      fold: String => Unit): String = {
+    val sig = VecIndex.tableFileSig(dir, "documents")
+    memo(dir, sig)((ArtifactStore.root(name), s"$tag|$sig", ())) {
+      (root, _) =>
+        ArtifactStore.clearRoot(root)
+        fold(root)
+    }._1
   }
 
-  private val builtStores = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+  // dir -> q268's persisted dedup store
+  private[ops] val dedupMemo = new ArtifactStore.Memo[String, Unit]
 
-  /** Run the full wave-streamed ingest for `dir` and return the
-    * persisted store path — q268's pipeline, shared with the
-    * compaction gate (q274). Built ONCE per (session, dir), the
-    * KMeans.codebook train-once discipline: the suite's second
-    * consumer serves from the artifact instead of re-streaming the
-    * corpus (the replay-idempotence the spec proves makes reuse safe —
-    * nothing a re-run appends could change the content).
+  /** q268's wave-streamed ingest for `dir`: the persisted store path,
+    * shared with the compaction gate (q274).
     */
   private[ops] def buildDedupStore(s: SparkSession, dir: String): String =
-    builtStores
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(dir, _ => buildDedupStoreFresh(s, dir))
-
-  private def buildDedupStoreFresh(
-      s: SparkSession, dir: String): String = {
-    val src = Round6Ops.scratchDir(
-      s"graft_dedupwaves_${VecIndex.dirDigest(dir)}")
-    val store = Round6Ops.scratchDir(dedupStoreName(dir))
-    writeWaves(s, dir, src)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.StringType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = StreamOps.start(s, stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          ingestWave(s, store, batch, batchId)
-          ()
-        }
-      })
-    Round6Ops.drainTo(q, store)
-    store
-  }
+    waveState(dedupMemo, dir, dedupStoreName(dir), "dedupstore") { store =>
+      val docs = Tables.table(s, dir, "documents")
+        .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
+      val waves = StreamOps.stagedSource(s,
+        s"graft_dedupwaves_${VecIndex.dirDigest(dir)}", arrivalWaves(docs))
+      StreamOps.foldBatches(s, waves, store) { (batch, batchId) =>
+        ingestWave(s, store, batch, batchId)
+        ()
+      }
+    }
 
   val queries: Seq[Q] = Seq(
     // E6×E12: streaming exact-dedup ingest against a persisted
@@ -251,9 +234,9 @@ object Round11More {
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("ntk"),
           md5(col("text")).as("h"))
-      val histDir = Round6Ops.scratchDir(
+      val histDir = StreamOps.scratchDir(
         s"graft_cardhist_${VecIndex.dirDigest(dir)}")
-      val fpsDir = Round6Ops.scratchDir(
+      val fpsDir = StreamOps.scratchDir(
         s"graft_cardfps_${VecIndex.dirDigest(dir)}")
       val base = d.filter(col("doc_id") % DELTA_MOD =!= DELTA_RES)
       val delta = d.filter(col("doc_id") % DELTA_MOD === DELTA_RES)

@@ -134,7 +134,7 @@ object Round11Pipeline {
          |ORDER BY shard""".stripMargin) { (s, dir) =>
       val root = ArtifactStore.root(
         s"graft_release_${VecIndex.dirDigest(dir)}")
-      Round10More.rmTree(root)
+      ArtifactStore.deleteRecursive(root)
       ArtifactStore.mkdirs(root)
       val data = s"$root/data"
       val fp = Tables.table(s, dir, "documents")

@@ -32,36 +32,9 @@ import graft.functions.TextHash
 object Round12More {
 
   private val M = 1000000007L
-  private val WAVES = 4
   private[ops] val TMIX = 32L // q280: temperature-mix target (docs)
 
   // ---------------- q279: streaming card state ----------------
-
-  /** Write the 4 deterministic arrival waves for the card stream:
-    * primary slice doc_id % 4 == w plus the doc_id % 7 == w re-crawl
-    * redelivery (Round11More's arrival model, carrying ntk for the
-    * histogram), one parquet file per wave with strictly increasing
-    * mtimes so the file stream processes them in wave order.
-    */
-  private def writeCardWaves(
-      s: SparkSession, dir: String, src: String): Unit = {
-    val docs = Tables.table(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("bigint").as("ntk"),
-        md5(col("text")).as("h"))
-    (0 until WAVES).foreach { w =>
-      val stage = s"$src/_stage$w"
-      docs.filter(col("doc_id") % WAVES === w)
-        .unionByName(docs.filter(col("doc_id") % 7 === w))
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = ArtifactStore.listEntries(stage)
-        .find(_.endsWith(".parquet")).get
-      val dst = f"$src/w$w%02d.parquet"
-      ArtifactStore.move(s"$stage/$part", dst)
-      ArtifactStore.setMtime(dst, 1000000000000L + w * 60000L)
-      Round10More.rmTree(stage)
-    }
-  }
 
   /** Batch-id subdirs of `root` PRIOR to `batchId` (zero-padded names:
     * lexicographic == numeric). Replay safety depends on reading only
@@ -108,44 +81,25 @@ object Round12More {
     ()
   }
 
-  private val builtCards = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+  // dir -> q279's persisted card state
+  private[ops] val cardMemo = new ArtifactStore.Memo[String, Unit]
 
-  /** Run the card-stream fold for `dir` and return the state root —
-    * built once per (session, dir), the buildDedupStore discipline
-    * (replay idempotence, proven in the spec, makes reuse safe).
+  /** The card-stream fold for `dir` (Round11More's arrival model,
+    * carrying ntk for the histogram) as a wave state: the state root.
     */
   private[ops] def buildCardState(s: SparkSession, dir: String): String =
-    builtCards
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(dir, _ => buildCardStateFresh(s, dir))
-
-  private def buildCardStateFresh(s: SparkSession, dir: String): String = {
-    val src = Round6Ops.scratchDir(
-      s"graft_cardwaves_${VecIndex.dirDigest(dir)}")
-    val root = Round6Ops.scratchDir(
-      s"graft_cardstate_${VecIndex.dirDigest(dir)}")
-    writeCardWaves(s, dir, src)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ntk",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.StringType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = StreamOps.start(s, stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) foldCardBatch(s, root, batch, batchId)
-      })
-    Round6Ops.drainTo(q, s"$root/hist")
-    root
-  }
+    Round11More.waveState(cardMemo, dir,
+        s"graft_cardstate_${VecIndex.dirDigest(dir)}", "cardstate") { root =>
+      val docs = Tables.table(s, dir, "documents")
+        .select(col("doc_id"), col("source"),
+          size(split(col("text"), " ")).cast("bigint").as("ntk"),
+          md5(col("text")).as("h"))
+      val waves = StreamOps.stagedSource(s,
+        s"graft_cardwaves_${VecIndex.dirDigest(dir)}",
+        Round11More.arrivalWaves(docs))
+      StreamOps.foldBatches(s, waves, s"$root/hist")(
+        foldCardBatch(s, root, _, _))
+    }
 
   val queries: Seq[Q] = Seq(
     // E12×governance: the streaming dataset card. The card is DERIVED

@@ -571,14 +571,11 @@ object Round6Ops {
         .select(col("vec_id"), col("cid"),
           expr(KMeans.scaleExpr("embedding")).as("sv"))
       // ---- the QUERY STREAM ----
-      val qStream = embStream(s, dir).filter(col("vec_id") < QN)
-      // deterministic per-dir sink root, WIPED at query start — repeated
-      // executions never accumulate artifacts (round-6 advice)
-      val out = scratchDir(
+      val qStream = StreamOps.fileStream(s, dir, "embeddings")
+        .filter(col("vec_id") < QN)
+      val out = StreamOps.scratchDir(
         s"graft_streamann_${VecIndex.dirDigest(dir)}")
-      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
-        .foreachBatch(serveBatch(lists, coarse, out) _))
-      drainTo(q, out)
+      StreamOps.foldBatches(s, qStream, out)(serveBatch(lists, coarse, out))
       ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     },
 
@@ -654,103 +651,26 @@ object Round6Ops {
   private[ops] def serveBatch(
       lists: DataFrame, coarse: DataFrame, out: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val qb = batch.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"),
-        expr(KMeans.scaleExpr("embedding")).as("qs"))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("cdot").desc, col("cid").asc)
-      val probes = qb.crossJoin(broadcast(coarse))
-        .withColumn("cdot", expr(KMeans.dotFold("qe", "cs")))
-        .withColumn("rn", row_number().over(wp))
-        .filter(col("rn") <= NPROBE)
-        .select(col("qid"), col("qs"), col("cid"))
-      val wk = Window.partitionBy(col("qid"))
-        .orderBy(col("d").desc, col("vec_id").asc)
-      lists.join(broadcast(probes), Seq("cid"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          expr(Pq.intDot("sv", "qs")).as("d"))
-        .withColumn("krn", row_number().over(wk))
-        .filter(col("krn") <= 10)
-        .select(col("qid"), col("krn").cast("bigint").as("rank"),
-          col("vec_id"), col("d"))
-        .write.mode("overwrite").parquet(s"$out/b$batchId")
-    }
-  }
-
-  /** Drain a foreachBatch file-sink stream and stop it. A bare
-    * processAllAvailable can RACE the file source's first listing: a
-    * trigger that ran before discovery saw no files, set noNewData and
-    * released the wait — the query then stops having written ZERO
-    * batches and the sink read fails (observed ~1-in-5 on cold
-    * artifact builds). The fix is to re-process until the sink holds
-    * at least one batch dir (bounded — the gates' query streams are
-    * never empty), letting a later trigger pick the discovery up.
-    */
-  private[graft] def drainTo(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      out: String): Unit = {
-    try {
-      q.processAllAvailable()
-      def empty = ArtifactStore.listEntries(out).isEmpty
-      var tries = 0
-      while (tries < 40 && empty) {
-        Thread.sleep(250); q.processAllAvailable(); tries += 1
-      }
-      if (empty)
-        throw new IllegalStateException(
-          s"stream drain wrote no batch to $out after ${tries} retries" +
-            " — file-source discovery race persisted past 10s (or the" +
-            " source is genuinely empty, which these gates never are)")
-    } finally q.stop()
-  }
-
-  /** Deterministic scratch dir under java.io.tmpdir, wiped clean — the
-    * re-runnable alternative to createTempDirectory-per-invocation
-    * (which accumulated O(corpus) parquet across bench sweeps).
-    */
-  private[ops] def scratchDir(name: String): String = {
-    val p = ArtifactStore.root(name)
-    ArtifactStore.deleteRecursive(p)
-    ArtifactStore.mkdirs(p)
-    p
-  }
-
-  /** Streaming source over the embeddings parquet (file-stream; the
-    * driver dirs ship it as one FILE, which a file stream cannot read
-    * directly — expose it through a scratch-dir symlink, as
-    * StreamOps.eventsStream does for events).
-    *
-    * Deliberately java.nio, NOT ArtifactStore: this is a local
-    * TESTDATA shim (the driver hands data dirs as local files;
-    * symlinks have no Hadoop-FS equivalent), not an artifact path — a
-    * cluster deployment reads its stream sources from real multi-file
-    * directories and never takes this branch.
-    */
-  private[ops] def embStream(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val path = s"$dir/embeddings.parquet"
-    val target = java.nio.file.Paths.get(path)
-    val sourceDir =
-      if (java.nio.file.Files.isDirectory(target)) path
-      else {
-        val streamDir = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"),
-          s"graft_stream_emb_${VecIndex.dirDigest(dir)}")
-        java.nio.file.Files.createDirectories(streamDir)
-        val link = streamDir.resolve("embeddings.parquet")
-        if (java.nio.file.Files.exists(link,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-          (!java.nio.file.Files.isSymbolicLink(link) ||
-            java.nio.file.Files.readSymbolicLink(link) != target))
-          java.nio.file.Files.delete(link)
-        if (!java.nio.file.Files.exists(link,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS))
-          java.nio.file.Files.createSymbolicLink(link, target)
-        streamDir.toString
-      }
-    val schema = ArtifactStore.readParquet(s, path).schema
-    s.readStream.schema(schema).parquet(sourceDir)
+    val qb = batch.select(col("vec_id").as("qid"),
+      col("embedding").as("qe"),
+      expr(KMeans.scaleExpr("embedding")).as("qs"))
+    val wp = Window.partitionBy(col("qid"))
+      .orderBy(col("cdot").desc, col("cid").asc)
+    val probes = qb.crossJoin(broadcast(coarse))
+      .withColumn("cdot", expr(KMeans.dotFold("qe", "cs")))
+      .withColumn("rn", row_number().over(wp))
+      .filter(col("rn") <= NPROBE)
+      .select(col("qid"), col("qs"), col("cid"))
+    val wk = Window.partitionBy(col("qid"))
+      .orderBy(col("d").desc, col("vec_id").asc)
+    lists.join(broadcast(probes), Seq("cid"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        expr(Pq.intDot("sv", "qs")).as("d"))
+      .withColumn("krn", row_number().over(wk))
+      .filter(col("krn") <= 10)
+      .select(col("qid"), col("krn").cast("bigint").as("rank"),
+        col("vec_id"), col("d"))
+      .write.mode("overwrite").parquet(s"$out/b$batchId")
   }
 }

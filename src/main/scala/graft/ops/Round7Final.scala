@@ -294,12 +294,12 @@ object Round7Final {
     * artifacts and returns the visited set (checkpoint-pinned, bounded
     * by NPROBE + hops·beam·DEG rows).
     */
-  private def beamVisited(
-      s: SparkSession, dir: String, beam: Int, hops: Int): DataFrame = {
+  private def beamVisited(s: SparkSession, dir: String, qdot: Column,
+      beam: Int, hops: Int): DataFrame = {
     val (ivc, edges, hard) = graphArtifacts(s, dir)
     val e = Tables.table(s, dir, "embeddings")
     val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-    beamOver(s, e, cb, ivc, edges, hard, beam, hops)
+    beamOver(s, e, cb, ivc, qdot, edges, hard, beam, hops)
   }
 
   /** The serve path over an arbitrary (ivc, edges, hard) graph — shared
@@ -308,9 +308,9 @@ object Round7Final {
     */
   private def beamOver(
       s: SparkSession, e: DataFrame, cb: DataFrame, ivc: DataFrame,
-      edges: DataFrame, hard: DataFrame, beam: Int, hops: Int)
-      : DataFrame =
-    beamFrom(s, ivc, edges, entriesOver(e, cb, hard), beam, hops)
+      qdot: Column, edges: DataFrame, hard: DataFrame, beam: Int,
+      hops: Int): DataFrame =
+    beamFrom(s, ivc, qdot, edges, entriesOver(e, cb, hard), beam, hops)
 
   /** The IVF-probed entry points (min survivor per probed cell) over
     * the persisted hard assignments — beam-width-independent, so curve
@@ -433,12 +433,9 @@ object Round7Final {
     */
   private[ops] def serveGraphBatch(
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
-      out: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      serveGraphFrame(ivc, edges, hard, cb, batch)
-        .write.mode("overwrite").parquet(s"$out/b$batchId")
-    }
-  }
+      out: String)(batch: DataFrame, batchId: Long): Unit =
+    serveGraphFrame(ivc, edges, hard, cb, batch)
+      .write.mode("overwrite").parquet(s"$out/b$batchId")
 
   /** Per-qid IVF-probed entry points over the persisted hard
     * assignments for a batch of query rows (vec_id, embedding): each
@@ -516,10 +513,12 @@ object Round7Final {
 
   /** The hop loop itself, from an arbitrary bounded entry frame —
     * shared by the IVF-probed entries (q233-q235) and the hierarchical
-    * descent (q236, whose entries come from the layer-1 beam).
+    * descent (q236, whose entries come from the layer-1 beam). `qdot`
+    * is the caller's query-0 score column ([[query0Exact]]), so a gate
+    * collects query 0 once however many beams it runs.
     */
   private def beamFrom(
-      s: SparkSession, ivc: DataFrame, edges: DataFrame,
+      s: SparkSession, ivc: DataFrame, qdot: Column, edges: DataFrame,
       entries: DataFrame, beam: Int, hops: Int): DataFrame = {
     // The visited set is ≤ |entries| + hops·beam·DEG rows BY
     // CONSTRUCTION, so it lives on the DRIVER together with its exact
@@ -532,7 +531,6 @@ object Round7Final {
     // still come from the same pruned buckets, and ids absent from
     // ivc still count as visited but never enter the beam, exactly as
     // the old inner-join topB behaved).
-    val (qdot, _) = query0Exact(ivc)
     val eb = ensureSb(edges)
     val srcb = srcbOf(eb)
     import scala.jdk.CollectionConverters._
@@ -822,8 +820,8 @@ object Round7Final {
          |FROM tp t LEFT JOIN tope e ON t.vec_id = e.vec_id, nv n, hh h
          |ORDER BY t.exact DESC, t.vec_id ASC""".stripMargin) { (s, dir) =>
       val (ivc, _, _) = graphArtifacts(s, dir)
-      val visited = beamVisited(s, dir, BEAM, HOPS)
       val (qdot, tope) = query0Exact(ivc)
+      val visited = beamVisited(s, dir, qdot, BEAM, HOPS)
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
         .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
@@ -872,7 +870,7 @@ object Round7Final {
       // 3x per query (the batched q239 path pins for the same reason)
       val entriesC = pinned(s, entriesOver(eC, cbC, gHard))
       BEAMS.map { b =>
-        val visited = beamFrom(s, ivc, gEdges, entriesC, b, HOPS)
+        val visited = beamFrom(s, ivc, qdot, gEdges, entriesC, b, HOPS)
         val top = ivc.join(broadcast(visited), Seq("vec_id"))
           .select(col("vec_id"), qdot.as("exact"))
           .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
@@ -974,8 +972,9 @@ object Round7Final {
       val ivc = e.select(col("vec_id"), expr(scaledD).as("ivd"))
       val hard = soft.filter(col("crank") === 0)
         .select(col("vec_id"), col("acell"))
-      val visited = beamOver(s, e, cb, ivc, edgesServe, hard, BEAM, HOPS)
       val (qdot, tope) = query0Exact(ivc)
+      val visited =
+        beamOver(s, e, cb, ivc, qdot, edgesServe, hard, BEAM, HOPS)
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
         .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
@@ -1057,13 +1056,13 @@ object Round7Final {
       val edges1 = readEdges(s, s"$p/edges_l1", srcbL1)
       val entry0 = e.filter(col("vec_id") % L1MOD === 1)
         .agg(min(col("vec_id")).cast("bigint").as("vec_id"))
-      val vis1 = beamFrom(s, ivc, edges1, entry0, L1BEAM, HOPS)
       val (qdot, tope) = query0Exact(ivc)
+      val vis1 = beamFrom(s, ivc, qdot, edges1, entry0, L1BEAM, HOPS)
       val seed = ivc.join(broadcast(vis1), Seq("vec_id"))
         .select(col("vec_id"), qdot.as("sx"))
         .orderBy(col("sx").desc, col("vec_id").asc).limit(BEAM)
         .select(col("vec_id"))
-      val vis0 = beamFrom(s, ivc, edges, seed, BEAM, HOPS)
+      val vis0 = beamFrom(s, ivc, qdot, edges, seed, BEAM, HOPS)
       val top = ivc.join(broadcast(vis0), Seq("vec_id"))
         .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
@@ -1200,10 +1199,11 @@ object Round7Final {
       val nTomb = tomb.agg(count(lit(1)).cast("bigint").as("n_tomb"))
       // ---- SERVE from the compacted graph, survivor entries only ----
       val hardS = hard.join(tomb, Seq("vec_id"), "left_anti")
-      val visited = beamOver(s, e, cb, ivc, edgesC, hardS, BEAM, HOPS)
       // the exact referee runs over survivors only
       val (qdot, topes) =
         query0Exact(ivc, _.join(tomb, Seq("vec_id"), "left_anti"))
+      val visited =
+        beamOver(s, e, cb, ivc, qdot, edgesC, hardS, BEAM, HOPS)
       val top = ivc.join(broadcast(visited), Seq("vec_id"))
         .select(col("vec_id"), qdot.as("exact"))
         .orderBy(col("exact").desc, col("vec_id").asc).limit(10)
@@ -1323,13 +1323,12 @@ object Round7Final {
       val (ivc, edges, hard) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-      val qStream = Round6Ops.embStream(s, dir)
+      val qStream = StreamOps.fileStream(s, dir, "embeddings")
         .filter(col("vec_id") < QB)
-      val out = Round6Ops.scratchDir(
+      val out = StreamOps.scratchDir(
         s"graft_streamgraph_${VecIndex.dirDigest(dir)}")
-      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
-        .foreachBatch(serveGraphBatch(ivc, edges, hard, cb, out) _))
-      Round6Ops.drainTo(q, out)
+      StreamOps.foldBatches(s, qStream, out)(
+        serveGraphBatch(ivc, edges, hard, cb, out))
       ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     }
   )

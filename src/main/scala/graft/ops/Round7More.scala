@@ -102,10 +102,8 @@ object Round7More {
   private[ops] def ingestBatch(
       coarse: DataFrame, cbRow: DataFrame, out: String)(
       batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      Pq.pqEncode(KMeans.assign(batch, coarse), cbRow)
-        .write.mode("overwrite").parquet(s"$out/b$batchId")
-    }
+    Pq.pqEncode(KMeans.assign(batch, coarse), cbRow)
+      .write.mode("overwrite").parquet(s"$out/b$batchId")
 
   val queries: Seq[Q] = Seq(
     // E7: METADATA-FILTERED vector search over the persisted index.
@@ -237,27 +235,19 @@ object Round7More {
       val coarse = ArtifactStore.readParquet(s, s"$idx/coarse")
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
       // ---- the NEW-VECTOR STREAM: the arriving batch lands as TWO
-      // source files read one per trigger, so the ingest genuinely
-      // spans multiple micro-batches (two delta generations whose
-      // union must still equal the full re-encode — encoding is
-      // pointwise, so the split cannot show through) ----
-      val newb0 = e.filter(col("vec_id") % 10 >= 8)
-      val src = Round6Ops.scratchDir(
-        s"graft_streamingest_src_${VecIndex.dirDigest(dir)}")
-      newb0.repartition(2).write.mode("overwrite").parquet(src)
-      val newStream = s.readStream.schema(newb0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val out = Round6Ops.scratchDir(
-        s"graft_streamingest_${VecIndex.dirDigest(dir)}")
-      val q = StreamOps.start(s, newStream.writeStream.outputMode("append")
-        .foreachBatch(ingestBatch(coarse, cbRow, out) _))
-      Round6Ops.drainTo(q, out)
-      val baseCodes = VecIndex.readCodes(s, idx)
-      val deltas = ArtifactStore.listEntries(out)
-      val inc =
-        if (deltas.isEmpty) baseCodes
-        else baseCodes.unionByName(ArtifactStore.readParquet(s, s"$out/b*"))
+      // staged parts (vec_id parity), so the ingest genuinely spans
+      // multiple micro-batches (two delta generations whose union must
+      // still equal the full re-encode — encoding is pointwise, so the
+      // split cannot show through) ----
       val newb = e.filter(col("vec_id") % 10 >= 8)
+      val newStream = StreamOps.stagedSource(s,
+        s"graft_streamingest_src_${VecIndex.dirDigest(dir)}",
+        Seq(0, 1).map(p => newb.filter(col("vec_id") % 2 === p)))
+      val out = StreamOps.scratchDir(
+        s"graft_streamingest_${VecIndex.dirDigest(dir)}")
+      StreamOps.foldBatches(s, newStream, out)(ingestBatch(coarse, cbRow, out))
+      val baseCodes = VecIndex.readCodes(s, idx)
+      val inc = baseCodes.unionByName(ArtifactStore.readParquet(s, s"$out/b*"))
       Round7Ops.ingestServe(e, newb, coarse, cbRow, inc, idx)
     },
 

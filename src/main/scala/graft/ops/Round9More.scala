@@ -155,7 +155,7 @@ object Round9More {
       // COMPACT: cluster each cell into ONE task (hash repartition on
       // cid puts a cell's rows in exactly one partition), then rewrite
       // — one columnar file per cell directory
-      val croot = Round6Ops.scratchDir(
+      val croot = StreamOps.scratchDir(
         s"graft_idxcomp_${VecIndex.dirDigest(dir)}")
       fragmented.repartition(col("cid")).write.mode("overwrite")
         .partitionBy("cid").parquet(s"$croot/codes")

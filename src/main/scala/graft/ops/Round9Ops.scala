@@ -132,12 +132,9 @@ object Round9Ops {
   private def servePqBatch(
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
       codes: DataFrame, cbRow: DataFrame, out: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      servePqFrame(ivc, edges, hard, cb, codes, cbRow, batch)
-        .write.mode("overwrite").parquet(s"$out/b$batchId")
-    }
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    servePqFrame(ivc, edges, hard, cb, codes, cbRow, batch)
+      .write.mode("overwrite").parquet(s"$out/b$batchId")
 
   /** The q246 serving plan over the standard 8-query batch — the audit
     * entry point PlanAuditSpec uses (the gate's own returned frame is
@@ -327,14 +324,12 @@ object Round9Ops {
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
       val cbRow = ArtifactStore.readParquet(s, s"$idx/pq")
-      val qStream = Round6Ops.embStream(s, dir)
+      val qStream = StreamOps.fileStream(s, dir, "embeddings")
         .filter(col("vec_id") < Round7Final.QB)
-      val out = Round6Ops.scratchDir(
+      val out = StreamOps.scratchDir(
         s"graft_streamgraphpq_${VecIndex.dirDigest(dir)}")
-      val q = StreamOps.start(s, qStream.writeStream.outputMode("append")
-        .foreachBatch(servePqBatch(ivc, edges, hard, cb, codes, cbRow,
-          out) _))
-      Round6Ops.drainTo(q, out)
+      StreamOps.foldBatches(s, qStream, out)(
+        servePqBatch(ivc, edges, hard, cb, codes, cbRow, out))
       ArtifactStore.readParquet(s, s"$out/b*").orderBy(col("qid"), col("rank"))
     },
 

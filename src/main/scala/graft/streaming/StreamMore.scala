@@ -29,13 +29,13 @@ object StreamMore {
         | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
         |GROUP BY c.event_id, p.event_id, c.user_id
         |ORDER BY click_id, purchase_id""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
-      val clicks = StreamOps.eventsStreamFor(s, dir)
+      StreamOps.withConf(s, StreamOps.stateParts) {
+      val clicks = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("c_ts"))
         .withWatermark("c_ts", "30 minutes")
-      val purchases = StreamOps.eventsStreamFor(s, dir)
+      val purchases = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
@@ -49,7 +49,7 @@ object StreamMore {
       // the GROUP BY in the oracle is only a deterministic-sum guard for
       // the (click, purchase) pair — pairs are already unique, so the
       // streamed rows equal the grouped rows
-      StreamOps.runToMemoryFor(s, joined, "append")
+      StreamOps.runToMemory(s, joined, "append")
         .groupBy(col("click_id"), col("purchase_id"), col("user_id"))
         .agg(sum(col("value").cast("decimal(18,6)")).cast("double")
           .as("purchase_value"))
@@ -86,13 +86,13 @@ object StreamMore {
         |WHERE purchase_id IS NOT NULL
         |   OR c_ts + INTERVAL 30 MINUTE < gw.w
         |ORDER BY click_id, purchase_id""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
-      val clicks = StreamOps.eventsStreamFor(s, dir)
+      StreamOps.withConf(s, StreamOps.stateParts) {
+      val clicks = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("c_ts"))
         .withWatermark("c_ts", "30 minutes")
-      val purchases = StreamOps.eventsStreamFor(s, dir)
+      val purchases = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("ts").as("p_ts"))
@@ -105,7 +105,7 @@ object StreamMore {
         .select(col("click_id"),
           coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
           col("user_id"))
-      StreamOps.runToMemoryFor(s, joined, "append")
+      StreamOps.runToMemory(s, joined, "append")
         .orderBy(col("click_id"), col("purchase_id"))
       }
     },
@@ -166,8 +166,8 @@ object StreamMore {
         |HAVING MAX(ts) + INTERVAL '6 hours'
         |       <= (SELECT MAX(ts) FROM events WHERE user_id < 20)
         |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
-      val sessions = StreamOps.eventsStreamFor(s, dir)
+      StreamOps.withConf(s, StreamOps.stateParts) {
+      val sessions = StreamOps.eventsStream(s, dir)
         .filter(col("user_id") < 20)
         .withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
@@ -176,7 +176,7 @@ object StreamMore {
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events"))
-      StreamOps.runToMemoryFor(s, sessions, "append")
+      StreamOps.runToMemory(s, sessions, "append")
         .orderBy(col("user_id"), col("session_start"))
       }
     },
@@ -193,23 +193,21 @@ object StreamMore {
         |FROM events
         |GROUP BY 1, 2
         |ORDER BY day, event_type""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_febatch").toString
-        val agg = StreamOps.eventsStreamFor(s, dir)
+      StreamOps.withConf(s, StreamOps.stateParts) {
+        val out = StreamOps.scratchDir(
+          s"graft_febatch_${VecIndex.dirDigest(dir)}")
+        val agg = StreamOps.eventsStream(s, dir)
           .withWatermark("ts", "0 seconds")
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
             col("event_type"), col("n"))
-        val q = StreamOps.start(s, agg.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("day")
-              .parquet(out)
-          })
-        try q.processAllAvailable() finally q.stop()
+        StreamOps.foldBatches(s, agg, out, "update") { (batch, _) =>
+          batch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("day")
+            .parquet(out)
+        }
         s.read.parquet(out)
           .select(col("day").cast("string"), col("event_type"), col("n"))
           .orderBy(col("day"), col("event_type"))
@@ -229,24 +227,15 @@ object StreamMore {
         |WHERE user_id < 30
         |GROUP BY user_id, event_type
         |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
-      StreamOps.withStateParts(s, 8) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val saved = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val agg = StreamOps.eventsStreamFor(s, dir)
-            .filter(col("user_id") < 30)
-            .groupBy(col("user_id"), col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast("decimal(18,6)")).cast("double")
-                .as("total_value"))
-          StreamOps.runToMemoryFor(s, agg, "complete")
-            .orderBy(col("user_id"), col("event_type"))
-        } finally saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
+      StreamOps.withConf(s, StreamOps.stateParts, StreamOps.rocksDbState) {
+        val agg = StreamOps.eventsStream(s, dir)
+          .filter(col("user_id") < 30)
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,6)")).cast("double")
+              .as("total_value"))
+        StreamOps.runToMemory(s, agg, "complete")
+          .orderBy(col("user_id"), col("event_type"))
       }
     },
 
@@ -270,32 +259,23 @@ object StreamMore {
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      StreamOps.withStateParts(s, 8) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val saved = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val src = StreamOps.eventsStreamFor(s, dir)
-            .filter(col("user_id") < 30)
-            .select(col("user_id").cast("long"),
-              floor(col("value") * 100).cast("long").as("cents"))
-            .as[(Long, Long)]
-          val out = src.groupByKey(_._1)
-            .transformWithState(new RunningUserStats,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-            .toDF("user_id", "n", "total_cents")
-          StreamOps.runToMemoryFor(s, out, "update")
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n"), col("total_cents"))).as("m"))
-            .select(col("user_id"), col("m.n").as("n"),
-              col("m.total_cents").as("total_cents"))
-            .orderBy(col("user_id"))
-        } finally saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
+      StreamOps.withConf(s, StreamOps.stateParts, StreamOps.rocksDbState) {
+        val src = StreamOps.eventsStream(s, dir)
+          .filter(col("user_id") < 30)
+          .select(col("user_id").cast("long"),
+            floor(col("value") * 100).cast("long").as("cents"))
+          .as[(Long, Long)]
+        val out = src.groupByKey(_._1)
+          .transformWithState(new RunningUserStats,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+          .toDF("user_id", "n", "total_cents")
+        StreamOps.runToMemory(s, out, "update")
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("n"), col("total_cents"))).as("m"))
+          .select(col("user_id"), col("m.n").as("n"),
+            col("m.total_cents").as("total_cents"))
+          .orderBy(col("user_id"))
       }
     },
 
@@ -324,35 +304,26 @@ object StreamMore {
         |    % 1000000007) AS BIGINT) % 1000000007 AS BIGINT) AS user_fp
         |FROM per_user""".stripMargin) { (s, dir) =>
       import s.implicits._
-      StreamOps.withStateParts(s, 8) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val saved = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val src = StreamOps.eventsStreamFor(s, dir)
-            .select(col("user_id").cast("long"),
-              floor(col("value") * 100).cast("long").as("cents"))
-            .as[(Long, Long)]
-          val out = src.groupByKey(_._1)
-            .transformWithState(new RunningUserStats,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-            .toDF("user_id", "n", "total_cents")
-          StreamOps.runToMemoryFor(s, out, "update")
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n"), col("total_cents"))).as("m"))
-            .select(col("user_id"), col("m.n").as("n"),
-              col("m.total_cents").as("cents"))
-            .agg(count(lit(1)).as("n_users"),
-              sum(col("n")).as("n_events"),
-              sum(col("cents")).as("total_cents"),
-              (sum((col("user_id") * 2654435761L + col("n") * 97L +
-                col("cents")) % 1000000007L) % 1000000007L).as("user_fp"))
-        } finally saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
+      StreamOps.withConf(s, StreamOps.stateParts, StreamOps.rocksDbState) {
+        val src = StreamOps.eventsStream(s, dir)
+          .select(col("user_id").cast("long"),
+            floor(col("value") * 100).cast("long").as("cents"))
+          .as[(Long, Long)]
+        val out = src.groupByKey(_._1)
+          .transformWithState(new RunningUserStats,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+          .toDF("user_id", "n", "total_cents")
+        StreamOps.runToMemory(s, out, "update")
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("n"), col("total_cents"))).as("m"))
+          .select(col("user_id"), col("m.n").as("n"),
+            col("m.total_cents").as("cents"))
+          .agg(count(lit(1)).as("n_users"),
+            sum(col("n")).as("n_events"),
+            sum(col("cents")).as("total_cents"),
+            (sum((col("user_id") * 2654435761L + col("n") * 97L +
+              col("cents")) % 1000000007L) % 1000000007L).as("user_fp"))
       }
     })
 

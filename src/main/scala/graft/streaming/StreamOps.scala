@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.util.concurrent.atomic.AtomicInteger
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,7 +16,7 @@ import graft.Tables
   * by replaying the events parquet as a file stream.
   *
   * Each query runs a real streaming query to a memory sink synchronously
-  * (`processAllAvailable`) and returns the sink table — so the driver's
+  * ([[runToMemory]]) and returns the sink table — so the driver's
   * batch-shaped Verify harness can hash it against a DuckDB batch oracle.
   * Watermark-0 append mode emits exactly the windows whose end has been
   * passed by the max event time; the oracle filters identically.
@@ -25,6 +25,30 @@ import graft.Tables
   * the watermark — bounded memory regardless of stream length; session
   * windows merge in-state; dedup state holds one entry per key within the
   * watermark horizon.
+  *
+  * The file-stream kit — the one path every streaming gate of the
+  * repository takes from files to a drained query:
+  *  - SOURCE: [[fileStream]] streams a testdata table. The data dirs
+  *    ship a table as one parquet FILE, which a file-stream source
+  *    cannot read, so the file is exposed through a symlink in a
+  *    scratch dir (a multi-file table dir is streamed as it is).
+  *  - STAGE: [[stagedSource]] writes an arrival model — each part one
+  *    parquet file, strictly increasing mtimes — and streams it one file
+  *    per trigger, so the parts arrive as micro-batches in order.
+  *  - FOLD: [[foldBatches]] starts the query through [[start]] and hands
+  *    every non-empty micro-batch to the gate's fold, which writes the
+  *    batch's output under `out` (a batchId-keyed dir with overwrite, so
+  *    a replayed batch replaces instead of appending).
+  *  - DRAIN: `processAllAvailable` can race the file source's first
+  *    listing (a trigger that ran before discovery saw no files and
+  *    released the wait), so [[foldBatches]] re-processes until `out`
+  *    holds batch output, bounded at 10 s, and then stops the query.
+  *    The drain probe counts only batch output: entries whose names
+  *    start with `_` or `.` (a build lock, a marker, `_SUCCESS`, checksum
+  *    shadows) never end a drain.
+  * Sinks and staged sources live in deterministic [[scratchDir]]s,
+  * wiped at the start of each execution, so repeated executions never
+  * accumulate files.
   *
   * Checkpoints: every streaming query of the repository starts through
   * [[start]], which pins [[LocalCheckpointFileManager]] (Spark's
@@ -46,46 +70,64 @@ object StreamOps {
 
   private val sinkId = new AtomicInteger(0)
 
-  /** Streaming source over the events parquet with the same ns→µs
-    * normalization as Tables.load (file streams need an explicit schema).
+  /** Deterministic scratch root `name` under the artifact base, emptied
+    * ([[ArtifactStore.clearRoot]]) — the re-runnable alternative to a
+    * temp dir per execution.
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/events.parquet"
-    val target = java.nio.file.Paths.get(path)
-    // The file-stream source requires a DIRECTORY of data files. A
-    // Spark-written dataset (e.g. the ScaleGen slope-measurement dirs) IS
-    // one — stream it directly; the source does not recurse through a
-    // symlinked subdirectory, so routing a dataset dir through the scratch
-    // symlink below would silently stream ZERO files. The driver's dirs
-    // ship events.parquet as a single FILE — expose that one through a
-    // symlink in a scratch dir.
+  private[ops] def scratchDir(name: String): String = {
+    val p = ArtifactStore.root(name)
+    ArtifactStore.clearRoot(p)
+    p
+  }
+
+  /** File-stream source over `<dir>/<table>.parquet` with the table's
+    * own schema (file streams need an explicit one).
+    *
+    * The source requires a DIRECTORY of data files. A Spark-written
+    * dataset (e.g. the ScaleGen slope-measurement dirs) IS one and is
+    * streamed directly; the source does not recurse through a
+    * symlinked subdirectory, so routing a dataset dir through the
+    * symlink would silently stream ZERO files. A single FILE is exposed
+    * through a symlink in a scratch dir. Deliberately java.nio, not
+    * [[ArtifactStore]]: this is a local testdata shim (symlinks have no
+    * Hadoop-FS equivalent); a cluster deployment streams real
+    * multi-file directories and never takes this branch.
+    */
+  private[ops] def fileStream(
+      spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val target = Paths.get(path)
     val sourceDir =
-      if (java.nio.file.Files.isDirectory(target)) path
+      if (Files.isDirectory(target)) path
       else {
-        val streamDir = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"),
-          s"graft_stream_src_${graft.ops.VecIndex.dirDigest(dir)}")
-        java.nio.file.Files.createDirectories(streamDir)
-        val link = streamDir.resolve("events.parquet")
-        // NOFOLLOW: a broken symlink (testdata dir moved/recreated) reports
-        // !exists under the default follow semantics, and createSymbolicLink
-        // would then throw FileAlreadyExists. Also re-point a stale link
-        // whose target differs (scratch dirs persist across runs and
-        // hashCode keys can collide).
-        if (java.nio.file.Files.exists(link,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-          (!java.nio.file.Files.isSymbolicLink(link) ||
-            java.nio.file.Files.readSymbolicLink(link) != target))
-          java.nio.file.Files.delete(link)
-        if (!java.nio.file.Files.exists(link,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS))
-          java.nio.file.Files.createSymbolicLink(link, target)
+        val streamDir = Paths.get(sys.props("java.io.tmpdir"),
+          s"graft_stream_${table}_${VecIndex.dirDigest(dir)}")
+        Files.createDirectories(streamDir)
+        val link = streamDir.resolve(s"$table.parquet")
+        // NOFOLLOW: a broken symlink (testdata dir moved/recreated)
+        // reports !exists under the default follow semantics, and
+        // createSymbolicLink would then throw FileAlreadyExists. A stale
+        // link whose target differs is re-pointed (scratch dirs persist
+        // across runs).
+        if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) &&
+          (!Files.isSymbolicLink(link) ||
+            Files.readSymbolicLink(link) != target))
+          Files.delete(link)
+        if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
+          Files.createSymbolicLink(link, target)
         streamDir.toString
       }
-    val raw = ArtifactStore.readParquet(spark, path).schema
-    val st = spark.readStream.schema(raw).parquet(sourceDir)
-    raw("ts").dataType match {
+    val schema = ArtifactStore.readParquet(spark, path).schema
+    spark.readStream.schema(schema).parquet(sourceDir)
+  }
+
+  /** [[fileStream]] over the events parquet with the same ns→µs
+    * normalization as Tables.load.
+    */
+  private[ops] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val st = fileStream(spark, dir, "events")
+    st.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         st.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>
@@ -97,27 +139,88 @@ object StreamOps {
     }
   }
 
-  /** Shared with FinalOps.q91 (custom-state streaming). */
-  private[ops] def eventsStreamFor(spark: SparkSession, dir: String): DataFrame =
-    eventsStream(spark, dir)
-
-  private[ops] def runToMemoryFor(
-      spark: SparkSession, df: DataFrame, mode: String): DataFrame =
-    runToMemory(spark, df, mode)
-
-  /** Scope spark.sql.shuffle.partitions to the streaming state volume
-    * for the duration of `body` (stream construction AND start — the
-    * partitioning binds when the streaming frame is built, not at
-    * start()). Every state store pays a per-batch commit per partition,
-    * so sizing it to the keyed-state volume instead of the batch session
-    * default is the state-store sizing knob at cluster scale too.
+  /** Stage `parts` as the arrival model of a file stream: part i is
+    * written as the one file `<scratchDir(name)>/w<ii>.parquet` with an
+    * mtime strictly after part i-1's, and the returned stream (schema:
+    * the parts' own) reads one file per trigger — so part i is
+    * micro-batch i, whatever the listing order.
     */
-  private[ops] def withStateParts[T](
-      spark: SparkSession, n: Int)(body: => T): T = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  private[ops] def stagedSource(spark: SparkSession, name: String,
+      parts: Seq[DataFrame]): DataFrame = {
+    val src = scratchDir(name)
+    parts.zipWithIndex.foreach { case (part, i) =>
+      val stage = s"$src/_stage$i"
+      part.coalesce(1).write.mode("overwrite").parquet(stage)
+      val file = ArtifactStore.listEntries(stage)
+        .find(_.endsWith(".parquet")).get
+      val dst = f"$src/w$i%02d.parquet"
+      ArtifactStore.move(s"$stage/$file", dst)
+      ArtifactStore.setMtime(dst, 1000000000000L + i * 60000L)
+      ArtifactStore.deleteRecursive(stage)
+    }
+    spark.readStream.schema(parts.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
   }
+
+  /** Run `stream` through `fold` and drain it (the FOLD and DRAIN steps
+    * of the object doc): `fold(batch, batchId)` sees every non-empty
+    * micro-batch and writes its output under `out`; returns once `out`
+    * holds batch output and the source is drained, with the query
+    * stopped. Throws when no batch output appears within the bound
+    * (the gates' sources are never empty).
+    */
+  private[ops] def foldBatches(spark: SparkSession, stream: DataFrame,
+      out: String, mode: String = "append")(
+      fold: (DataFrame, Long) => Unit): Unit = {
+    val q = start(spark, stream.writeStream.outputMode(mode)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) fold(batch, batchId)
+      })
+    def holdsOutput = ArtifactStore.listEntries(out)
+      .exists(n => !n.startsWith("_") && !n.startsWith("."))
+    try {
+      q.processAllAvailable()
+      var tries = 0
+      while (tries < 40 && !holdsOutput) {
+        Thread.sleep(250); q.processAllAvailable(); tries += 1
+      }
+      if (!holdsOutput)
+        throw new IllegalStateException(
+          s"stream drain wrote no batch to $out after $tries retries" +
+            " — file-source discovery race persisted past 10s (or the" +
+            " source is genuinely empty, which these gates never are)")
+    } finally q.stop()
+  }
+
+  /** Set `confs` on `spark` for the duration of `body`, then restore
+    * each key's prior value — unsetting a key that was unset, also when
+    * `body` throws. Streaming confs bind when the streaming frame is
+    * built, not at start(), so the scope covers construction AND start.
+    */
+  private[ops] def withConf[T](spark: SparkSession,
+      confs: (String, String)*)(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `spark.sql.shuffle.partitions` sized to the streaming state volume:
+    * every state store pays a per-batch commit per partition, so sizing
+    * it to the keyed-state volume instead of the batch session default
+    * is the state-store sizing knob at cluster scale too.
+    */
+  private[ops] val stateParts: (String, String) =
+    "spark.sql.shuffle.partitions" -> "8"
+
+  /** The RocksDB state store provider (state off-heap, spilling to
+    * local disk).
+    */
+  private[ops] val rocksDbState: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val CheckpointManagerKey =
     "spark.sql.streaming.checkpointFileManagerClass"
@@ -154,10 +257,8 @@ object StreamOps {
     graft.functions.Functions.install(spark)
     // serialized: two overlapping starts would restore each other's pin
     synchronized {
-      val prior = spark.conf.getOption(CheckpointManagerKey)
-      spark.conf.set(CheckpointManagerKey,
-        classOf[LocalCheckpointFileManager].getName)
-      try {
+      withConf(spark,
+          CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName) {
         val q = w.start()
         q match {
           case running: StreamingQueryWrapper =>
@@ -165,15 +266,12 @@ object StreamOps {
           case _ =>
         }
         q
-      } finally prior match {
-        case Some(v) => spark.conf.set(CheckpointManagerKey, v)
-        case None => spark.conf.unset(CheckpointManagerKey)
       }
     }
   }
 
   /** Run a streaming DF to a memory sink until drained; return the sink. */
-  private def runToMemory(
+  private[ops] def runToMemory(
       spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${sinkId.incrementAndGet()}"
     val q = start(spark,
@@ -196,7 +294,7 @@ object StreamOps {
         |      <= (SELECT MAX(ts) FROM events)
         |GROUP BY 1, 2
         |ORDER BY window_start, event_type""".stripMargin) { (s, dir) =>
-      withStateParts(s, 8) {
+      withConf(s, stateParts) {
       val agg = eventsStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -250,7 +348,7 @@ object StreamOps {
       "q57_stream_dedup",
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
-      withStateParts(s, 8) {
+      withConf(s, stateParts) {
       val dedup = eventsStream(s, dir)
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark("user_id", "event_type")

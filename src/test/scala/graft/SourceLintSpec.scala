@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Round3Ops.extensionSession`). And it keeps the vector tier's
   * query-0 serve kit single: ADC scoring over stored PQ codes is built
   * only in `ops/VecIndex.scala` (and the PQ gates of `ops/Pq.scala`).
+  * And it keeps the file-stream kit single: stream sources, stagings,
+  * folds, drains and scratch dirs are built only in
+  * `streaming/StreamOps.scala`.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -117,5 +120,16 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"inline ADC scoring at: ${bad.mkString(", ")}" +
       " — score through VecIndex.adcScores / adcScoresBatch (the query-0" +
       " serve kit)")
+  }
+
+  test("file-stream plumbing is built only by streaming/StreamOps.scala") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bad = codeMatches(("\\b(foreachBatch|processAllAvailable|" +
+      "createSymbolicLink|maxFilesPerTrigger|createTempDirectory)\\b").r) {
+      (f, _, _) => f.getPath.endsWith("streaming/StreamOps.scala")
+    }
+    assert(bad.isEmpty, s"inline stream plumbing at: ${bad.mkString(", ")}" +
+      " — go through StreamOps.fileStream / stagedSource / foldBatches /" +
+      " scratchDir (the file-stream kit)")
   }
 }

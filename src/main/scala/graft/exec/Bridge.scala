@@ -20,6 +20,17 @@ import graft.repair.SqlRepair
   * held in Spark's cache — shared by every session of the SparkContext —
   * and released when the table's plan or files change; a session's first
   * ask does no extra work. See [[Resident]] for the rule.
+  *
+  * The repaired SQL is planned and run only through [[Resident.plan]]:
+  * every ask parses and analyzes it afresh, and while the table is held,
+  * a repeat of the same SQL and `maxRows` runs the `limit(maxRows + 1)`
+  * plan its earlier ask already optimized and planned. Reuse needs five
+  * conditions: the same analyzed result, the same session confs, the same
+  * live cache entry, only the asked table's relations as leaves, and no
+  * nondeterministic or per-run folded expression (`rand()`,
+  * `current_timestamp()`, ...). At most [[Resident.PreparedCap]] plans
+  * are kept per table. A miss is exactly `spark.sql(sql).limit(n + 1)`
+  * collected, as [[Runner.execute]] does.
   */
 object Bridge {
 
@@ -56,7 +67,7 @@ object Bridge {
     val cleaned =
       SqlRepair.repair(raw, dict, SchemaIntrospect.listColumns(df))
     try {
-      val result = Runner.execute(spark, cleaned, maxRows)
+      val result = Resident.plan(spark, table, cleaned, maxRows)(Runner.fetch(_, maxRows))
       Right(Answer(Trace(sys, usr, raw, cleaned), result))
     } catch {
       case NonFatal(_) => Left(Runner.ExitCodes.SqlError)

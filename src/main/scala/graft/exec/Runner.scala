@@ -37,10 +37,14 @@ object Runner {
     bounded(df, maxRows)
   }
 
-  def bounded(df: DataFrame, maxRows: Int): BoundedResult = {
-    val fetched = df.limit(maxRows + 1).collect().toSeq
+  def bounded(df: DataFrame, maxRows: Int): BoundedResult =
+    fetch(df.limit(maxRows + 1), maxRows)
+
+  /** Collect `limited`, a Dataset already limited to maxRows + 1 rows. */
+  def fetch(limited: DataFrame, maxRows: Int): BoundedResult = {
+    val fetched = limited.collect().toSeq
     val truncated = fetched.length > maxRows
-    BoundedResult(df.columns.toSeq, fetched.take(maxRows), truncated,
+    BoundedResult(limited.columns.toSeq, fetched.take(maxRows), truncated,
       fetched.length)
   }
 

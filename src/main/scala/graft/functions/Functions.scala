@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** graft's SQL function catalog: every kernel and UDF that graft's
@@ -54,14 +55,19 @@ object Functions {
   /** Every name the catalog installs. */
   val names: Seq[String] = kernels.map(_._1) :+ "wavg"
 
-  /** Install the whole catalog into `spark` (idempotent: replaces). */
+  /** Install into `spark` each catalog name it lacks. Idempotent, and a
+    * second install replaces nothing: a stream's start on a session that
+    * went through `Tables.registerAll` registers no function again.
+    */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    def lacks(name: String) = !reg.functionExists(FunctionIdentifier(name))
     kernels.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (lacks(name)) reg.createOrReplaceTempFunction(name, b, "built-in")
     }
     // a typed Aggregator: udf.register wraps it in Spark's ScalaAggregator
-    spark.udf.register("wavg", org.apache.spark.sql.functions.udaf(
-      WeightedAvg.aggregator, Encoders.product[WeightedAvg.In]))
+    if (lacks("wavg"))
+      spark.udf.register("wavg", org.apache.spark.sql.functions.udaf(
+        WeightedAvg.aggregator, Encoders.product[WeightedAvg.In]))
   }
 }

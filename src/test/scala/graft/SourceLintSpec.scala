@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * only in `ops/VecIndex.scala` (and the PQ gates of `ops/Pq.scala`).
   * And it keeps the file-stream kit single: stream sources, stagings,
   * folds, drains and scratch dirs are built only in
-  * `streaming/StreamOps.scala`.
+  * `streaming/StreamOps.scala`. And it keeps the bridge's execute path
+  * single: `Bridge.ask` plans and runs its SQL only through
+  * `Resident.plan`, the memo of prepared plans.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -131,5 +133,21 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"inline stream plumbing at: ${bad.mkString(", ")}" +
       " — go through StreamOps.fileStream / stagedSource / foldBatches /" +
       " scratchDir (the file-stream kit)")
+  }
+
+  test("Bridge.ask plans its SQL only through Resident.plan") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bridge = new java.io.File(mainDir, "exec/Bridge.scala")
+    val onlyBridge = (f: java.io.File, _: String, _: Int) => f != bridge
+    val bad = codeMatches(("\\.sql\\(|\\.limit\\(|\\.collect\\(|\\bqueryExecution\\b|" +
+      "\\bRunner\\s*\\.\\s*(execute|bounded|executeAndDisplay)\\b").r)(onlyBridge)
+    val plans = codeMatches("\\bResident\\s*\\.\\s*plan\\(".r)(onlyBridge)
+    // Runner.fetch only as the collect that Resident.plan runs
+    val fetches = codeMatches("\\bRunner\\s*\\.\\s*fetch\\b".r)(onlyBridge)
+    assert(bad.isEmpty && plans.size == 1 && fetches == plans,
+      s"a second execute path in Bridge: ${bad.mkString(", ")}; " +
+        s"Resident.plan at ${plans.mkString(", ")}; Runner.fetch at " +
+        s"${fetches.mkString(", ")} — plan the ask's SQL with " +
+        "Resident.plan(spark, table, sql, maxRows)(Runner.fetch(_, maxRows))")
   }
 }

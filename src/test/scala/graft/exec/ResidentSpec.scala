@@ -2,8 +2,11 @@ package graft.exec
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.meta._
@@ -12,7 +15,11 @@ import graft.nl.MockLlmClient
 /** Residency of the asked table (Resident, called by Bridge.ask): held
   * from the second ask, answers equal to reading the files, released when
   * the view or its files change, never held above the broadcast threshold
-  * or for a table that is not file-backed.
+  * or for a table that is not file-backed. And its prepared plans: a
+  * repeat ask about a held table runs the QueryExecution its earlier ask
+  * built, unless the view, a joined view, the session confs, the cache
+  * entry or the files changed, or the SQL reads the clock or a random
+  * source; the per-table cap evicts the least recently asked plan.
   */
 class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -101,6 +108,37 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def fromFiles(f: Fixture): Seq[Row] = Runner.execute(spark, f.sql).rows
 
+  /** Ask with an LLM that answers `raw`; the cleaned SQL and the rows. */
+  private def askSql(raw: String): (String, Seq[Row]) =
+    Bridge.ask(spark, "queuedata", "q", dict, new MockLlmClient(fallback = raw)) match {
+      case Right(a) => (a.trace.cleanedSql, a.result.rows)
+      case Left(code) => fail(s"$raw: exit code $code")
+    }
+
+  // every successful collect of this session, in listener-bus order
+  private val executions = new LinkedBlockingQueue[QueryExecution]()
+  private lazy val listening: Unit = spark.listenerManager.register(
+    new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        if (func == "collect") executions.put(qe)
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+
+  /** The result of `body` and the QueryExecution its one collect ran. */
+  private def ran[A](body: => A): (A, QueryExecution) = {
+    listening
+    // the bus delivers in order: once a marker's collect arrives, no
+    // earlier event is left in flight
+    val marker = spark.range(1)
+    marker.collect()
+    Iterator.continually(executions.poll(30, TimeUnit.SECONDS))
+      .find(qe => qe == null || (qe eq marker.queryExecution))
+    val out = body
+    val qe = executions.poll(30, TimeUnit.SECONDS)
+    assert(qe != null, "no collect seen")
+    (out, qe)
+  }
+
   private def cached: Boolean = spark.catalog.isCached("queuedata")
 
   private def persistentRdds: Int = spark.sparkContext.getPersistentRDDs.size
@@ -159,6 +197,8 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     ask(online)
     ask(online)
     assert(cached)
+    val prior = ran(ask(online))._2
+    assert(ran(ask(online))._2 eq prior)
 
     // rewrite one part file in place: every row of it turns 'online'
     val part = new File(path).listFiles.filter(_.getName.startsWith("part-")).minBy(_.getName)
@@ -171,8 +211,9 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
       new File(path, s".${part.getName}.crc").toPath, StandardCopyOption.REPLACE_EXISTING)
     part.setLastModified(part.lastModified() + 2000L)
 
-    val got = ask(online)
+    val (got, qe) = ran(ask(online))
     assert(!cached)
+    assert(!(qe eq prior), "a rewritten part file must be planned afresh")
     // read after the ask released the copy: until then a fresh read of
     // the same files is served from it too
     val expected = spark.read.parquet(path).where("status = 'online'")
@@ -204,5 +245,107 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = persistentRdds
     (1 to 3).foreach(_ => ask(fixture("03")))
     assert(!cached && persistentRdds == before)
+  }
+
+  test("a repeat ask runs its earlier QueryExecution, with Runner.execute's rows") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("prepared", 2000))
+    val expected = fixtures.map(f => f.name -> fromFiles(f)).toMap
+    ask(fixture("03")) // the first ask: the table is held from the next
+    var last = Map.empty[String, QueryExecution]
+    for (round <- 1 to 3) {
+      last = fixtures.map { f =>
+        val (rows, qe) = ran(ask(f))
+        assert(rows == expected(f.name), s"${f.name}, round $round")
+        if (round > 1)
+          assert(qe eq last(f.name), s"${f.name}, round $round: planned again")
+        f.name -> qe
+      }.toMap
+    }
+    assert(last.values.toSet.size == fixtures.size)
+  }
+
+  test("a replaced view, a redefined joined view or a conf flip plans afresh") {
+    spark.catalog.clearCache()
+    val path = writeQueuedata("afresh", 600)
+    register(path)
+    val picked = "CREATE OR REPLACE TEMP VIEW picked AS " +
+      "SELECT queue FROM queuedata WHERE status = "
+    spark.sql(picked + "'online'")
+    val join = "SELECT COUNT(*) AS n FROM queuedata q JOIN picked p ON q.queue = p.queue"
+    def twice(raw: String): QueryExecution = {
+      askSql(raw)
+      val (_, qe) = ran(askSql(raw))
+      assert(ran(askSql(raw))._2 eq qe, raw)
+      qe
+    }
+    def afresh(raw: String, before: QueryExecution): Unit = {
+      val ((sql, rows), qe) = ran(askSql(raw))
+      assert(!(qe eq before), s"$raw: reused")
+      assert(rows == Runner.execute(spark, sql).rows, raw)
+    }
+
+    val byStatus = twice(join)
+    spark.sql(picked + "'offline'")
+    afresh(join, byStatus)
+
+    val count = twice(fixture("03").raw)
+    register(writeQueuedata("afresh_new", 150, salt = 3L))
+    afresh(fixture("03").raw, count)
+    assert(askSql(fixture("03").raw)._2 == Seq(Row(150L)))
+
+    val online = twice(fixture("04").raw)
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(key)
+    try {
+      spark.conf.set(key, (!prior.toBoolean).toString)
+      afresh(fixture("04").raw, online)
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("the clock and random sources are planned on every ask") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("per_run", 400))
+    askSql("SELECT COUNT(*) AS n FROM queuedata")
+    val clock = "SELECT queue, current_timestamp() AS t FROM queuedata WHERE queue = 'q00001'"
+    val random = "SELECT COUNT(*) AS n FROM queuedata WHERE rand() < 2"
+    for (raw <- Seq(clock, random)) {
+      val runs = (1 to 3).map(_ => ran(askSql(raw)))
+      assert(runs.map(_._2).distinct.size == 3, s"$raw: reused a plan")
+    }
+    val t1 = askSql(clock)._2.head.getTimestamp(1)
+    Thread.sleep(20)
+    val t2 = askSql(clock)._2.head.getTimestamp(1)
+    assert(t2.after(t1))
+    assert(askSql(random)._2 == Seq(Row(400L)))
+  }
+
+  test("clearCache between asks plans afresh and leaves no stray copy") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("clear", 400))
+    val f = fixture("04")
+    val expected = fromFiles(f)
+    ask(f)
+    ask(f)
+    val held = ran(ask(f))._2
+    val size = persistentRdds
+    spark.catalog.clearCache()
+    val (rows, qe) = ran(ask(f))
+    assert(rows == expected && !(qe eq held))
+    assert(persistentRdds == size)
+    assert(ran(ask(f))._2 eq qe)
+    assert(persistentRdds == size)
+  }
+
+  test("the per-table cap evicts the least recently asked plan") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("cap", 400))
+    def sql(i: Int) = s"SELECT COUNT(*) AS n FROM queuedata WHERE corecount > $i"
+    askSql(sql(0))
+    val first = ran(askSql(sql(0)))._2
+    assert(ran(askSql(sql(0)))._2 eq first)
+    val plans = (1 to Resident.PreparedCap).map(i => ran(askSql(sql(i)))._2)
+    assert(ran(askSql(sql(Resident.PreparedCap)))._2 eq plans.last)
+    assert(!(ran(askSql(sql(0)))._2 eq first), "the oldest plan was kept")
   }
 }

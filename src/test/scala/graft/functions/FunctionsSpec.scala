@@ -89,4 +89,20 @@ class FunctionsSpec extends AnyFunSuite {
     Functions.install(fresh)
     assert(Functions.names.forall(n => fresh.catalog.functionExists(n)))
   }
+
+  test("a second install replaces nothing") {
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    def entries = Functions.names.map { n =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
+      (reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)
+    }
+    Functions.install(fresh)
+    val first = entries
+    Functions.install(fresh)
+    entries.zip(first).zip(Functions.names).foreach {
+      case (((info, builder), (info0, builder0)), n) =>
+        assert((info eq info0) && (builder eq builder0), s"$n was replaced")
+    }
+  }
 }

@@ -21,16 +21,19 @@ import graft.repair.SqlRepair
   * and released when the table's plan or files change; a session's first
   * ask does no extra work. See [[Resident]] for the rule.
   *
-  * The repaired SQL is planned and run only through [[Resident.plan]]:
-  * every ask parses and analyzes it afresh, and while the table is held,
-  * a repeat of the same SQL and `maxRows` runs the `limit(maxRows + 1)`
-  * plan its earlier ask already optimized and planned. Reuse needs five
-  * conditions: the same analyzed result, the same session confs, the same
-  * live cache entry, only the asked table's relations as leaves, and no
+  * Every ask parses and analyzes the repaired SQL afresh, and it is run
+  * only through [[Resident.answer]]: while the table is held, a repeat of
+  * the same SQL and `maxRows` returns the result its earlier successful
+  * ask produced and runs no Spark job. Reuse needs five conditions: the
+  * same analyzed result, the same session confs, the same live cache
+  * entry, only the asked table's relations as leaves, and no
   * nondeterministic or per-run folded expression (`rand()`,
-  * `current_timestamp()`, ...). At most [[Resident.PreparedCap]] plans
-  * are kept per table. A miss is exactly `spark.sql(sql).limit(n + 1)`
-  * collected, as [[Runner.execute]] does.
+  * `current_timestamp()`, ...). At most [[Resident.PreparedCap]] answers
+  * of at most `maxRows` rows are kept per held table, and they go with
+  * it; a kept answer holds no plan, so no shuffle files stay pinned. A
+  * miss is exactly `spark.sql(sql).limit(n + 1)` collected, as
+  * [[Runner.execute]] does. A failed ask is never kept: [[run]] reports
+  * it as a [[Failure]] naming its stage and cause.
   */
 object Bridge {
 
@@ -42,6 +45,14 @@ object Bridge {
 
   final case class Answer(trace: Trace, result: Runner.BoundedResult)
 
+  /** Why an ask failed: the stage that threw — `resolve` (the table),
+    * `llm`, `analyze` (parse and analysis of the repaired SQL) or `run` —
+    * the reference's exit code for it ([[Runner.ExitCodes]]) and the
+    * exception.
+    */
+  final case class Failure(stage: String, exitCode: Int, cause: Throwable)
+
+  /** [[run]], with a failure as its exit code. */
   def ask(
       spark: SparkSession,
       table: String,
@@ -49,10 +60,24 @@ object Bridge {
       dict: DataDictionary,
       llm: LlmClient,
       topK: Int = 12,
-      maxRows: Int = 1000): Either[Int, Answer] = {
+      maxRows: Int = 1000): Either[Int, Answer] =
+    run(spark, table, question, dict, llm, topK, maxRows).left.map(_.exitCode)
+
+  /** Ask `question` about `table`: the answer and its trace, or the stage
+    * that failed and why. A table name that does not parse throws, as
+    * `tableExists` does.
+    */
+  def run(
+      spark: SparkSession,
+      table: String,
+      question: String,
+      dict: DataDictionary,
+      llm: LlmClient,
+      topK: Int = 12,
+      maxRows: Int = 1000): Either[Failure, Answer] = {
     val df = resolve(spark, table) match {
-      case Some(df) => df
-      case None => return Left(Runner.ExitCodes.MissingTable)
+      case Right(df) => df
+      case Left(e) => return Left(Failure("resolve", Runner.ExitCodes.MissingTable, e))
     }
     Resident.admit(spark, table, df)
     val ddl = SchemaIntrospect.buildTableSchema(df)
@@ -62,16 +87,16 @@ object Bridge {
 
     val raw =
       try llm.complete(sys, usr)
-      catch { case NonFatal(_) => return Left(Runner.ExitCodes.LlmError) }
+      catch { case NonFatal(e) => return Left(Failure("llm", Runner.ExitCodes.LlmError, e)) }
 
     val cleaned =
       SqlRepair.repair(raw, dict, SchemaIntrospect.listColumns(df))
-    try {
-      val result = Resident.plan(spark, table, cleaned, maxRows)(Runner.fetch(_, maxRows))
-      Right(Answer(Trace(sys, usr, raw, cleaned), result))
-    } catch {
-      case NonFatal(_) => Left(Runner.ExitCodes.SqlError)
-    }
+    val fresh =
+      try spark.sql(cleaned)
+      catch { case NonFatal(e) => return Left(Failure("analyze", Runner.ExitCodes.SqlError, e)) }
+    try Right(Answer(Trace(sys, usr, raw, cleaned),
+      Resident.answer(spark, table, cleaned, fresh, maxRows)))
+    catch { case NonFatal(e) => Left(Failure("run", Runner.ExitCodes.SqlError, e)) }
   }
 
   /** Dictionary-skeleton generation entry (reference --generate-schema,
@@ -79,18 +104,18 @@ object Bridge {
     */
   def generateSkeleton(spark: SparkSession, table: String, outPath: String): Int =
     resolve(spark, table) match {
-      case Some(df) => SkeletonGen.write(table, df, outPath); 0
-      case None => Runner.ExitCodes.MissingTable
+      case Right(df) => SkeletonGen.write(table, df, outPath); 0
+      case Left(_) => Runner.ExitCodes.MissingTable
     }
 
-  /** `spark.table`, with Spark's TABLE_OR_VIEW_NOT_FOUND as None: one
+  /** `spark.table`, with Spark's TABLE_OR_VIEW_NOT_FOUND as Left: one
     * catalog resolution, case-insensitive like `tableExists`. Any other
     * failure propagates, as `tableExists`' did — a malformed name still
     * fails to parse.
     */
-  private def resolve(spark: SparkSession, table: String): Option[DataFrame] =
-    try Some(spark.table(table))
+  private def resolve(spark: SparkSession, table: String): Either[AnalysisException, DataFrame] =
+    try Right(spark.table(table))
     catch {
-      case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => None
+      case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => Left(e)
     }
 }

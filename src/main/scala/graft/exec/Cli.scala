@@ -12,6 +12,8 @@ import graft.nl.{LlmClient, MockLlmClient}
   *   ask      ... --questions FILE   every line of FILE (`-`: stdin) is a
   *            question, all asked in one session; exits with the first
   *            failing question's code
+  *            (a failed ask prints `ask failed at <stage>: <cause>` to
+  *            stderr; the stages are those of [[Bridge.Failure]])
   *   sql      --data ... --table T --query SQL [--max-rows N] (query_db.py)
   *   describe --data ... --table T                     (describe_table.py)
   *   gen-schema --data ... --table T --schema-out F    (--generate-schema)
@@ -124,15 +126,14 @@ object Cli {
             }
             val codes = questions.map { q =>
               if (opts.contains("questions")) println(s"Question: $q")
-              Bridge.ask(spark, table, q, dict, llm, maxRows = maxRows) match {
+              Bridge.run(spark, table, q, dict, llm, maxRows = maxRows) match {
                 case Right(ans) =>
                   println(s"Cleaned SQL: ${ans.trace.cleanedSql}")
                   println(Runner.format(ans.result))
                   0
-                case Left(Runner.ExitCodes.MissingTable) =>
-                  System.err.println(s"table not found: $table")
-                  Runner.ExitCodes.MissingTable
-                case Left(ec) => ec
+                case Left(f) =>
+                  System.err.println(s"ask failed at ${f.stage}: ${f.cause}")
+                  f.exitCode
               }
             }
             codes.find(_ != 0).getOrElse(0)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{CurrentCatalog, CurrentDatabas
   CurrentDate, CurrentTime, CurrentTimeZone, CurrentTimestamp, CurrentUser,
   Expression, LocalTimestamp, Now}
 import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LogicalPlan}
-import org.apache.spark.sql.execution.{CachedData, DoNotCleanup}
+import org.apache.spark.sql.execution.CachedData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
@@ -51,23 +51,21 @@ import org.apache.spark.storage.StorageLevel
   * still answers from the held copy. The memo itself lives as long as the
   * SparkContext: stopping the context drops it.
   *
-  * Prepared plans: while the table is held, each question is planned once.
-  * [[plan]] parses and analyzes the asked SQL on every ask, so the catalog
-  * is resolved afresh each time, and then runs either a new
-  * `limit(maxRows + 1)` Dataset or the one an earlier ask of the same
-  * (SQL, maxRows) prepared. The prepared Dataset's optimized and physical
-  * plans are already built: Spark skips analyzing the limit, the cache
-  * substitution, the optimizer and physical planning, and re-runs the
-  * finished adaptive plan, re-reading its finished shuffle stages. A
-  * prepared plan is reused only when all five of these hold:
-  *  1. the fresh analyzed plan `sameResult`s the prepared one, both
+  * Prepared answers: while the table is held, each question is run once.
+  * Every ask parses and analyzes its SQL (the caller's `spark.sql`), so
+  * the catalog is resolved afresh each time; [[answer]] then returns the
+  * [[Runner.BoundedResult]] an earlier successful ask of the same
+  * (SQL, maxRows) produced, and runs no Spark job, when all five of these
+  * hold:
+  *  1. the fresh analyzed plan `sameResult`s the kept one, both
   *     normalized as Spark's cache lookup normalizes (CTE ids), so a
-  *     redefined view or a re-registered function forces a new plan;
+  *     redefined view or a re-registered function forces a new run;
   *  2. the session's `getAllConfs` is unchanged;
-  *  3. the cache entry the plan was made against is still the held
+  *  3. the cache entry the answer was read from is still the held
   *     table's live entry: `clearCache`, `unpersist` or a re-persist all
-  *     force a new plan, and so does a change of the table's files, which
-  *     releases the copy;
+  *     force a new run, and so does a change of the table's files, which
+  *     releases the copy ([[admit]] re-stats them before every ask, so a
+  *     kept answer is never staler than a re-run of its plan would be);
   *  4. every leaf of the analyzed plan, subqueries and CTE bodies
   *     included, is a relation of the asked table, the only input whose
   *     files are watched here;
@@ -77,17 +75,21 @@ import org.apache.spark.storage.StorageLevel
   *     `localtimestamp`, `current_timezone`, `current_database`/
   *     `current_schema`, `current_catalog`, `current_user`/`user`/
   *     `session_user`.
-  * A plan is kept only after it ran without error, and only while Spark's
-  * shuffle-file cleanup is off (its default; with it on, a finished plan's
-  * shuffle files are gone). At most [[PreparedCap]] plans are kept per
-  * table entry, the least recently asked dropped first; they go with the
-  * entry (a replaced view, changed files) and when the cache entry
-  * changes. A miss runs the plain `spark.sql(sql).limit(maxRows + 1)`;
-  * for a table that is not held it adds only a lookup in this memo.
+  * Together they say a re-run would read the same immutable cache entry
+  * through the same deterministic plan under the same confs, so it would
+  * return the kept rows. An answer is kept only after its run succeeded: a
+  * failing question runs again on every ask. Nothing is re-run, so a kept
+  * answer pins no plan, Dataset or shuffle file. Memory: at most
+  * [[PreparedCap]] answers per held table, each at most `maxRows` rows
+  * (fetched as `maxRows + 1`), the least recently asked dropped first;
+  * they go with the table's entry (a replaced view, changed files) and
+  * when the cache entry changes. A miss runs `limit(maxRows + 1)` over
+  * the caller's Dataset, as [[Runner.bounded]] does; for a table that is
+  * not held it adds only a lookup in this memo.
   */
 object Resident {
 
-  /** Prepared plans kept per held table entry. */
+  /** Prepared answers kept per held table entry. */
   val PreparedCap = 32
 
   private final class Seen(val df: DataFrame) {
@@ -96,21 +98,22 @@ object Resident {
       */
     var files: Option[(Seq[(FileSystem, Path)], Seq[(Long, Long)])] = None
 
-    /** The cache entry the prepared plans were made against. */
+    /** The cache entry the prepared answers were read from. */
     var entry: Option[CachedData] = None
 
-    /** (SQL, maxRows) -> its prepared plan, least recently asked first. */
-    val plans = new java.util.LinkedHashMap[(String, Int), Prepared](16, 0.75f, true) {
+    /** (SQL, maxRows) -> its prepared answer, least recently asked first. */
+    val answers = new java.util.LinkedHashMap[(String, Int), Prepared](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, Int), Prepared]): Boolean = size > PreparedCap
     }
   }
 
-  /** A `limit(maxRows + 1)` Dataset that has run once, with the analyzed
-    * plan and the session confs it was planned from.
+  /** The result of a successful run, with the analyzed plan and the
+    * session confs it was run under.
     */
   private final class Prepared(
-      val analyzed: LogicalPlan, val limited: DataFrame, val confs: Map[String, String])
+      val analyzed: LogicalPlan, val result: Runner.BoundedResult,
+      val confs: Map[String, String])
 
   // per SparkContext, the scope of Spark's cache:
   // (session, lowercased table name) -> what the table's last ask saw
@@ -146,14 +149,14 @@ object Resident {
     }
   }
 
-  /** Run `collect` on the Dataset that answers `sql` over `table` with at
-    * most `maxRows + 1` rows: the prepared one when the rule above allows
-    * it, else `spark.sql(sql).limit(maxRows + 1)`, prepared for the next
-    * ask when the rule allows. Call after [[admit]] for the same ask.
+  /** The answer to `sql` over `table`, at most `maxRows` rows: the kept
+    * one when the rule above allows it, else `fresh.limit(maxRows + 1)`
+    * collected, kept for the next ask when the rule allows. `fresh` is
+    * `spark.sql(sql)`, already parsed and analyzed; call after [[admit]]
+    * for the same ask.
     */
-  def plan[A](spark: SparkSession, table: String, sql: String, maxRows: Int)(
-      collect: DataFrame => A): A = {
-    val fresh = spark.sql(sql)
+  def answer(spark: SparkSession, table: String, sql: String, fresh: DataFrame,
+      maxRows: Int): Runner.BoundedResult = {
     // analyzed, with its CTE ids renumbered as Spark's cache lookup does
     lazy val analyzed = fresh.queryExecution.normalized
     lazy val confs = spark.sessionState.conf.getAllConfs
@@ -163,24 +166,23 @@ object Resident {
       memo(spark.sparkContext).get((spark, table.toLowerCase(Locale.ROOT))).flatMap { s =>
         val live = cacheEntry(spark, s.df)
         if (!s.entry.exists(e => live.exists(_ eq e))) {
-          s.plans.clear()
+          s.answers.clear()
           s.entry = live
         }
         live.map(s -> _)
       }
     }
-    held.flatMap { case (s, _) => synchronized(Option(s.plans.get(key))) }
+    held.flatMap { case (s, _) => synchronized(Option(s.answers.get(key))) }
       .filter(p => p.confs == confs && p.analyzed.sameResult(analyzed)) match {
-      case Some(p) => collect(p.limited)
+      case Some(p) => p.result
       case None =>
-        val limited = fresh.limit(maxRows + 1)
-        val out = collect(limited)
-        held.filter { case (s, _) => reusable(s.df, analyzed, limited) }.foreach {
+        val result = Runner.fetch(fresh.limit(maxRows + 1), maxRows)
+        held.filter { case (s, _) => reusable(s.df, analyzed) }.foreach {
           case (s, live) => synchronized {
-            if (s.entry.exists(_ eq live)) s.plans.put(key, new Prepared(analyzed, limited, confs))
+            if (s.entry.exists(_ eq live)) s.answers.put(key, new Prepared(analyzed, result, confs))
           }
         }
-        out
+        result
     }
   }
 
@@ -188,16 +190,15 @@ object Resident {
   private def cacheEntry(spark: SparkSession, df: DataFrame): Option[CachedData] =
     spark.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
 
-  /** Conditions 4 and 5 of the rule, and shuffle-file cleanup off. */
-  private def reusable(table: DataFrame, analyzed: LogicalPlan, limited: DataFrame): Boolean = {
+  /** Conditions 4 and 5 of the rule. */
+  private def reusable(table: DataFrame, analyzed: LogicalPlan): Boolean = {
     val tableLeaves = table.queryExecution.analyzed.collectLeaves()
     val leaves = analyzed.collectWithSubqueries {
       case l: LeafNode if !l.isInstanceOf[CTERelationRef] => l
     }
     leaves.nonEmpty && leaves.forall(l => tableLeaves.exists(_.sameResult(l))) &&
       !analyzed.collectWithSubqueries { case p => p.expressions }.flatten
-        .exists(_.exists(perRun)) &&
-      limited.queryExecution.shuffleCleanupMode == DoNotCleanup
+        .exists(_.exists(perRun))
   }
 
   /** An expression whose value may differ between two runs of one plan. */

@@ -20,8 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * And it keeps the file-stream kit single: stream sources, stagings,
   * folds, drains and scratch dirs are built only in
   * `streaming/StreamOps.scala`. And it keeps the bridge's execute path
-  * single: `Bridge.ask` plans and runs its SQL only through
-  * `Resident.plan`, the memo of prepared plans.
+  * single: `Bridge.run` analyzes its SQL once and runs it only through
+  * `Resident.answer`, the memo of prepared answers; and no catch in
+  * `exec/` drops the cause a failed ask reports.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -135,19 +136,30 @@ class SourceLintSpec extends AnyFunSuite {
       " scratchDir (the file-stream kit)")
   }
 
-  test("Bridge.ask plans its SQL only through Resident.plan") {
+  test("Bridge.run answers its SQL only through Resident.answer") {
     assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
     val bridge = new java.io.File(mainDir, "exec/Bridge.scala")
     val onlyBridge = (f: java.io.File, _: String, _: Int) => f != bridge
-    val bad = codeMatches(("\\.sql\\(|\\.limit\\(|\\.collect\\(|\\bqueryExecution\\b|" +
-      "\\bRunner\\s*\\.\\s*(execute|bounded|executeAndDisplay)\\b").r)(onlyBridge)
-    val plans = codeMatches("\\bResident\\s*\\.\\s*plan\\(".r)(onlyBridge)
-    // Runner.fetch only as the collect that Resident.plan runs
-    val fetches = codeMatches("\\bRunner\\s*\\.\\s*fetch\\b".r)(onlyBridge)
-    assert(bad.isEmpty && plans.size == 1 && fetches == plans,
+    val bad = codeMatches(("\\.limit\\(|\\.collect\\(|\\bqueryExecution\\b|" +
+      "\\bRunner\\s*\\.\\s*(execute|bounded|executeAndDisplay|fetch)\\b").r)(onlyBridge)
+    // one parse + analysis, whose Dataset only Resident.answer runs
+    val analyses = codeMatches("\\.sql\\(".r)(onlyBridge)
+    val answers = codeMatches("\\bResident\\s*\\.\\s*answer\\(".r)(onlyBridge)
+    assert(bad.isEmpty && analyses.size == 1 && answers.size == 1,
       s"a second execute path in Bridge: ${bad.mkString(", ")}; " +
-        s"Resident.plan at ${plans.mkString(", ")}; Runner.fetch at " +
-        s"${fetches.mkString(", ")} — plan the ask's SQL with " +
-        "Resident.plan(spark, table, sql, maxRows)(Runner.fetch(_, maxRows))")
+        s"spark.sql at ${analyses.mkString(", ")}; Resident.answer at " +
+        s"${answers.mkString(", ")} — analyze the ask's SQL once with " +
+        "spark.sql and run it with Resident.answer(spark, table, sql, fresh, maxRows)")
+  }
+
+  test("no catch under exec/ discards its cause") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val exec = new java.io.File(mainDir, "exec").getPath + java.io.File.separator
+    val bad = codeMatches(
+      "case\\s+NonFatal\\(\\s*_\\s*\\)|case\\s+_\\s*:\\s*(Throwable|Exception)\\b".r) {
+      (f, _, _) => !f.getPath.startsWith(exec)
+    }
+    assert(bad.isEmpty, s"a catch that drops its cause at: ${bad.mkString(", ")}" +
+      " — bind the exception and carry it (Bridge.Failure's cause)")
   }
 }

@@ -1,6 +1,8 @@
 package graft.exec
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.parser.ParseException
 import org.scalatest.funsuite.AnyFunSuite
 import graft.meta._
 import graft.nl.MockLlmClient
@@ -101,6 +103,41 @@ class BridgeSpec extends AnyFunSuite {
     }
     assert(Bridge.ask(spark, "queuedata", "q", dict, llm) ==
       Left(Runner.ExitCodes.LlmError))
+  }
+
+  /** The failure of an ask about `table` whose LLM is `llm`. */
+  private def failure(llm: graft.nl.LlmClient, table: String = "queuedata"): Bridge.Failure = {
+    registerQueuedata()
+    Bridge.run(spark, table, "q", dict, llm) match {
+      case Left(f) => f
+      case Right(a) => fail(s"answered: ${a.trace.cleanedSql}")
+    }
+  }
+
+  test("run: each failure names its stage and keeps its cause") {
+    val missing = failure(new MockLlmClient(), "no_such_table")
+    assert(missing.stage == "resolve" && missing.exitCode == Runner.ExitCodes.MissingTable)
+    assert(missing.cause.asInstanceOf[AnalysisException].getCondition == "TABLE_OR_VIEW_NOT_FOUND")
+
+    val boom = new RuntimeException("boom")
+    val llm = failure(new graft.nl.LlmClient {
+      def complete(s: String, u: String): String = throw boom
+    })
+    assert(llm.stage == "llm" && llm.exitCode == Runner.ExitCodes.LlmError && (llm.cause eq boom))
+
+    val unparsed = failure(new MockLlmClient(fallback = "SELEC nonsense FRM nowhere"))
+    assert(unparsed.stage == "analyze" && unparsed.exitCode == Runner.ExitCodes.SqlError)
+    assert(unparsed.cause.isInstanceOf[ParseException])
+
+    val unknown = failure(new MockLlmClient(fallback = "SELECT zzz_no_such_column FROM queuedata"))
+    assert(unknown.stage == "analyze" && unknown.exitCode == Runner.ExitCodes.SqlError)
+    assert(!unknown.cause.isInstanceOf[ParseException] &&
+      unknown.cause.asInstanceOf[AnalysisException].getCondition.startsWith("UNRESOLVED_COLUMN"))
+
+    val runtime = failure(new MockLlmClient(fallback = "SELECT CAST(queue AS INT) FROM queuedata"))
+    assert(runtime.stage == "run" && runtime.exitCode == Runner.ExitCodes.SqlError)
+    assert(runtime.cause.isInstanceOf[SparkThrowable] &&
+      runtime.cause.asInstanceOf[SparkThrowable].getCondition == "CAST_INVALID_INPUT")
   }
 
   test("runner: bounded display detects truncation with limit+1 fetch") {

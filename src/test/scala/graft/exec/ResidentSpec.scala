@@ -3,10 +3,10 @@ package graft.exec
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.meta._
@@ -15,11 +15,13 @@ import graft.nl.MockLlmClient
 /** Residency of the asked table (Resident, called by Bridge.ask): held
   * from the second ask, answers equal to reading the files, released when
   * the view or its files change, never held above the broadcast threshold
-  * or for a table that is not file-backed. And its prepared plans: a
-  * repeat ask about a held table runs the QueryExecution its earlier ask
-  * built, unless the view, a joined view, the session confs, the cache
-  * entry or the files changed, or the SQL reads the clock or a random
-  * source; the per-table cap evicts the least recently asked plan.
+  * or for a table that is not file-backed. And its prepared answers: a
+  * repeat ask about a held table runs no Spark job and returns the rows
+  * its earlier ask produced, unless the view, a joined view, the session
+  * confs, the cache entry or the files changed, or the SQL reads the clock
+  * or a random source; a failing question runs on every ask; each maxRows
+  * keeps its own answer; the per-table cap evicts the least recently
+  * asked answer. Jobs and collects are counted with a SparkListener.
   */
 class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -115,28 +117,47 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
       case Left(code) => fail(s"$raw: exit code $code")
     }
 
-  // every successful collect of this session, in listener-bus order
-  private val executions = new LinkedBlockingQueue[QueryExecution]()
-  private lazy val listening: Unit = spark.listenerManager.register(
-    new QueryExecutionListener {
-      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
-        if (func == "collect") executions.put(qe)
-      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+  /** What ran between two markers: Spark jobs and SQL executions. */
+  private final case class Ran(jobs: Int, collects: Int) {
+    def hit: Boolean = jobs == 0 && collects == 0
+  }
+
+  private val MarkerKey = "resident.spec.marker"
+
+  // job starts ("job", or the marker's id) and SQL execution starts
+  // ("sql"), in listener-bus order
+  private val events = new LinkedBlockingQueue[String]()
+  private lazy val listening: Unit = spark.sparkContext.addSparkListener(
+    new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        events.put(Option(j.properties).flatMap(p => Option(p.getProperty(MarkerKey)))
+          .getOrElse("job"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => events.put("sql")
+        case _ =>
+      }
     })
 
-  /** The result of `body` and the QueryExecution its one collect ran. */
-  private def ran[A](body: => A): (A, QueryExecution) = {
+  /** Run a marker job (an RDD count: no SQL execution) and return every
+    * event the bus delivered before it: the bus delivers in order, so
+    * once the marker arrives no earlier event is left in flight.
+    */
+  private def drain(): Seq[String] = {
     listening
-    // the bus delivers in order: once a marker's collect arrives, no
-    // earlier event is left in flight
-    val marker = spark.range(1)
-    marker.collect()
-    Iterator.continually(executions.poll(30, TimeUnit.SECONDS))
-      .find(qe => qe == null || (qe eq marker.queryExecution))
+    val id = java.util.UUID.randomUUID.toString
+    val sc = spark.sparkContext
+    sc.setLocalProperty(MarkerKey, id)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(MarkerKey, null)
+    Iterator.continually(events.poll(30, TimeUnit.SECONDS))
+      .takeWhile { e => assert(e != null, "marker not seen"); e != id }.toSeq
+  }
+
+  /** The result of `body` and the jobs and collects it ran. */
+  private def ran[A](body: => A): (A, Ran) = {
+    drain()
     val out = body
-    val qe = executions.poll(30, TimeUnit.SECONDS)
-    assert(qe != null, "no collect seen")
-    (out, qe)
+    val seen = drain()
+    (out, Ran(seen.count(_ == "job"), seen.count(_ == "sql")))
   }
 
   private def cached: Boolean = spark.catalog.isCached("queuedata")
@@ -197,8 +218,7 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     ask(online)
     ask(online)
     assert(cached)
-    val prior = ran(ask(online))._2
-    assert(ran(ask(online))._2 eq prior)
+    assert(ran(ask(online))._2.hit)
 
     // rewrite one part file in place: every row of it turns 'online'
     val part = new File(path).listFiles.filter(_.getName.startsWith("part-")).minBy(_.getName)
@@ -211,9 +231,9 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
       new File(path, s".${part.getName}.crc").toPath, StandardCopyOption.REPLACE_EXISTING)
     part.setLastModified(part.lastModified() + 2000L)
 
-    val (got, qe) = ran(ask(online))
+    val (got, r) = ran(ask(online))
     assert(!cached)
-    assert(!(qe eq prior), "a rewritten part file must be planned afresh")
+    assert(r.collects > 0, "a rewritten part file must be run afresh")
     // read after the ask released the copy: until then a fresh read of
     // the same files is served from it too
     val expected = spark.read.parquet(path).where("status = 'online'")
@@ -247,22 +267,17 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!cached && persistentRdds == before)
   }
 
-  test("a repeat ask runs its earlier QueryExecution, with Runner.execute's rows") {
+  test("a repeat ask runs no Spark job and answers with Runner.execute's rows") {
     spark.catalog.clearCache()
     register(writeQueuedata("prepared", 2000))
     val expected = fixtures.map(f => f.name -> fromFiles(f)).toMap
     ask(fixture("03")) // the first ask: the table is held from the next
-    var last = Map.empty[String, QueryExecution]
-    for (round <- 1 to 3) {
-      last = fixtures.map { f =>
-        val (rows, qe) = ran(ask(f))
-        assert(rows == expected(f.name), s"${f.name}, round $round")
-        if (round > 1)
-          assert(qe eq last(f.name), s"${f.name}, round $round: planned again")
-        f.name -> qe
-      }.toMap
+    for (round <- 1 to 3; f <- fixtures) {
+      val (rows, r) = ran(ask(f))
+      assert(rows == expected(f.name), s"${f.name}, round $round")
+      if (round == 1) assert(r.collects > 0, s"${f.name}: answered without a run")
+      else assert(r.hit, s"${f.name}, round $round: ran $r")
     }
-    assert(last.values.toSet.size == fixtures.size)
   }
 
   test("a replaced view, a redefined joined view or a conf flip plans afresh") {
@@ -273,33 +288,32 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT queue FROM queuedata WHERE status = "
     spark.sql(picked + "'online'")
     val join = "SELECT COUNT(*) AS n FROM queuedata q JOIN picked p ON q.queue = p.queue"
-    def twice(raw: String): QueryExecution = {
+    def twice(raw: String): Unit = {
       askSql(raw)
-      val (_, qe) = ran(askSql(raw))
-      assert(ran(askSql(raw))._2 eq qe, raw)
-      qe
+      askSql(raw)
+      assert(ran(askSql(raw))._2.hit, s"$raw: not kept")
     }
-    def afresh(raw: String, before: QueryExecution): Unit = {
-      val ((sql, rows), qe) = ran(askSql(raw))
-      assert(!(qe eq before), s"$raw: reused")
+    def afresh(raw: String): Unit = {
+      val ((sql, rows), r) = ran(askSql(raw))
+      assert(r.collects > 0, s"$raw: answered from a kept result")
       assert(rows == Runner.execute(spark, sql).rows, raw)
     }
 
-    val byStatus = twice(join)
+    twice(join)
     spark.sql(picked + "'offline'")
-    afresh(join, byStatus)
+    afresh(join)
 
-    val count = twice(fixture("03").raw)
+    twice(fixture("03").raw)
     register(writeQueuedata("afresh_new", 150, salt = 3L))
-    afresh(fixture("03").raw, count)
+    afresh(fixture("03").raw)
     assert(askSql(fixture("03").raw)._2 == Seq(Row(150L)))
 
-    val online = twice(fixture("04").raw)
+    twice(fixture("04").raw)
     val key = "spark.sql.ansi.enabled"
     val prior = spark.conf.get(key)
     try {
       spark.conf.set(key, (!prior.toBoolean).toString)
-      afresh(fixture("04").raw, online)
+      afresh(fixture("04").raw)
     } finally spark.conf.set(key, prior)
   }
 
@@ -309,10 +323,8 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     askSql("SELECT COUNT(*) AS n FROM queuedata")
     val clock = "SELECT queue, current_timestamp() AS t FROM queuedata WHERE queue = 'q00001'"
     val random = "SELECT COUNT(*) AS n FROM queuedata WHERE rand() < 2"
-    for (raw <- Seq(clock, random)) {
-      val runs = (1 to 3).map(_ => ran(askSql(raw)))
-      assert(runs.map(_._2).distinct.size == 3, s"$raw: reused a plan")
-    }
+    for (raw <- Seq(clock, random); i <- 1 to 3)
+      assert(ran(askSql(raw))._2.collects > 0, s"$raw, ask $i: answered from a kept result")
     val t1 = askSql(clock)._2.head.getTimestamp(1)
     Thread.sleep(20)
     val t2 = askSql(clock)._2.head.getTimestamp(1)
@@ -327,14 +339,46 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expected = fromFiles(f)
     ask(f)
     ask(f)
-    val held = ran(ask(f))._2
+    assert(ran(ask(f))._2.hit)
     val size = persistentRdds
     spark.catalog.clearCache()
-    val (rows, qe) = ran(ask(f))
-    assert(rows == expected && !(qe eq held))
+    val (rows, r) = ran(ask(f))
+    assert(rows == expected && r.collects > 0)
     assert(persistentRdds == size)
-    assert(ran(ask(f))._2 eq qe)
+    assert(ran(ask(f))._2.hit)
     assert(persistentRdds == size)
+  }
+
+  test("a failing question runs again on every ask and is never kept") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("failing", 400))
+    askSql("SELECT COUNT(*) AS n FROM queuedata") // the table is held from the next ask
+    val llm = new MockLlmClient(fallback = "SELECT CAST(queue AS INT) AS q FROM queuedata")
+    for (i <- 1 to 3) {
+      val (code, r) = ran(Bridge.ask(spark, "queuedata", "q", dict, llm))
+      assert(code == Left(Runner.ExitCodes.SqlError), s"ask $i")
+      assert(r.jobs > 0, s"ask $i: answered without a run")
+      assert(cached)
+    }
+  }
+
+  test("one SQL asked with two maxRows keeps an answer for each") {
+    spark.catalog.clearCache()
+    register(writeQueuedata("max_rows", 400))
+    val llm = new MockLlmClient(fallback =
+      "SELECT queue FROM queuedata WHERE corecount = 8 ORDER BY queue")
+    def at(maxRows: Int): (String, Runner.BoundedResult) =
+      Bridge.ask(spark, "queuedata", "q", dict, llm, maxRows = maxRows) match {
+        case Right(a) => (a.trace.cleanedSql, a.result)
+        case Left(code) => fail(s"maxRows $maxRows: exit code $code")
+      }
+    at(5) // the first ask: the table is held from the next
+    for (round <- 1 to 2; maxRows <- Seq(5, 1000)) {
+      val ((sql, got), r) = ran(at(maxRows))
+      assert(got == Runner.execute(spark, sql, maxRows), s"maxRows $maxRows, round $round")
+      assert(got.truncated == (maxRows == 5) && (got.rows.size > 5) == (maxRows == 1000))
+      assert(r.hit == (round == 2), s"maxRows $maxRows, round $round: ran $r")
+    }
   }
 
   test("the per-table cap evicts the least recently asked plan") {
@@ -342,10 +386,13 @@ class ResidentSpec extends AnyFunSuite with BeforeAndAfterAll {
     register(writeQueuedata("cap", 400))
     def sql(i: Int) = s"SELECT COUNT(*) AS n FROM queuedata WHERE corecount > $i"
     askSql(sql(0))
-    val first = ran(askSql(sql(0)))._2
-    assert(ran(askSql(sql(0)))._2 eq first)
-    val plans = (1 to Resident.PreparedCap).map(i => ran(askSql(sql(i)))._2)
-    assert(ran(askSql(sql(Resident.PreparedCap)))._2 eq plans.last)
-    assert(!(ran(askSql(sql(0)))._2 eq first), "the oldest plan was kept")
+    askSql(sql(0))
+    assert(ran(askSql(sql(0)))._2.hit)
+    for (i <- 1 to Resident.PreparedCap)
+      assert(ran(askSql(sql(i)))._2.collects > 0, s"question $i")
+    assert(ran(askSql(sql(Resident.PreparedCap)))._2.hit)
+    val ((_, rows), r) = ran(askSql(sql(0)))
+    assert(r.collects > 0, "the oldest answer was kept")
+    assert(rows == Runner.execute(spark, sql(0)).rows)
   }
 }

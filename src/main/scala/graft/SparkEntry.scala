@@ -22,11 +22,10 @@ object SparkEntry {
       PipelineOps.queries ++ LakeOps.queries ++ BehaviorOps.queries ++
       CorpusOps.queries ++ Round3Ops.queries ++ Round4Ops.queries ++
       Round4More.queries ++ Round4Final.queries ++ KMeans.queries ++
-      Round5Ops.queries ++ Pq.queries ++ Bpe.queries ++
-      Round5More.queries ++ Round5Final.queries ++ MaintenanceOps.queries ++
-      Round6Ops.queries ++ Round7Ops.queries ++ Round7More.queries ++
-      Round7Final.queries ++ Round7Pipeline.queries ++ Round8Ops.queries ++
-      Round9Ops.queries ++ Round9More.queries ++ Round10Ops.queries ++
+      Pq.queries ++ Bpe.queries ++ Round5More.queries ++
+      Round5Final.queries ++ MaintenanceOps.queries ++
+      IndexLifecycle.queries ++ GraphServe.queries ++
+      Round7Final.queries ++ Round7Pipeline.queries ++ Round10Ops.queries ++
       Round10More.queries ++ Round10Final.queries ++ Round11Ops.queries ++
       Round11More.queries ++ Round11Final.queries ++
       Round11Extra.queries ++ Round11Pipeline.queries ++ Round12Ops.queries ++

@@ -24,6 +24,11 @@ import graft.nl.{LlmClient, MockLlmClient}
   * var (GEMINI_API_KEY / MISTRAL_API_KEY) is set — same provider/model/
   * default scheme as the reference (query_llm.py:427-428, 485-486) — and
   * falls back to the offline mock otherwise.
+  *
+  * stdout and stderr are written as UTF-8 whatever the JVM's default
+  * charset: under a POSIX/C locale the platform streams would print
+  * every non-ASCII character (the mock notice's dash, a result cell) as
+  * `?`.
   */
 object Cli {
 
@@ -32,7 +37,20 @@ object Cli {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
 
+  /** An autoflushing UTF-8 stream over a standard file descriptor. */
+  private def utf8(fd: java.io.FileDescriptor): java.io.PrintStream =
+    new java.io.PrintStream(new java.io.FileOutputStream(fd), true,
+      java.nio.charset.StandardCharsets.UTF_8)
+
   def main(args: Array[String]): Unit = {
+    val (out, err) = (utf8(java.io.FileDescriptor.out),
+      utf8(java.io.FileDescriptor.err))
+    System.setOut(out)
+    System.setErr(err)
+    Console.withOut(out)(Console.withErr(err)(run(args)))
+  }
+
+  private def run(args: Array[String]): Unit = {
     if (args.isEmpty) {
       System.err.println("usage: graft.exec.Cli <ask|sql|describe|gen-schema> --data <path> --table <t> ...")
       sys.exit(Runner.ExitCodes.OpenError)

@@ -69,8 +69,7 @@ object Bpe {
     */
   private[ops] def trainSteps(
       s: SparkSession, w0: DataFrame): Seq[(DataFrame, DataFrame)] = {
-    val cp0 = w0.localCheckpoint(true)
-    var wf = s.createDataFrame(cp0.rdd, cp0.schema)
+    var wf = pin(s, w0)
     var out: Seq[(DataFrame, DataFrame)] = Nil
     for (_ <- 1 to STEPS) {
       val best = wf
@@ -89,8 +88,7 @@ object Bpe {
             "'|' || pa || pb || '|')"))
         .select(col("f"), col("s"))
       // eager checkpoint + stats reset each merge round (q174/q187)
-      val cp = merged.localCheckpoint(true)
-      wf = s.createDataFrame(cp.rdd, cp.schema)
+      wf = pin(s, merged)
       out = out :+ (best, wf)
     }
     out

@@ -76,8 +76,7 @@ object Components {
     import spark.implicits._
     // materialize the (expensive) candidate join once: the count that
     // picks the strategy and the labeling both read the checkpoint
-    val cp = pairs.toDF("a", "b").localCheckpoint(true)
-    val edges = spark.createDataFrame(cp.rdd, cp.schema)
+    val edges = pin(spark, pairs.toDF("a", "b"))
     if (edges.count() <= maxSingleTaskEdges)
       edges.as[(Long, Long)]
         .repartition(1)
@@ -86,20 +85,15 @@ object Components {
     else contract(spark, edges, maxRounds)
   }
 
-  private def fresh(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    spark.createDataFrame(cp.rdd, cp.schema)
-  }
-
   private def contract(
       spark: SparkSession, edges: DataFrame, maxRounds: Int): DataFrame = {
     // the vertex universe — needed at the end because star contraction
     // drops self-loops and isolated vertices along the way
-    val nodes = fresh(spark,
+    val nodes = pin(spark,
       edges.select(col("a").as("node"))
         .union(edges.select(col("b").as("node"))).distinct())
     // canonical undirected edge set, self-loops dropped
-    var e = fresh(spark,
+    var e = pin(spark,
       edges.select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .filter(col("u") =!= col("v")).distinct())
@@ -178,7 +172,7 @@ object Components {
         .select(least(col("p.x"), col("p.m")).as("u"),
           greatest(col("p.x"), col("p.m")).as("v"))
         .distinct()
-      val e2 = fresh(spark, e2q)
+      val e2 = pin(spark, e2q)
       val e2Sig = sigOf(e2)
       if (e2Sig == eSig) {
         // candidate fixpoint: confirm exactly (collision-safe exit)

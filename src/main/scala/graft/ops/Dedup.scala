@@ -374,5 +374,34 @@ object Dedup {
         .filter(col("vec_a") < col("vec_b") && dot >= 0.25)
         .select(col("vec_a"), col("vec_b"), round(dot, 6).as("cosine"))
         .orderBy(col("vec_a"), col("vec_b"))
+    },
+
+    // E6 exact dedup, hash path (the formulation q44's comment promised):
+    // the 100 TB pass never ships document text to a shuffle — it
+    // distincts on a 64-bit content digest (here the first 16 hex chars
+    // of md5), with the full-width md5 as the collision check: if any
+    // two distinct documents collided in the 64-bit prefix, the two
+    // distinct counts would differ and n_hash64_collisions would be > 0.
+    // Each shuffled row is a fixed-width digest regardless of document
+    // size; COUNT(DISTINCT text) from q44 survives only in spirit — the
+    // widest value this query moves is 32 bytes.
+    Q(
+      "q200_dedup_hash_path",
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  COUNT(DISTINCT substr(md5(text), 1, 16)) AS n_unique,
+        |  CAST(COUNT(*) AS BIGINT)
+        |    - COUNT(DISTINCT substr(md5(text), 1, 16)) AS n_dup_docs,
+        |  COUNT(DISTINCT md5(text))
+        |    - COUNT(DISTINCT substr(md5(text), 1, 16))
+        |    AS n_hash64_collisions
+        |FROM documents""".stripMargin) { (s, dir) =>
+      Tables.table(s, dir, "documents")
+        .select(md5(col("text")).as("d128"),
+          substring(md5(col("text")), 1, 16).as("h64"))
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("h64")).as("n_unique"),
+          (count(lit(1)) - countDistinct(col("h64"))).as("n_dup_docs"),
+          (countDistinct(col("d128")) - countDistinct(col("h64")))
+            .as("n_hash64_collisions"))
     })
 }

@@ -183,8 +183,7 @@ object KMeans {
         .select(col("cid"), coalesce(col("ncs"), col("cs")).as("cs"))
       // eager checkpoint + stats reset: lineage and join-size estimates
       // must not compound across iterations (see q174/q187)
-      val cp = next.localCheckpoint(true)
-      cent = s.createDataFrame(cp.rdd, cp.schema)
+      cent = pin(s, next)
     }
     cent
   }
@@ -195,13 +194,18 @@ object KMeans {
   // codebook: k = max(4, floor(sqrt(n))/2), so expected cell occupancy
   // grows ~2*sqrt(n) instead of n/CK — per-probe work stays bounded as
   // the corpus grows (the round-6 verdict's "fixed IVF geometry" fix).
-  // Production indexes do exactly this (cells ~ sqrt(n)); the formula is
-  // shared verbatim with Round5Ops.scaledK so the blocking and serving
-  // families stay on one law.
+  // Production indexes do exactly this (cells ~ sqrt(n)); the blocking
+  // (q49/q184/q197) and serving families share the one law, scaledK.
+
+  /** Corpus-scaling centroid count, shared with q49: k = max(4,
+    * floor(sqrt(n))/2) — expected block population ~2*sqrt(n).
+    */
+  private[ops] def scaledK(n: Long): Int =
+    math.max(4L, math.floor(math.sqrt(n.toDouble)).toLong / 2).toInt
 
   /** Corpus-derived coarse-cell count for the serving index over `e`. */
   private[ops] def servingK(e: DataFrame): Int =
-    Round5Ops.scaledK(e.count())
+    scaledK(e.count())
 
   /** The same law as a one-row oracle CTE (named `kk`) over `src`. */
   private[ops] def kkCte(src: String = "embeddings"): String =
@@ -320,6 +324,8 @@ object KMeans {
 
   private val K = 8
   private val ITERS = 3
+  private val SK = 4 // q248: fixed small k — sampling active at sf0.01
+  private val SITERS = 2 // q248: Lloyd iterations
 
   val queries: Seq[Q] = Seq(
     // E7: the codebook-training gate itself. Output: the full trained
@@ -352,5 +358,46 @@ object KMeans {
         .select(col("cid"), col("pos").cast("bigint").as("pos"),
           col("cval"), coalesce(col("n_members"), lit(0L)).as("n_members"))
         .orderBy(col("cid"), col("pos"))
-    })
+    },
+
+    // E7: SAMPLED CODEBOOK with a fixed small k — the geometry that
+    // makes the round-8 Knuth-hash training sample ACTIVE at the
+    // sf0.01 hard gate (64·4 = 256 < 500): the hard correctness
+    // signal itself now hash-verifies the sampled Lloyd path, with the
+    // admitted-sample size and threshold as output columns.
+    Q(
+      "q248_sampled_codebook_small",
+      s"""WITH ${oracleCtes(SK, SITERS)},
+         |asF AS (
+         |  SELECT vec_id, cid FROM (
+         |    SELECT e.vec_id, c.cid,
+         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+         |        ORDER BY ${duckDot("e.embedding", "c.cs")} DESC,
+         |          c.cid ASC) AS rn
+         |    FROM embeddings e, cl$SITERS c) WHERE rn = 1),
+         |sizes AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n
+         |  FROM asF GROUP BY cid),
+         |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_train FROM kmtr),
+         |th AS (SELECT CAST(t AS BIGINT) AS thr FROM kmthr)
+         |SELECT c.cid, CAST(c.pos AS BIGINT) AS pos, c.cval,
+         |  COALESCE(z.n, 0) AS n_members, nt.n_train, th.thr
+         |FROM cent$SITERS c LEFT JOIN sizes z ON c.cid = z.cid, nt, th
+         |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+      val e = Tables.table(s, dir, "embeddings")
+      val cb = codebook(s, e, SK, SITERS)
+      val sizes = assign(e, cb).groupBy(col("cid"))
+        .agg(count(lit(1)).cast("bigint").as("n_members"))
+      val thr = sampleThreshold(e.count(), SK)
+      val nTrain = trainSample(e, SK)
+        .agg(count(lit(1)).cast("bigint").as("n_train"))
+      cb.select(col("cid"), posexplode(col("cs")).as(Seq("pos", "cval")))
+        .join(broadcast(sizes), Seq("cid"), "left")
+        .crossJoin(broadcast(nTrain))
+        .select(col("cid"), col("pos").cast("bigint").as("pos"),
+          col("cval"),
+          coalesce(col("n_members"), lit(0L)).as("n_members"),
+          col("n_train"), lit(thr).as("thr"))
+        .orderBy(col("cid"), col("pos"))
+    }
+  )
 }

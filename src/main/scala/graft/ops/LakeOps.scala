@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -24,6 +25,59 @@ object LakeOps {
       s"(CASE WHEN $x % $hi >= $lo THEN $bx ELSE 0 END + " +
         s"CASE WHEN $y % $hi >= $lo THEN $by ELSE 0 END)"
     }.mkString(" + ")
+
+  // ------------------------------------------------------------------
+  // q198: optimistic commit protocol over the MERGE dataflow
+  // ------------------------------------------------------------------
+
+  /** Coordinator state: the table version plus the committed-batch log —
+    * exactly q123's foreachBatch idempotence ledger, generalized to
+    * optimistic concurrency (Delta/Iceberg-style): a writer declares the
+    * snapshot version it read; the commit succeeds only if that is still
+    * current, a replayed batch_id is a no-op, and everything else is a
+    * conflict the writer must retry against the new snapshot.
+    */
+  private final case class TxnState(version: Long, committed: Set[String])
+
+  private def attemptCommit(
+      st: TxnState, batchId: String, expectedVersion: Long
+  ): (TxnState, String) =
+    if (st.committed(batchId)) (st, "skipped_idempotent")
+    else if (expectedVersion != st.version) (st, "conflict_detected")
+    else (TxnState(st.version + 1, st.committed + batchId), "committed")
+
+  /** MERGE: target ∪ source, source-wins on the key (q135's full-outer
+    * shape — at 100 TB the target is bucketed on k so only the small
+    * source shuffles).
+    */
+  private[ops] def merge(t: DataFrame, src: DataFrame): DataFrame =
+    t.select(col("k").as("tk"), col("v").as("tv"))
+      .join(src.select(col("k").as("sk"), col("v").as("sv")),
+        col("tk") === col("sk"), "full_outer")
+      .select(coalesce(col("sk"), col("tk")).as("k"),
+        coalesce(col("sv"), col("tv")).as("v"))
+
+  /** Order-independent table fingerprint: SUM over rows of an integer
+    * fold of md5("k|v") mod 1e9+7 — partial-aggregatable (no sort, no
+    * string_agg), so two 100 TB table states compare with one scan each.
+    * The oracle side; Spark evaluates it with the `char_fold` kernel.
+    */
+  private[ops] def duckRowFold: String =
+    Pq.duckFold("CAST(k AS VARCHAR) || '|' || " +
+      "CAST(CAST(v AS DECIMAL(18,2)) AS VARCHAR)")
+
+  /** One protocol-event row carrying the post-event table state summary. */
+  private def snap(
+      step: Long, batchId: String, event: String, version: Long,
+      state: DataFrame): DataFrame =
+    state.agg(count(lit(1)).as("n_rows"),
+      (sum(graft.functions.TextHash.charFold(md5(concat(
+        col("k").cast("string"), lit("|"),
+        col("v").cast("decimal(18,2)").cast("string"))), 0L, 31L))
+        % 1000000007L).as("table_fp"))
+      .select(lit(step).as("step"), lit(batchId).as("batch_id"),
+        lit(event).as("event"), lit(version).as("version"),
+        col("n_rows"), col("table_fp"))
 
   val queries: Seq[Q] = Seq(
     // MERGE/upsert: target ∪ source with source-wins conflict resolution,
@@ -291,5 +345,81 @@ object LakeOps {
         .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
         .filter(col("pos") < 10)
         .orderBy(col("doc_id"), col("pos"))
+    },
+
+    // Lake: the transactional envelope around q135's MERGE — optimistic
+    // concurrency with snapshot versions, conflict detection, and
+    // idempotent replay (q123's foreachBatch ledger as the batch_id
+    // log). Scenario: writers A and B both read snapshot v1; A commits
+    // (v2); B's stale commit is REJECTED (expected 1, current 2); B
+    // retries against v2 and commits (v3); A's batch is then replayed
+    // (at-least-once delivery) and is a no-op because its batch_id is
+    // already in the log. The output carries each event plus the
+    // post-event table state (row count + order-independent md5-fold
+    // fingerprint): rows 3 vs 2 prove the conflicted commit changed
+    // nothing, rows 5 vs 4 prove the replay changed nothing — the
+    // "provably same table state" the protocol exists to guarantee.
+    Q(
+      "q198_merge_commit_protocol",
+      s"""WITH t0 AS (
+         |  SELECT c_custkey AS k, c_acctbal AS v
+         |  FROM customer WHERE c_custkey <= 1400),
+         |ba AS (
+         |  SELECT c_custkey AS k, ROUND(c_acctbal + 100, 2) AS v
+         |  FROM customer WHERE c_custkey BETWEEN 1301 AND 1500),
+         |bb AS (
+         |  SELECT c_custkey AS k, ROUND(c_acctbal * 2, 2) AS v
+         |  FROM customer WHERE c_custkey BETWEEN 1350 AND 1450),
+         |s1 AS (
+         |  SELECT COALESCE(s.k, t.k) AS k, COALESCE(s.v, t.v) AS v
+         |  FROM t0 t FULL OUTER JOIN ba s ON t.k = s.k),
+         |s2 AS (
+         |  SELECT COALESCE(s.k, t.k) AS k, COALESCE(s.v, t.v) AS v
+         |  FROM s1 t FULL OUTER JOIN bb s ON t.k = s.k),
+         |f0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM($duckRowFold) % 1000000007 AS BIGINT) AS fp FROM t0),
+         |f1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM($duckRowFold) % 1000000007 AS BIGINT) AS fp FROM s1),
+         |f2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM($duckRowFold) % 1000000007 AS BIGINT) AS fp FROM s2)
+         |SELECT CAST(1 AS BIGINT) AS step, 'base' AS batch_id,
+         |  'committed' AS event, CAST(1 AS BIGINT) AS version,
+         |  n AS n_rows, fp AS table_fp FROM f0
+         |UNION ALL SELECT 2, 'bA', 'committed', 2, n, fp FROM f1
+         |UNION ALL SELECT 3, 'bB', 'conflict_detected', 2, n, fp FROM f1
+         |UNION ALL SELECT 4, 'bB', 'committed', 3, n, fp FROM f2
+         |UNION ALL SELECT 5, 'bA', 'skipped_idempotent', 3, n, fp FROM f2
+         |ORDER BY step""".stripMargin) { (s, dir) =>
+      val cust = Tables.table(s, dir, "customer")
+      val base = cust.filter(col("c_custkey") <= 1400)
+        .select(col("c_custkey").as("k"), col("c_acctbal").as("v"))
+      val batchA = cust
+        .filter(col("c_custkey").between(1301, 1500))
+        .select(col("c_custkey").as("k"),
+          round(col("c_acctbal") + 100, 2).as("v"))
+      val batchB = cust
+        .filter(col("c_custkey").between(1350, 1450))
+        .select(col("c_custkey").as("k"),
+          round(col("c_acctbal") * 2, 2).as("v"))
+
+      // the coordinator replays the attempt log; every decision comes
+      // out of attemptCommit, never hand-assigned
+      var st = TxnState(1L, Set("base"))
+      var state = base
+      var out = snap(1L, "base", "committed", st.version, state)
+      var stepNo = 1L
+      val attempts = Seq( // (batch_id, frame, snapshot version it read)
+        ("bA", batchA, 1L), // writer A, fresh
+        ("bB", batchB, 1L), // writer B, now stale — must conflict
+        ("bB", batchB, 2L), // writer B retry against the new snapshot
+        ("bA", batchA, 1L)) // writer A replayed — must be a no-op
+      attempts.foreach { case (id, batch, expected) =>
+        val (next, event) = attemptCommit(st, id, expected)
+        if (event == "committed") state = merge(state, batch)
+        st = next
+        stepNo += 1
+        out = out.unionAll(snap(stepNo, id, event, st.version, state))
+      }
+      out.orderBy(col("step"))
     })
 }

@@ -43,6 +43,8 @@ import graft.Tables
   */
 object Pq {
 
+  import VecIndex.{CITERS, NPROBE, QN}
+
   private[ops] val M = 4 // subspaces
   private[ops] val SUB = 16 // dims per subspace (embeddings are 64-d)
   private[ops] val K = 8 // codewords per subspace
@@ -222,12 +224,6 @@ object Pq {
       "  FROM embeddings WHERE vec_id = 0)"
 
   // ---------------- gates --------------------------------------------
-
-  // coarse geometry: cell count is corpus-derived (KMeans.servingK —
-  // k = max(4, floor(sqrt(n))/2)), shared with q74's index
-  private val CITERS = 2
-  private val NPROBE = 2
-  private val QN = 32 // batched-search (q217) query count
 
   val queries: Seq[Q] = Seq(
     Q(

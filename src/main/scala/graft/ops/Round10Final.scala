@@ -38,7 +38,7 @@ import graft.Tables
 object Round10Final {
 
   /** q259's recall target: ceil(0.9 · QN·10) referee hits. */
-  private val TGT: Long = (Round7Ops.QN * 10 * 9 + 9) / 10
+  private val TGT: Long = (VecIndex.QN * 10 * 9 + 9) / 10
 
   // ---- q262: perceptual-hash image dedup ----------------------------
   // Deterministic 8×8 grayscale fixture (the q61 discipline: pixel =
@@ -191,11 +191,7 @@ object Round10Final {
          |ORDER BY p.qid""".stripMargin) { (s, dir) =>
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Final.CITERS)
-      def pin(df: DataFrame): DataFrame = {
-        val cp = df.localCheckpoint(true)
-        s.createDataFrame(cp.rdd, cp.schema)
-      }
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val qb = ivc.filter(col("vec_id") < Round7Final.QB)
         .select(col("vec_id").as("qid"), col("ivd").as("qiv"))
       val wprobe = Window.partitionBy(col("qid"))
@@ -216,7 +212,7 @@ object Round10Final {
       // one exact referee, shared by both arms
       val wex = Window.partitionBy(col("qid"))
         .orderBy(col("ex").desc, col("vec_id").asc)
-      val topeb = pin(ivc.crossJoin(broadcast(qb))
+      val topeb = pin(s, ivc.crossJoin(broadcast(qb))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
           expr("CAST(array_dot(ivd, qiv) AS BIGINT)").as("ex"))
@@ -283,7 +279,7 @@ object Round10Final {
     // auditable against the evidence that produced it.
     Q(
       "q259_operating_point",
-      s"""WITH ${Round7Ops.probeCurveCtes},
+      s"""WITH ${Ivf.probeCurveCtes},
          |sel AS (
          |  SELECT CAST(COALESCE(MIN(CASE WHEN hits >= $TGT
          |    THEN nprobe END), MAX(nprobe)) AS BIGINT) AS chosen_nprobe
@@ -294,7 +290,7 @@ object Round10Final {
          |  s.chosen_nprobe, CAST($TGT AS BIGINT) AS target_hits
          |FROM curve c, sel s
          |ORDER BY c.nprobe""".stripMargin) { (s, dir) =>
-      val curve = Round7Ops.probeCurveFrame(s, dir)
+      val curve = Ivf.probeCurveFrame(s, dir)
       val sel = curve.agg(
         coalesce(min(when(col("hits") >= TGT, col("nprobe"))),
           max(col("nprobe"))).cast("bigint").as("chosen_nprobe"))
@@ -318,14 +314,14 @@ object Round10Final {
     Q(
       "q260_cell_drift_monitor",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, Round7Ops.CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl${Round7Ops.CITERS} c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (
          |  SELECT vec_id, cid FROM assign WHERE rn = 1),
          |coh AS MATERIALIZED (
@@ -351,7 +347,7 @@ object Round10Final {
          |FROM per p, tv t
          |ORDER BY p.cid""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Ops.CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val half = e.count() / 2
       val coh = KMeans.assign(e, cb)
         .groupBy(col("cid"))

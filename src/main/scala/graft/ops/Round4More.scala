@@ -280,7 +280,7 @@ object Round4More {
         |  UNION ALL
         |  SELECT vec_id + 1000000, embedding FROM embeddings
         |  WHERE vec_id % 25 = 0),
-        |kk AS (${Round5Ops.duckScaledK}),
+        |${KMeans.kkCte()},
         |${KMeans.oracleCtes("(SELECT k FROM kk)", 2)},
         |asg AS (
         |  SELECT vec_id, embedding, cid FROM (
@@ -315,7 +315,7 @@ object Round4More {
       // the centroids come from KMeans.codebook's fixed-point Lloyd
       // iterations, not from raw sample vectors; assignment is the
       // map-only broadcast argmax
-      val k = Round5Ops.scaledK(e.count())
+      val k = KMeans.scaledK(e.count())
       val asg = KMeans.assign(uni, KMeans.codebook(s, e, k, 2))
       val a = asg.select(col("cid"), col("vec_id").as("va"),
         col("embedding").as("ea"))

@@ -445,13 +445,13 @@ object Round5Final {
          |      THEN 1 ELSE 0 END) AS BIGINT) AS n_updated
          |  FROM s2 c LEFT JOIN s1 p ON c.k = p.k),
          |f0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(${Round5Ops.duckRowFold}) % 1000000007 AS BIGINT) AS fp
+         |  CAST(SUM(${LakeOps.duckRowFold}) % 1000000007 AS BIGINT) AS fp
          |  FROM t0),
          |f1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(${Round5Ops.duckRowFold}) % 1000000007 AS BIGINT) AS fp
+         |  CAST(SUM(${LakeOps.duckRowFold}) % 1000000007 AS BIGINT) AS fp
          |  FROM s1),
          |f2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(${Round5Ops.duckRowFold}) % 1000000007 AS BIGINT) AS fp
+         |  CAST(SUM(${LakeOps.duckRowFold}) % 1000000007 AS BIGINT) AS fp
          |  FROM s2)
          |SELECT CAST(1 AS BIGINT) AS version, f.n AS n_rows,
          |  f.fp AS table_fp, d.n_inserted, d.n_updated FROM f0 f, d1 d
@@ -469,8 +469,8 @@ object Round5Final {
       val bB = cust.filter(col("c_custkey").between(1350, 1450))
         .select(col("c_custkey").as("k"),
           round(col("c_acctbal") * 2, 2).as("v"))
-      val v2 = Round5Ops.merge(base, bA)
-      val v3 = Round5Ops.merge(v2, bB)
+      val v2 = LakeOps.merge(base, bA)
+      val v3 = LakeOps.merge(v2, bB)
       Seq((1L, base, base.limit(0)), (2L, v2, base), (3L, v3, v2))
         .map { case (ver, cur, prev) =>
           cur.agg(count(lit(1)).as("n_rows"),

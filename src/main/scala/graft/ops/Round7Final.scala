@@ -37,7 +37,8 @@ import graft.Tables
   */
 object Round7Final {
 
-  private[ops] val CITERS = 2 // coarse Lloyd iterations (q74 geometry)
+  import VecIndex.{CITERS, P}
+
   private val SOFT = 2 // soft-assigned cells per vector (graph blocking)
   private val DEG = 6 // kNN-graph out-degree
   private[ops] val BEAM = 4 // beam width per hop
@@ -96,15 +97,6 @@ object Round7Final {
     * the broadcast codebook inside an array (map-only). Output:
     * (vec_id, ivd fixed-point DOUBLEs, crank, acell).
     */
-  /** Eager localCheckpoint with stats/lineage reset (the shared
-    * iterative-loop discipline): materialize a frame consumed by
-    * several downstream actions exactly once.
-    */
-  private def pinned(s: SparkSession, df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    s.createDataFrame(cp.rdd, cp.schema)
-  }
-
   private def softOf(e: DataFrame, centsRow: DataFrame): DataFrame =
     e.crossJoin(broadcast(centsRow))
       .select(col("vec_id"), expr(scaledD).as("ivd"),
@@ -277,7 +269,7 @@ object Round7Final {
         expect, srcbFor(n))
     } { (p, sb) =>
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-      val soft = pinned(s, softOf(e, centsRowOf(cb)))
+      val soft = pin(s, softOf(e, centsRowOf(cb)))
       writeEdges(withSb(topDeg(pairsOf(soft, soft)), sb), s"$p/edges")
       // crank 0 IS the hard assignment — persisted cell-partitioned for
       // the entry-point lookup, no serve-time corpus-wide assign pass,
@@ -315,7 +307,7 @@ object Round7Final {
   /** The IVF-probed entry points (min survivor per probed cell) over
     * the persisted hard assignments — beam-width-independent, so curve
     * gates (q234) compute them ONCE and sweep only the hop loop. Shared
-    * with the Round8Ops graph gates.
+    * with the GraphServe gates.
     */
   private[ops] def entriesOver(
       e: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame =
@@ -440,7 +432,7 @@ object Round7Final {
   /** Per-qid IVF-probed entry points over the persisted hard
     * assignments for a batch of query rows (vec_id, embedding): each
     * query's min survivor per probed cell — the batched entriesOver,
-    * shared by q239, q240 and the Round9Ops batched ADC serves.
+    * shared by q239, q240 and the GraphServe batched ADC serves.
     */
   private[ops] def entriesForBatch(
       batch: DataFrame, cb: DataFrame, hard: DataFrame): DataFrame = {
@@ -577,8 +569,6 @@ object Round7Final {
   }
 
   // ---------------- incremental graph ingest (q235) -------------------
-
-  private val P = 1000000007L // edge-set fingerprint modulus
 
   /** Order-independent (row count, fingerprint) of a (src, dst) edge
     * set — the q225/q227 ledger discipline applied to graph edges.
@@ -868,7 +858,7 @@ object Round7Final {
       // pinned: beamFrom re-collects its entries once per width — an
       // unpinned frame would re-run the probe-window/join/groupBy plan
       // 3x per query (the batched q239 path pins for the same reason)
-      val entriesC = pinned(s, entriesOver(eC, cbC, gHard))
+      val entriesC = pin(s, entriesOver(eC, cbC, gHard))
       BEAMS.map { b =>
         val visited = beamFrom(s, ivc, qdot, gEdges, entriesC, b, HOPS)
         val top = ivc.join(broadcast(visited), Seq("vec_id"))
@@ -924,7 +914,7 @@ object Round7Final {
       // entries) — one eager checkpoint beats re-running the
       // rank+explode scan per consumer (Bench's inter-query cleanup
       // unpersists the blocks)
-      val soft = pinned(s, softOf(e, centsRowOf(cb)))
+      val soft = pin(s, softOf(e, centsRowOf(cb)))
       val softB = soft.filter(col("vec_id") % 10 < 8)
       val softD = soft.filter(col("vec_id") % 10 >= 8)
       // ---- the persisted v1 artifact (base graph) ----
@@ -1164,7 +1154,7 @@ object Round7Final {
       // entries) — one eager checkpoint beats re-running the
       // rank+explode scan per consumer (Bench's inter-query cleanup
       // unpersists the blocks)
-      val soft = pinned(s, softOf(e, centsRowOf(cb)))
+      val soft = pin(s, softOf(e, centsRowOf(cb)))
       // ---- DELETE: tombstone ledger next to the graph artifact ----
       e.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
         .write.mode("overwrite").parquet(s"$root/tombstones")
@@ -1252,23 +1242,19 @@ object Round7Final {
       val (ivc, edges, hard) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
-      def pin(df: DataFrame): DataFrame = {
-        val cp = df.localCheckpoint(true)
-        s.createDataFrame(cp.rdd, cp.schema)
-      }
       // 8 rows, but broadcast-rebuilt per hop job across 3 widths —
       // pin once
-      val qb = pin(ivc.filter(col("vec_id") < QB)
+      val qb = pin(s, ivc.filter(col("vec_id") < QB)
         .select(col("vec_id").as("qid"), col("ivd").as("qiv")))
       // entry points are width-independent and re-collected per
       // width's hop loop — pin once
-      val entries = pin(entriesForBatch(e.filter(col("vec_id") < QB), cb,
-        hard))
+      val entries = pin(s,
+        entriesForBatch(e.filter(col("vec_id") < QB), cb, hard))
       // the per-query exact referee — ONE full scan windowed by qid,
       // shared by all three widths
       val wex = Window.partitionBy(col("qid"))
         .orderBy(col("ex").desc, col("vec_id").asc)
-      val topeb = pin(ivc.crossJoin(broadcast(qb))
+      val topeb = pin(s, ivc.crossJoin(broadcast(qb))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
           expr("CAST(array_dot(ivd, qiv) AS BIGINT)").as("ex"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -118,6 +119,41 @@ object Similarity {
       |WHERE CAST(len(list_intersect(a.sg, b.sg)) AS DOUBLE)
       |    / len(list_distinct(list_concat(a.sg, b.sg))) >= 0.8
       |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Corpus-scaling signature width: smallest w in [4, 24] with
+    * 2^w * 64 >= n, so the expected bucket population stays ~64 no
+    * matter the corpus size — the "derive the constants from N" the
+    * fixed 8-bit demo signature lacked. A 100 TB corpus (n ~ 1e10)
+    * lands at w = 24 (16.7M buckets).
+    */
+  private[ops] def sigBits(n: Long): Int = {
+    var w = 4
+    while (w < 24 && (64L << w) < n) w += 1
+    w
+  }
+
+  /** The same width formula as a pure integer SQL CASE chain (no
+    * floating log2 — engine-exact at every boundary).
+    */
+  private val duckSigBits: String =
+    "CASE " + (4 to 23).map(w => s"WHEN n <= ${64L << w} THEN $w")
+      .mkString(" ") + " ELSE 24 END"
+
+  /** One-row integer bucket-population stats for a (bucket, size) frame:
+    * item count, bucket count, max bucket, mean×100, max-bucket share in
+    * ppm, and skew×100 (= max/mean ×100) — the number that must stay flat
+    * as the corpus grows for the blocking path to be scale-safe.
+    */
+  private[ops] def bucketStats(path: String, buckets: DataFrame): DataFrame =
+    buckets.agg(
+      sum(col("bs")).as("n_items"),
+      count(lit(1)).as("n_buckets"),
+      max(col("bs")).as("max_bucket"))
+      .select(lit(path).as("path"), col("n_items"), col("n_buckets"),
+        col("max_bucket"),
+        expr("(n_items * 100) div n_buckets").as("mean_x100"),
+        expr("(max_bucket * 1000000) div n_items").as("max_share_ppm"),
+        expr("(max_bucket * 100 * n_buckets) div n_items").as("skew_x100"))
 
   val queries: Seq[Q] = Seq(
     // E7 baseline: exact top-10 neighbors of vec 0 across the corpus.
@@ -240,8 +276,7 @@ object Similarity {
       // materialize the signed frame ONCE: the candidate self-join
       // consumes it twice, and without this the shingle + minhash
       // computation runs twice (measured ~2x on the whole query)
-      val signedCp = model.transform(featured).localCheckpoint(true)
-      val signed = s.createDataFrame(signedCp.rdd, signedCp.schema)
+      val signed = pin(s, model.transform(featured))
       // Candidate join done MANUALLY on the (table, minhash) composite
       // key instead of model.approxSimilarityJoin: the MLlib join
       // explodes the same keys internally but then computes a hashed
@@ -392,8 +427,7 @@ object Similarity {
          |GROUP BY topk.query_id
          |ORDER BY topk.query_id""".stripMargin) { (s, dir) =>
       val sigs = withSig(s, Tables.table(s, dir, "embeddings"))
-      val cpS = sigs.localCheckpoint(true)
-      val sg = s.createDataFrame(cpS.rdd, cpS.schema)
+      val sg = pin(s, sigs)
       val q = sg.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
           col("sig").as("qsig"))
@@ -473,5 +507,44 @@ object Similarity {
             .as("maxsim"))
         .orderBy(col("maxsim").desc, col("vec_id"))
         .limit(8)
+    },
+
+    // E7 scale parameterization: the hyperplane signature with its
+    // width DERIVED from the corpus size (w = smallest in [4,24] with
+    // 2^w * 64 >= n) instead of the fixed 8 bits q52 demonstrates —
+    // per-probe candidate count stays ~64 = O(1) as the corpus grows,
+    // not O(corpus/256). Narrower signatures are prefixes of wider
+    // ones (same plane LCG), so re-widening as a corpus grows only
+    // splits buckets, never reshuffles them. Output is the q197-style
+    // bucket telemetry plus the chosen width, all exact integers.
+    Q(
+      "q201_scaled_sig_stats",
+      s"""WITH ww AS (
+         |  SELECT $duckSigBits AS w
+         |  FROM (SELECT COUNT(*) AS n FROM embeddings)),
+         |sg AS (
+         |  SELECT ${sigExprDuckW("embedding", "(SELECT w FROM ww)")}
+         |    AS sig
+         |  FROM embeddings),
+         |sb AS (SELECT sig, CAST(COUNT(*) AS BIGINT) AS bs
+         |  FROM sg GROUP BY sig)
+         |SELECT 'scaled_sig' AS path,
+         |  CAST((SELECT w FROM ww) AS BIGINT) AS sig_bits,
+         |  CAST(SUM(bs) AS BIGINT) AS n_items,
+         |  CAST(COUNT(*) AS BIGINT) AS n_buckets,
+         |  MAX(bs) AS max_bucket,
+         |  (CAST(SUM(bs) AS BIGINT) * 100) // COUNT(*) AS mean_x100,
+         |  (MAX(bs) * 1000000) // CAST(SUM(bs) AS BIGINT) AS max_share_ppm,
+         |  (MAX(bs) * 100 * COUNT(*)) // CAST(SUM(bs) AS BIGINT)
+         |    AS skew_x100
+         |FROM sb""".stripMargin) { (s, dir) =>
+      val e = Tables.table(s, dir, "embeddings")
+      val w = sigBits(e.count())
+      val sb = withSigW(s, e, w)
+        .groupBy(col("sig")).agg(count(lit(1)).as("bs"))
+      bucketStats("scaled_sig", sb)
+        .select(col("path"), lit(w.toLong).as("sig_bits"), col("n_items"),
+          col("n_buckets"), col("max_bucket"), col("mean_x100"),
+          col("max_share_ppm"), col("skew_x100"))
     })
 }

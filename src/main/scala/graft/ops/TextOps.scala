@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextHash
@@ -167,5 +168,105 @@ object TextOps {
           array_min(TextHash.tokenHashesPos(col("text")))
             .as("min_token_hash"))
         .orderBy(col("doc_id"))
+    },
+
+    // E8/E13: TRAINED language classifier — multinomial NB with add-one
+    // smoothing, trained on the doc_id%5!=0 split (labels = the lang
+    // column), evaluated on the %5==0 split as a confusion matrix.
+    // p(tok|lang) = (c(tok,lang)+1)/(tot_lang+V); score(doc,lang) =
+    // ln prior + Σ ln p(tok|lang); argmax ties break to the
+    // lexicographically first lang. Every ln is round(·,6) into
+    // DECIMAL(18,9) BEFORE the sum, so both engines rank identical exact
+    // decimals — no float-order drift can flip a near-tie argmax.
+    Q(
+      "q218_nb_lang_classifier",
+      """WITH train AS (
+        |  SELECT doc_id, lang, string_split(lower(text), ' ') AS t
+        |  FROM documents WHERE doc_id % 5 <> 0),
+        |test AS (
+        |  SELECT doc_id, lang, string_split(lower(text), ' ') AS t
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |ttok AS (SELECT lang, unnest(t) AS tok FROM train),
+        |cnt AS (
+        |  SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM ttok GROUP BY lang, tok),
+        |tot AS (
+        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM ttok GROUP BY lang),
+        |vocab AS (
+        |  SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vs FROM ttok),
+        |prior AS (
+        |  SELECT lang,
+        |    CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE) /
+        |      (SELECT COUNT(*) FROM train)), 6) AS DECIMAL(18,9)) AS plp
+        |  FROM train GROUP BY lang),
+        |stok AS (SELECT doc_id, unnest(t) AS tok FROM test),
+        |scored AS MATERIALIZED (
+        |  SELECT s.doc_id, o.lang,
+        |    CAST(ROUND(LN((COALESCE(c.c, 0) + 1.0) / (o.n + v.vs)), 6)
+        |      AS DECIMAL(18,9)) AS lp
+        |  FROM stok s
+        |  CROSS JOIN tot o
+        |  CROSS JOIN vocab v
+        |  LEFT JOIN cnt c ON c.lang = o.lang AND c.tok = s.tok),
+        |docscore AS (
+        |  SELECT sc.doc_id, sc.lang, p.plp + SUM(sc.lp) AS score
+        |  FROM scored sc JOIN prior p ON p.lang = sc.lang
+        |  GROUP BY sc.doc_id, sc.lang, p.plp),
+        |pred AS (
+        |  SELECT doc_id, lang AS pred_lang FROM (
+        |    SELECT doc_id, lang,
+        |      ROW_NUMBER() OVER (PARTITION BY doc_id
+        |        ORDER BY score DESC, lang ASC) AS rn
+        |    FROM docscore) WHERE rn = 1)
+        |SELECT t.lang, p.pred_lang, CAST(COUNT(*) AS BIGINT) AS n
+        |FROM test t JOIN pred p ON p.doc_id = t.doc_id
+        |GROUP BY t.lang, p.pred_lang
+        |ORDER BY t.lang, p.pred_lang""".stripMargin) { (s, dir) =>
+      val docs = Tables.table(s, dir, "documents")
+        .select(col("doc_id"), col("lang"),
+          split(lower(col("text")), " ").as("t"))
+      val train = docs.filter(col("doc_id") % 5 =!= 0)
+      val test = docs.filter(col("doc_id") % 5 === 0)
+      val ttok = train.select(col("lang"), explode(col("t")).as("tok"))
+      val cnt = ttok.groupBy(col("lang"), col("tok"))
+        .agg(count(lit(1)).as("c"))
+      val tot = ttok.groupBy(col("lang")).agg(count(lit(1)).as("n"))
+      val vocab = ttok.agg(count_distinct(col("tok")).as("vs"))
+      val nTrain = train.agg(count(lit(1)).as("ntr"))
+      val prior = train.groupBy(col("lang")).agg(count(lit(1)).as("nd"))
+        .crossJoin(broadcast(nTrain))
+        .select(col("lang"),
+          round(log(col("nd").cast("double") / col("ntr")), 6)
+            .cast("decimal(18,9)").as("plp"))
+      val stok = test.select(col("doc_id"), explode(col("t")).as("tok"))
+      // model tables are vocab-sized (Heaps-bounded) — broadcast them so
+      // scoring is a map stage over the test tokens, shuffling only the
+      // (doc_id, lang) partial sums
+      val scored = stok
+        .crossJoin(broadcast(tot.select(col("lang"), col("n"))))
+        .crossJoin(broadcast(vocab))
+        .join(broadcast(cnt), Seq("lang", "tok"), "left")
+        .select(col("doc_id"), col("lang"),
+          round(log((coalesce(col("c"), lit(0L)) + 1.0) /
+            (col("n") + col("vs"))), 6)
+            .cast("decimal(18,9)").as("lp"))
+      val docscore = scored
+        .groupBy(col("doc_id"), col("lang"))
+        .agg(sum(col("lp")).as("slp"))
+        .join(broadcast(prior), Seq("lang"))
+        .select(col("doc_id"), col("lang"),
+          (col("plp") + col("slp")).as("score"))
+      val pred = docscore
+        .withColumn("rn", row_number().over(Window
+          .partitionBy(col("doc_id"))
+          .orderBy(col("score").desc, col("lang").asc)))
+        .filter(col("rn") === 1)
+        .select(col("doc_id"), col("lang").as("pred_lang"))
+      test.select(col("doc_id"), col("lang"))
+        .join(pred, Seq("doc_id"))
+        .groupBy(col("lang"), col("pred_lang"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("lang"), col("pred_lang"))
     })
 }

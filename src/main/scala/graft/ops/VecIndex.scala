@@ -57,7 +57,12 @@ import org.apache.spark.sql.functions._
   */
 object VecIndex {
 
+  // the serving geometry every IVF gate shares (the coarse-cell count
+  // itself is corpus-derived: KMeans.servingK)
   private[ops] val CITERS = 2 // coarse Lloyd iterations (q74's geometry)
+  private[ops] val NPROBE = 2 // probed coarse cells per query
+  private[ops] val QN = 32 // query-batch size of the batched serves (q217)
+  private[ops] val P = 1000000007L // artifact fingerprint modulus
 
   /** Collision-resistant key for artifact roots derived from a data
     * dir: first 16 hex chars of SHA-256(dir). A 32-bit String.hashCode

@@ -679,7 +679,7 @@ class PlanAuditSpec extends AnyFunSuite {
     checkEnv()
     // like q240, the gate's returned frame is just the sink read; the
     // shapes that matter are the ADC-ranked micro-batch body's
-    val served = graft.ops.Round9Ops.q246ServeFrame(spark, dir)
+    val served = graft.ops.GraphServe.q246ServeFrame(spark, dir)
     val sp = served.queryExecution.executedPlan
     assert(sp.toString.contains("BroadcastExchange"),
       "q246: ADC serving frame lost its broadcast frontiers/codebooks")

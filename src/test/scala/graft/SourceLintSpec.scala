@@ -22,11 +22,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * `streaming/StreamOps.scala`. And it keeps the bridge's execute path
   * single: `Bridge.run` analyzes its SQL once and runs it only through
   * `Resident.answer`, the memo of prepared answers; and no catch in
-  * `exec/` drops the cause a failed ask reports.
+  * `exec/` drops the cause a failed ask reports. And it keeps the
+  * `Round*` files (named after the round that added them, not what they
+  * do) to a shrinking list: new code goes into modules named for their
+  * domain.
   */
 class SourceLintSpec extends AnyFunSuite {
 
   private val mainDir = new java.io.File("src/main/scala/graft")
+  private val testDir = new java.io.File("src/test/scala/graft")
 
   private def scalaFiles(d: java.io.File): Seq[java.io.File] = {
     val kids = Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
@@ -161,5 +165,36 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"a catch that drops its cause at: ${bad.mkString(", ")}" +
       " — bind the exception and carry it (Bridge.Failure's cause)")
+  }
+
+  test("Round* sources are only the listed, shrinking set") {
+    assume(mainDir.isDirectory && testDir.isDirectory,
+      s"source dirs $mainDir / $testDir absent — skipping")
+    def rounds(d: java.io.File): Set[String] =
+      scalaFiles(d).map(_.getName.stripSuffix(".scala"))
+        .filter(_.startsWith("Round")).toSet
+    val mainRounds = Set(
+      "Round10Final", "Round10More", "Round10Ops", "Round11Extra",
+      "Round11Final", "Round11More", "Round11Ops", "Round11Pipeline",
+      "Round12Extra", "Round12Final", "Round12More", "Round12Ops",
+      "Round12Release", "Round12Serve", "Round12State", "Round13Ops",
+      "Round14Ops", "Round15Ops", "Round3Ops", "Round4Final", "Round4More",
+      "Round4Ops", "Round5Final", "Round5More", "Round7Final",
+      "Round7Pipeline")
+    val testRounds = Set(
+      "Round10Spec", "Round11ExtraSpec", "Round11FinalSpec",
+      "Round11MoreSpec", "Round11OpsSpec", "Round11PipelineSpec",
+      "Round12FinalSpec", "Round12MoreSpec", "Round12OpsSpec",
+      "Round12ServeSpec", "Round12StateSpec", "Round13OpsSpec",
+      "Round14OpsSpec", "Round15OpsSpec", "Round4FinalSpec", "Round4MoreSpec",
+      "Round4OpsSpec", "Round5FinalSpec", "Round5MoreSpec", "Round7FinalSpec",
+      "Round7MoreSpec", "Round7PipelineSpec")
+    val (m, t) = (rounds(mainDir), rounds(testDir))
+    assert(m == mainRounds && t == testRounds,
+      s"Round* files off the list: main +${(m -- mainRounds).toSeq.sorted}" +
+        s" -${(mainRounds -- m).toSeq.sorted}, test" +
+        s" +${(t -- testRounds).toSeq.sorted} -${(testRounds -- t).toSeq.sorted}" +
+        " — put new gates in a module named for what it does; when a" +
+        " Round* file is retired, drop it from this list")
   }
 }

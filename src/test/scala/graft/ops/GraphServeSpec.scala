@@ -3,14 +3,16 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-8 invariants beyond the DuckDB hash compare: the HNSW+PQ
-  * serve (q241) must rank hops by stored-code ADC yet still agree with
-  * an independently computed exact brute force on its referee columns,
-  * and its result must be a well-formed top-10.
+/** Graph-serve invariants beyond the DuckDB hash compare: the HNSW+PQ
+  * serve ranks hops by stored-code ADC yet agrees with an independent
+  * exact brute force on its referee columns and returns a well-formed,
+  * deterministic top-10; the filtered graph serve honors its predicate;
+  * both rank-mode curves respect their visited bounds; the streamed
+  * serve is a well-formed split-invariant per-query top-10.
   */
-class Round8OpsSpec extends AnyFunSuite {
+class GraphServeSpec extends AnyFunSuite {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = graft.TestData.sf0001
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,7 +22,8 @@ class Round8OpsSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def available: Boolean =
-    new java.io.File(dir, "documents.parquet").exists()
+    new java.io.File(dir, "documents.parquet").exists() &&
+      new java.io.File(dir, "embeddings.parquet").exists()
 
   test("q241: full top-10, exact-descending order, distinct ids, and " +
     "in_exact flags that agree with an independent brute force") {
@@ -104,28 +107,48 @@ class Round8OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("q244: the pointer names generation 2 after an atomic flip " +
-    "(no temp file left behind), v1 is the smaller generation, and a " +
-    "re-run serves identically") {
+  test("q246: per-query ADC-served top-10s — 8 queries, dense ranks, " +
+    "no self-serves, deterministic across executions") {
     assume(available, s"$dir absent — skipping")
-    val a = graft.SparkEntry
-      .queries("q244_index_generation_swap")(spark, dir).collect()
-    val proot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_idxptr_${graft.ops.VecIndex.dirDigest(dir)}")
-    val ptr = java.nio.file.Files.readString(
-      proot.resolve("current.json"))
-    assert(ptr.contains("\"gen\":2"), s"pointer not at gen 2: $ptr")
-    // the flip goes through a UNIQUE temp file — none may survive it
-    val leftover = java.nio.file.Files.list(proot).toArray
-      .map(_.toString).filter(_.endsWith(".tmp"))
-    assert(leftover.isEmpty,
-      s"atomic flip left temp files behind: ${leftover.mkString(",")}")
-    a.foreach { r =>
-      assert(r.getLong(4) == 2L, "served generation must be 2")
-      assert(r.getLong(5) < r.getLong(6), "v1 must be smaller than v2")
+    val rows = graft.SparkEntry
+      .queries("q246_stream_graph_pq_serve")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val byQ = rows.groupBy(_._1)
+    assert(byQ.keySet == (0L until Round7Final.QB).toSet,
+      s"expected all ${Round7Final.QB} query ids, got ${byQ.keySet}")
+    byQ.foreach { case (qid, rs) =>
+      assert(rs.length == 10, s"qid $qid: expected a full top-10")
+      assert(rs.map(_._2).sorted.toSeq == (1L to 10L),
+        s"qid $qid: ranks must be dense 1..10")
+      assert(!rs.exists(_._3 == qid),
+        s"qid $qid: the query must never serve itself")
+      // ranks follow exact score desc, id asc
+      val inOrder = rs.sortBy(_._2)
+      assert(inOrder.sliding(2).forall { case Array(a, b) =>
+        a._4 > b._4 || (a._4 == b._4 && a._3 < b._3)
+      }, s"qid $qid: rank order violates (exact desc, vec_id asc)")
     }
-    val b = graft.SparkEntry
-      .queries("q244_index_generation_swap")(spark, dir).collect()
-    assert(a.toSeq == b.toSeq, "re-run diverged after the swap")
+    val again = graft.SparkEntry
+      .queries("q246_stream_graph_pq_serve")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(rows.toSeq == again.toSeq, "streaming re-run diverged")
+  }
+
+  test("q247: exactly the two ranking modes, batch visited sets " +
+    "bounded by QB*(NPROBE + HOPS*BEAM*DEG), recall counted in 1/80 " +
+    "steps out of the per-query brute-force top-10s") {
+    assume(available, s"$dir absent — skipping")
+    val rows = graft.SparkEntry
+      .queries("q247_batch_rank_mode_curve")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3)))
+    assert(rows.map(_._1).toSeq == Seq("adc", "exact"))
+    val slots = Round7Final.QB * 10
+    val bound = Round7Final.QB * (2 + 3 * 4 * 6)
+    rows.foreach { case (mode, nv, nh, rec) =>
+      assert(nv > 0 && nv <= bound, s"$mode visited $nv out of bounds")
+      assert(nh >= 0 && nh <= slots, s"$mode n_hit $nh out of range")
+      assert(rec == nh.toDouble / slots, s"$mode recall != n_hit/$slots")
+    }
   }
 }

@@ -71,7 +71,7 @@ class Round11FinalSpec extends AnyFunSuite {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     assert(rows.map(_.getLong(1)).sum == e.count(),
       "every vector is assigned to exactly one cell")
-    assert(rows.length == Round5Ops.scaledK(e.count()),
+    assert(rows.length == KMeans.scaledK(e.count()),
       "one row per serving-codebook cell")
     rows.foreach { r =>
       val (n, intra6, sep12, margin) =

@@ -105,11 +105,11 @@ class Round15OpsSpec extends AnyFunSuite {
       s"$dir absent — skipping")
     graft.SparkEntry.queries("q249_codes_artifact_compaction")(spark, dir)
       .collect()
-    val before = Round9More.fragMemo.builds
-    Round9More.fragMemo.drop()
+    val before = IndexLifecycle.fragMemo.builds
+    IndexLifecycle.fragMemo.drop()
     val rows = graft.SparkEntry
       .queries("q249_codes_artifact_compaction")(spark, dir).collect()
-    assert(Round9More.fragMemo.builds == before,
+    assert(IndexLifecycle.fragMemo.builds == before,
       "fresh-marker run re-fragmented the codes artifact")
     // the content-identity proof still holds against the pinned set
     rows.foreach { r =>
@@ -121,10 +121,10 @@ class Round15OpsSpec extends AnyFunSuite {
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
       s"graft_idxfrag_${VecIndex.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Round9More.fragMemo.drop()
+    IndexLifecycle.fragMemo.drop()
     graft.SparkEntry.queries("q249_codes_artifact_compaction")(spark, dir)
       .collect()
-    assert(Round9More.fragMemo.builds == before + 1,
+    assert(IndexLifecycle.fragMemo.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 }

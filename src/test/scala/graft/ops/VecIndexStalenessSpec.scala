@@ -114,21 +114,21 @@ class VecIndexStalenessSpec extends AnyFunSuite {
     try {
       val rows = spark.range(20)
         .select(col("id").as("src"), (col("id") * 7 % 20).as("dst"))
-      def codes() = Round7Ops.persistedCodes(spark, root,
+      def codes() = IndexLifecycle.persistedCodes(spark, root,
           "codes_ref_union", "m1")(rows)
         .orderBy("src").collect().toSeq
       def edges() = Round7Final.persistedEdges(spark, root,
           "edges_full", "m1", 4L)(rows)
         .select("src", "dst").orderBy("src").collect().toSeq
       val (c1, e1) = (codes(), edges())
-      val (rc, re) = (Round7Ops.referees.builds, Round7Final.referees.builds)
+      val (rc, re) = (IndexLifecycle.referees.builds, Round7Final.referees.builds)
       assert(codes() == c1 && edges() == e1)
-      assert(Round7Ops.referees.builds == rc &&
+      assert(IndexLifecycle.referees.builds == rc &&
         Round7Final.referees.builds == re, "an intact referee was rebuilt")
       ArtifactStore.deleteRecursive(root)
       assert(codes() == c1, "rebuilt referee codes differ")
       assert(edges() == e1, "rebuilt referee edges differ")
-      assert(Round7Ops.referees.builds == rc + 1 &&
+      assert(IndexLifecycle.referees.builds == rc + 1 &&
         Round7Final.referees.builds == re + 1,
         "a deleted referee root was not rebuilt exactly once")
     } finally ArtifactStore.deleteRecursive(root)

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * that path, so the breakage was only visible in driver artifacts.
   * This spec runs one watermark aggregation (q55) and one stream-stream
   * join (q115) end-to-end on sf0.001, plus asserts the load-time
-  * normalization invariant they depend on.
+  * normalization invariant they depend on, and holds the stateful
+  * pipeline (q199) above a throughput floor.
   */
 class StreamingSmokeSpec extends AnyFunSuite {
 
@@ -24,6 +25,9 @@ class StreamingSmokeSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  private def available: Boolean =
+    new java.io.File(dir, "events.parquet").exists()
 
   test("events.ts loads as session-zoned TIMESTAMP whatever the parquet layout") {
     val events = graft.Tables.table(spark, dir, "events")
@@ -39,5 +43,22 @@ class StreamingSmokeSpec extends AnyFunSuite {
   test("q115 stream-stream join runs on the shipped events layout") {
     val df = graft.SparkEntry.queries("q115_stream_stream_join")(spark, dir)
     assert(df.count() > 0)
+  }
+
+  test("q199: stateful-streaming throughput stays above the floor") {
+    assume(available, s"$dir absent — skipping")
+    val events = graft.Tables.table(spark, dir, "events").count()
+    val t0 = System.nanoTime()
+    val r = graft.SparkEntry.queries("q199_stream_throughput")(spark, dir)
+      .collect().head
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(r.getLong(1) == events, "pipeline dropped events")
+    // non-regression floor, deliberately generous (sf0.001 wall time is
+    // dominated by micro-batch bootstrap): catches a 100x throughput
+    // regression (e.g. state store thrash, per-row commit), never flakes
+    // on scheduler noise. SCALE.md records the real rows/s at sf1.
+    val rowsPerSec = events / sec
+    assert(rowsPerSec > 25,
+      f"transformWithState throughput $rowsPerSec%.0f rows/s < 25 floor")
   }
 }
